@@ -343,9 +343,11 @@ def segmented_features(t, m, e, starts, features):
                 fmed = _seg_median(fsorted, lens, starts)
                 fmax = _seg_max(f, starts)
                 fmin = _seg_min(f, starts)
-                out["percent_amplitude"] = np.maximum(
-                    np.abs((fmax - fmed) / fmed), np.abs((fmed - fmin) / fmed)
-                )
+                hi = np.abs((fmax - fmed) / fmed)
+                lo = np.abs((fmed - fmin) / fmed)
+                # Python max(hi, lo), as the registry: NaN only wins when
+                # it comes first (np.maximum propagates either NaN)
+                out["percent_amplitude"] = np.where(lo > hi, lo, hi)
             p95 = _seg_quantile(fsorted, lens, starts, 0.95)
             p5 = _seg_quantile(fsorted, lens, starts, 0.05)
             if need("percent_difference_flux_percentile"):

@@ -125,6 +125,7 @@ def make_batch_kernel(
     custom_functions: Mapping[str, Callable] | None = None,
     raise_exceptions: bool = False,
     const_e: float | None = None,
+    windows: Mapping[str, str] | None = None,
 ) -> Callable:
     """Build the mapInPandas function: processes MANY groups per Arrow
     batch (Spark's grouped-map dispatch costs ~15 ms *per group*, which is
@@ -132,10 +133,17 @@ def make_batch_kernel(
     ~nothing).
 
     Contract: the input iterator covers one partition whose rows are
-    (a) hash-partitioned by the full group key and (b) sorted by
+    (a) hash-partitioned by the full ``key_cols`` and (b) sorted by
     (key_cols..., t, _ord) — i.e. groups are contiguous and internally
     time-ordered. A group can span Arrow batch boundaries; the trailing
     (possibly incomplete) group of each batch is carried into the next.
+
+    windows : nested group keys, ``{tag: column}``. None is the one-level
+        case: one output row per ``key_cols`` group, as
+        ``key_cols + features``. Otherwise each level groups the rows by
+        ``(key_cols[0], column)`` — windows nested inside the ``key_cols``
+        group, so one sorted pass serves every level — and emits
+        ``(tier=tag, key_cols[0], window_start=column, features...)``.
     """
     from .features.fastpath import FAST_FEATS, segmented_features
 
@@ -145,25 +153,21 @@ def make_batch_kernel(
     # rest (iterative/model-based) fall back to the per-group registry
     fast = [f for f in features if f in FAST_FEATS] if not custom_functions else []
     slow = [f for f in features if f not in set(fast)]
+    # (constant output columns, group columns, their output names)
+    if windows is None:
+        levels = [({}, keys, keys)]
+    else:
+        levels = [({"tier": tag}, [keys[0], col], [keys[0], "window_start"])
+                  for tag, col in windows.items()]
 
-    def _emit(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        starts = group_starts(pdf, keys)
-        ends = np.append(starts[1:], n)
-        t = pdf["t"].to_numpy(dtype=np.float64)
-        m = pdf["m"].to_numpy(dtype=np.float64)
-        # constant default error: synthesized here instead of shuffled
-        # as a per-row column (guide §2.3: shuffle fewer bytes — this
-        # drops 8 bytes/row from the kernel's one exchange)
-        e = (np.full(n, const_e, dtype=np.float64)
-             if const_e is not None else pdf["e"].to_numpy(dtype=np.float64))
-        out_keys = {k: pdf[k].to_numpy()[starts] for k in keys}
-        out_feats: dict[str, np.ndarray] = {}
+    def _features(t, m, e, starts) -> dict[str, np.ndarray]:
+        out: dict[str, np.ndarray] = {}
         if fast:
-            out_feats.update(segmented_features(t, m, e, starts, fast))
+            out.update(segmented_features(t, m, e, starts, fast))
         if slow:
             for f in slow:
-                out_feats[f] = np.empty(len(starts))
+                out[f] = np.empty(len(starts))
+            ends = np.append(starts[1:], len(t))
             for gi, (s, z) in enumerate(zip(starts, ends)):
                 vals = compute_features(
                     t[s:z], m[s:z], e[s:z], slow,
@@ -171,38 +175,32 @@ def make_batch_kernel(
                     raise_exceptions=raise_exceptions,
                 )
                 for f in slow:
-                    out_feats[f][gi] = vals[f]
-        return pd.DataFrame({**out_keys, **{f: out_feats[f] for f in features}})
+                    out[f][gi] = vals[f]
+        return out
+
+    def _emit(pdf: pd.DataFrame) -> pd.DataFrame:
+        n = len(pdf)
+        t = pdf["t"].to_numpy(dtype=np.float64)
+        m = pdf["m"].to_numpy(dtype=np.float64)
+        # constant default error: synthesized here instead of shuffled
+        # as a per-row column (guide §2.3: shuffle fewer bytes — this
+        # drops 8 bytes/row from the kernel's one exchange)
+        e = (np.full(n, const_e, dtype=np.float64)
+             if const_e is not None else pdf["e"].to_numpy(dtype=np.float64))
+        frames = []
+        for const, group, names in levels:
+            starts = group_starts(pdf, group)
+            vals = _features(t, m, e, starts)
+            frames.append(pd.DataFrame({
+                **const,
+                **{name: pdf[k].to_numpy()[starts] for name, k in zip(names, group)},
+                **{f: vals[f] for f in features},
+            }))
+        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
 
     def _mapper(batches):
         for body in iter_group_frames(batches, keys):
             yield _emit(body)
-
-    return _mapper
-
-
-def make_partition_kernel(
-    features: Sequence[str],
-    key_cols: Sequence[str],
-    custom_functions: Mapping[str, Callable] | None = None,
-    raise_exceptions: bool = False,
-    const_e: float | None = None,
-) -> Callable:
-    """mapInPandas function for hash-partitioned-but-unsorted input: the
-    whole partition is concatenated once, stably sorted by (keys, t, _ord)
-    in pandas, and evaluated through the same batched group kernel."""
-    batch_kernel = make_batch_kernel(
-        features, key_cols, custom_functions, raise_exceptions, const_e
-    )
-    keys = list(key_cols)
-
-    def _mapper(batches):
-        frames = [pdf for pdf in batches if len(pdf)]
-        if not frames:
-            return
-        pdf = frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
-        pdf = pdf.sort_values([*keys, "t", "_ord"], kind="stable", ignore_index=True)
-        yield from batch_kernel(iter([pdf]))
 
     return _mapper
 
@@ -247,6 +245,42 @@ def featurize(
         dispatch overhead — only sensible for few, large groups).
     """
     features = list(features)
+    cols, const_e = kernel_columns(key_col, ts_col, tiebreak_col, m, e, t,
+                                   time_unit_seconds)
+    key_cols = [key_col]
+    if window is not None:
+        cols.append(F.window(F.col(ts_col), window).start.alias("window_start"))
+        key_cols = [key_col, "window_start"]
+
+    narrow = df.select(*cols)
+
+    out_fields = [narrow.schema[k] for k in key_cols]
+    out_fields += [StructField(name, DoubleType(), True) for name in features]
+    schema = StructType(out_fields)
+
+    if strategy == "grouped":
+        kernel = make_kernel(features, key_cols, custom_functions,
+                             raise_exceptions, const_e)
+        return narrow.groupBy(*key_cols).applyInPandas(kernel, schema=schema)
+
+    # default "batched": whole-batch numpy evaluation, no per-group dispatch
+    mapper = make_batch_kernel(features, key_cols, custom_functions,
+                               raise_exceptions, const_e)
+    return map_sorted_groups(narrow, key_cols, mapper, schema, num_partitions)
+
+
+def kernel_columns(
+    key_col: str,
+    ts_col: str,
+    tiebreak_col: str,
+    m: Column | str | None = None,
+    e: Column | str | None = None,
+    t: Column | str | None = None,
+    time_unit_seconds: float = SECONDS_PER_DAY,
+) -> tuple[list[Column], float | None]:
+    """The kernel's narrow input projection ``(key, t, m, [e], _ord)``
+    (see `featurize` for the defaults), and the constant per-point error
+    the kernel synthesizes when `e` is not given (else None)."""
     m_col = F.col(m) if isinstance(m, str) else m
     if m_col is None:
         m_col = F.length(F.col("text")).cast("double")
@@ -260,7 +294,6 @@ def featurize(
         # integer microseconds -> double -> one division: bit-deterministic
         # (us < 2^52 is exactly representable in float64)
         t_col = ts_micros(F.col(ts_col)).cast("double") / F.lit(time_unit_seconds * 1e6)
-
     cols = [
         F.col(key_col),
         t_col.alias("t"),
@@ -268,43 +301,20 @@ def featurize(
         *([] if const_e is not None else [e_col.alias("e")]),
         F.col(tiebreak_col).cast("long").alias("_ord"),
     ]
-    key_cols = [key_col]
-    if window is not None:
-        cols.append(F.window(F.col(ts_col), window).start.alias("window_start"))
-        key_cols = [key_col, "window_start"]
+    return cols, const_e
 
-    narrow = df.select(*cols)
 
-    key_fields = [narrow.schema[k] for k in [key_col]]
-    out_fields = list(key_fields)
-    if window is not None:
-        out_fields.append(narrow.schema["window_start"])
-    out_fields += [StructField(name, DoubleType(), True) for name in features]
-    schema = StructType(out_fields)
-
-    if strategy == "grouped":
-        kernel = make_kernel(features, key_cols, custom_functions,
-                             raise_exceptions, const_e)
-        return narrow.groupBy(*key_cols).applyInPandas(kernel, schema=schema)
-
+def map_sorted_groups(
+    narrow: DataFrame,
+    key_cols: Sequence[str],
+    mapper: Callable,
+    schema: StructType,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Run a `make_batch_kernel` mapper: one shuffle on `key_cols` plus a
+    JVM in-partition secondary sort on (key_cols..., t, _ord), then
+    mapInPandas. `num_partitions` defaults to spark.sql.shuffle.partitions."""
     npart = num_partitions or narrow.sparkSession.conf.get("spark.sql.shuffle.partitions")
-
-    if strategy == "batched-pysort":
-        # shuffle on the group key only; each Python task materializes its
-        # partition once and sorts in pandas. Measured SLOWER than the JVM
-        # secondary sort (object-dtype string keys sort poorly in pandas:
-        # 23.0s vs 16.9s at 32 cores / 25M rows) — kept for reference.
-        mapper = make_partition_kernel(
-            features, key_cols, custom_functions, raise_exceptions, const_e
-        )
-        arranged = narrow.repartition(int(npart), *key_cols)
-        return arranged.mapInPandas(mapper, schema=schema)
-
-    # default "batched": one shuffle on the group key + JVM in-partition
-    # secondary sort, then whole-batch numpy evaluation (no per-group
-    # dispatch)
-    mapper = make_batch_kernel(features, key_cols, custom_functions,
-                               raise_exceptions, const_e)
     arranged = narrow.repartition(int(npart), *key_cols).sortWithinPartitions(
         *key_cols, "t", "_ord"
     )

@@ -8,7 +8,7 @@ Two physical strategies, chosen per feature set:
    applyInPandas per (series, window). Needed for order-sensitive /
    non-mergeable features (median, MAD, percentiles, stetson, peaks...).
    Window bounds group size, so even a hot conversation's 1m window fits
-   one task.
+   one task. ``rollup_tiers`` computes several tiers in one such pass.
 
 2. ``rollup_sql`` — whole-stage-codegen JVM aggregation for the features
    expressible as exact built-in aggs (count/mean/min/max/stddev_pop/...).
@@ -27,10 +27,17 @@ from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-from ..kernel import SECONDS_PER_DAY, featurize, ts_micros
+from ..kernel import (
+    SECONDS_PER_DAY, featurize, kernel_columns, make_batch_kernel,
+    map_sorted_groups, ts_micros,
+)
 
 TIERS = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
+_UNIT_MICROS = {"second": 10**6, "minute": 60 * 10**6, "hour": 3600 * 10**6,
+                "day": 86400 * 10**6}
+DAY_MICROS = _UNIT_MICROS["day"]
 
 # features whose partial states merge exactly (see aggstate.py); everything
 # else requires windowed raw data (bounded by the tier window).
@@ -41,7 +48,7 @@ MERGEABLE_FEATS = {
 }
 
 __all__ = ["TIERS", "MERGEABLE_FEATS", "rollup_kernel", "rollup_sql",
-           "rollup_all_tiers", "rollup_hop", "rollup_grouping_sets"]
+           "rollup_tiers", "tier_micros", "rollup_hop", "rollup_grouping_sets"]
 
 
 def rollup_kernel(
@@ -101,15 +108,75 @@ def rollup_sql(
     )
 
 
-def rollup_all_tiers(
+def tier_micros(tier: str) -> int:
+    """Width of a tier's tumbling window in microseconds (`tier` is a
+    TIERS name or a window string such as "15 minutes").
+
+    Raises ValueError unless the width divides a day: only then does every
+    window nest in one UTC day, which the day-bucket units of
+    ``jobs.run_rollup`` and the one-pass `rollup_tiers` both rely on.
+    """
+    window = TIERS.get(tier, tier)
+    try:
+        n, unit = window.split()
+        width = int(n) * _UNIT_MICROS[unit.lower().rstrip("s")]
+    except (ValueError, KeyError):
+        raise ValueError(f"cannot parse tier window {window!r}") from None
+    if width <= 0 or DAY_MICROS % width:
+        raise ValueError(
+            f"tier window {window!r} does not divide 24 hours, so its windows "
+            "would cross midnight")
+    return width
+
+
+def rollup_tiers(
     df: DataFrame,
     features: Sequence[str],
     tiers: Sequence[str] = ("1m", "1h", "1d"),
-    **kwargs,
-) -> dict[str, DataFrame]:
-    """Materialize every retention tier. Callers persist the input once
-    (``df.cache()`` or a first-tier write) so the scan isn't repeated."""
-    return {t: rollup_kernel(df, features, t, **kwargs) for t in tiers}
+    key_col: str = "conv_id",
+    ts_col: str = "ts",
+    tiebreak_col: str = "turn_idx",
+    m: Column | str | None = None,
+    e: Column | str | None = None,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Every tier in ONE pass: output ``(tier, key, window_start,
+    features...)`` where the rows of tier t equal ``rollup_kernel(df,
+    features, t)``.
+
+    Each tier's window nests in a (series, UTC day), so the rows are
+    shuffled once on (key, day), sorted by (key, day, t, tiebreak) in the
+    JVM, and one mapInPandas segments each frame by every tier's window
+    start (the nested levels of `make_batch_kernel`). Window starts are
+    derived in one projection with the epoch-aligned arithmetic of
+    ``F.window`` (start = ts - pmod(ts, width), rows with NULL ts
+    dropped), since Spark plans only one ``F.window`` per projection.
+    """
+    features = list(features)
+    windows = {tier: f"_w{i}" for i, tier in enumerate(tiers)}
+    cols, const_e = kernel_columns(key_col, ts_col, tiebreak_col, m, e)
+    in_schema = df.schema
+    ts_type = in_schema[ts_col].dataType
+    us = ts_micros(F.col(ts_col))
+
+    def start(width: int) -> Column:
+        return us - F.pmod(us, F.lit(width))
+
+    narrow = df.filter(F.col(ts_col).isNotNull()).select(
+        *cols,
+        start(DAY_MICROS).alias("_day"),
+        *[F.timestamp_micros(start(tier_micros(t))).cast(ts_type).alias(c)
+          for t, c in windows.items()],
+    )
+    schema = StructType([
+        StructField("tier", StringType(), False),
+        in_schema[key_col],
+        StructField("window_start", ts_type, True),
+        *[StructField(f, DoubleType(), True) for f in features],
+    ])
+    keys = [key_col, "_day"]
+    mapper = make_batch_kernel(features, keys, const_e=const_e, windows=windows)
+    return map_sorted_groups(narrow, keys, mapper, schema, num_partitions)
 
 
 def rollup_hop(

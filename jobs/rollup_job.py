@@ -6,10 +6,13 @@ Usage:
       jobs/rollup_job.py --input <parquet> --output <dir> \
       [--tiers 1m,1h,1d] [--features f1,f2,...] [--bucket-days 7] [--resume]
 
-Reads the transcript table, runs the tier rollups (kernel featurization)
-in per-(tier, day-bucket) committed units (see cesium_spark.jobs), writes
-one parquet dir per unit plus the lineage/metrics log enabling exact
-resume mid-tier.
+Reads the transcript table and runs the tier rollups (kernel
+featurization) one day-bucket at a time: one pass computes every due tier
+of the bucket and writes one parquet dir per (tier, bucket) unit,
+``<output>/tier=<t>/bucket=<yyyymmdd>/``. Each unit is then committed on
+its own in the lineage/metrics log, which makes resume exact: it redoes
+only the stale units (see cesium_spark.jobs). Every tier must divide 24
+hours.
 """
 
 from __future__ import annotations

@@ -242,6 +242,22 @@ def test_segmented_all_singletons():
     npt.assert_allclose(res["n_epochs"], 1.0)
 
 
+def test_segmented_percent_amplitude_underflowed_median():
+    """Text lengths near 1000 underflow the linearized flux 10**(-0.4 m):
+    with a zero median one ratio is inf and the other NaN, and the fast
+    path must pick like the registry's Python max (inf), not NaN."""
+    from cesium_spark.features.fastpath import segmented_features
+
+    t = np.array([0, .1, .2, .2, .3, .5, .55])
+    m = np.array([900, 700, 1000, 950, 980, 990, 1200], dtype=float)
+    e = np.full(len(t), 1e-4)
+    want = compute_features(t, m, e, ["percent_amplitude"])["percent_amplitude"]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        got = segmented_features(t, m, e, np.array([0]), ["percent_amplitude"])
+    assert want == math.inf
+    assert got["percent_amplitude"][0] == want
+
+
 def test_period_fast_constant_series_returns_nan():
     """Review finding: zero-variance input (YY=0 -> all-NaN power) must
     surface as NaN like the registry's error policy, not a TypeError."""

@@ -214,6 +214,90 @@ def test_run_rollup_units_and_resume(spark, transcripts, tmp_path):
     pd.testing.assert_frame_equal(a, b)
 
 
+def _sorted_pdf(sdf):
+    return sdf.toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_run_rollup_one_pass_equals_per_tier_kernel(spark, tmp_path, ts_type):
+    """The one-pass bucket rollup writes, for every tier, exactly what
+    rollup_kernel computes for that tier alone: same windows, values and
+    schema, a feature outside the segmented fast path included, for
+    TIMESTAMP and TIMESTAMP_NTZ event times."""
+    from cesium_spark.features.fastpath import FAST_FEATS
+    from cesium_spark.jobs import run_rollup
+
+    feats = ["n_epochs", "mean", "median", "stetson_j", "anderson_darling"]
+    assert "anderson_darling" not in FAST_FEATS
+    tiers = ("1m", "1h", "1d", "15 minutes")
+    df = generate_transcripts(spark, n_convs=8, seed=5, max_turns=400) \
+        .withColumn("ts", F.col("ts").cast(ts_type))
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    df.write.parquet(inp)
+    units = run_rollup(spark, inp, out, tiers=tiers, features=feats,
+                       bucket_days=3, verbose=False)
+    assert len({u["unit"] for u in units}) == len(units) > len(tiers)
+
+    src = spark.read.parquet(inp)
+    for tier in tiers:
+        got = spark.read.parquet(f"{out}/tier={tier}").drop("bucket")
+        want = rollup_kernel(src, feats, tier)
+        assert [(f.name, f.dataType) for f in got.schema] == \
+            [(f.name, f.dataType) for f in want.schema]
+        assert dict(got.dtypes)["window_start"] == ts_type
+        pd.testing.assert_frame_equal(_sorted_pdf(got), _sorted_pdf(want))
+        windows = sum(u["windows_out"] for u in units if u["unit"].startswith(f"tier-{tier}-"))
+        assert windows == got.count()
+
+
+def test_run_rollup_resume_recomputes_only_the_stale_tier(spark, transcripts, tmp_path):
+    """With one tier's lineage entry deleted, resume recomputes that one
+    unit in its bucket pass; the other tiers' files are not rewritten."""
+    import hashlib
+    import os
+
+    from cesium_spark.jobs import run_rollup
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    transcripts.write.parquet(inp)
+    kw = dict(tiers=("1m", "1h", "1d"), features=["n_epochs", "median"],
+              bucket_days=3, verbose=False)
+    first = run_rollup(spark, inp, out, **kw)
+    victim = next(u["unit"] for u in first if u["unit"].startswith("tier-1h-"))
+
+    def files(tier):
+        root = os.path.join(out, f"tier={tier}")
+        return {
+            os.path.relpath(os.path.join(d, f), root):
+                hashlib.sha256(open(os.path.join(d, f), "rb").read()).hexdigest()
+            for d, _, fs in os.walk(root) for f in fs
+        }
+
+    kept = {t: files(t) for t in ("1m", "1d")}
+    before = _sorted_pdf(spark.read.parquet(f"{out}/tier=1h"))
+    os.remove(os.path.join(out, "_lineage", f"{victim}.json"))
+    resumed = run_rollup(spark, inp, out, resume=True, **kw)
+    assert [u["unit"] for u in resumed if not u["skipped"]] == [victim]
+    assert [u["unit"] for u in resumed] == [u["unit"] for u in first]
+    assert {t: files(t) for t in ("1m", "1d")} == kept
+    pd.testing.assert_frame_equal(_sorted_pdf(spark.read.parquet(f"{out}/tier=1h")), before)
+
+
+def test_run_rollup_rejects_window_crossing_midnight(spark, tmp_path):
+    """A tier window that does not divide 24 h ("7 minutes": 1440/7) has
+    windows spanning two days; run_rollup refuses it before any work."""
+    import os
+
+    from cesium_spark.jobs import run_rollup
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    spark.createDataFrame(_retention_fixture_rows([0])).write.parquet(inp)
+    with pytest.raises(ValueError, match="divide 24 hours"):
+        run_rollup(spark, inp, out, tiers=("1h", "7 minutes"),
+                   features=["n_epochs"], verbose=False)
+    assert not os.path.exists(out)
+
+
 def test_retention_drops_only_committed_old_days(spark, tmp_path):
     """Retention: raw days older than the horizon are dropped only when
     every tier committed their rollup; time travel still sees them."""

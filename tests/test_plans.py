@@ -33,6 +33,23 @@ def test_featurize_single_exchange(spark, tiny):
     assert "MapInPandas" in plan
 
 
+def test_bucket_rollup_one_exchange_one_python_pass(spark, tiny):
+    """The rollup job's bucket pass: every tier from ONE exchange and ONE
+    MapInPandas, over a scan that prunes on the bucket's ts range."""
+    import datetime as dt
+
+    from cesium_spark.jobs import bucket_rollup
+
+    days = [dt.datetime(2025, 1, 1), dt.datetime(2025, 1, 2)]
+    out = bucket_rollup(tiny, days, 10**6, ("1m", "1h", "1d"), ["n_epochs", "median"])
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange hashpartitioning") == 1
+    assert plan.count("MapInPandas") == 1
+    pushed = plan.split("PushedFilters: [")[-1].split("]")[0]
+    assert "GreaterThanOrEqual(ts,2025-01-01" in pushed
+    assert "LessThan(ts,2025-01-03" in pushed
+
+
 def test_rollup_sql_is_pure_jvm_with_partial_agg(spark, tiny):
     """The fast lane: no Python anywhere, map-side partial aggregation
     before the single exchange."""

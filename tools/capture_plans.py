@@ -20,11 +20,15 @@ OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 def bench_query_fns(spark):
     """The exact DataFrames bench.py times: the 9 headline entry queries,
     the production minhash path, the transcript rollups (over a small
-    generated transcript table so plan shape matches), and the extras."""
+    generated transcript table so plan shape matches), the rollup job's
+    bucket pass, and the extras."""
+    import datetime as dt
+
     import __spark_entry__ as entry
     from pyspark.sql import functions as F
 
     from cesium_spark.datagen import generate_transcripts
+    from cesium_spark.jobs import bucket_rollup
     from cesium_spark.operators.compress import compress_blocks
     from cesium_spark.operators.dedup import (
         duplicate_token_spans, lsh_dedup_clusters, minhash_lsh_pairs,
@@ -56,6 +60,10 @@ def bench_query_fns(spark):
         out[name] = lambda n=name: qfns[n](spark, SF_DIR)
     out["minhash_lsh_xxhash64"] = lambda: minhash_lsh_pairs(docs, hash_fn="xxhash64")
     out["transcript_rollup_1h"] = lambda: rollup_kernel(tr, feats, "1h")
+    # one run_rollup bucket pass: the first 7 days at every default tier,
+    # sized for a bucket of 10**6 rows (one partition per core)
+    week = [dt.datetime(2025, 1, 1) + dt.timedelta(days=i) for i in range(7)]
+    out["rollup_bucket"] = lambda: bucket_rollup(tr, week, 10**6, ("1m", "1h", "1d"), feats)
     out["transcript_rollup_1h_sqlpath"] = lambda: rollup_sql(tr, "1h")
     out["gorilla_compress_1h"] = lambda: compress_blocks(tr, "1h", text_col="text")
     out["lsh_star_clusters"] = lambda: lsh_dedup_clusters(docs, hash_fn="xxhash64")
