@@ -4,24 +4,32 @@ rollups are committed.
 The retention engine's contract (north rule): raw rows older than the
 horizon are deleted ONLY if every tier's rollup unit covering that day is
 committed in the lineage log — a crash between rollup and retention can
-never lose data that hasn't been rolled up. Deletion is a new snapshot of
-the SnapshotTable (old snapshots still time-travel to the raw data until
-physically vacuumed), so retention itself is atomic and reversible.
+never lose data that hasn't been rolled up.
+
+Deletion works at data-file granularity (`SnapshotTable.delete_files`).
+Ingestion appends in time order, so most raw files hold a few adjacent
+days. A file whose days are all dropped leaves the snapshot manifest with
+no data I/O (metadata-only delete); a file with no dropped day is carried
+as-is; only a file that straddles a dropped and a kept day is rewritten,
+with its own kept rows (copy-on-write). The result is one new snapshot, so
+retention is atomic, and older snapshots still time-travel to the raw data
+until `expire_snapshots` reclaims the dropped files.
 """
 
 from __future__ import annotations
 
 import datetime as dt
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.table import SnapshotTable
+from ..sources.table import SnapshotTable, local_path
 from ..streaming.checkpoint import LineageLog
 
 __all__ = [
     "droppable_days", "retention_decision", "apply_retention",
-    "current_day_rows",
+    "current_day_rows", "plan_retention", "RetentionPlan",
 ]
 
 
@@ -135,13 +143,74 @@ def retention_decision(
 
 def current_day_rows(df: DataFrame, ts_col: str = "ts") -> dict:
     """Current row count per day — ONE aggregation, O(#days) rows to the
-    driver; every count retention reports derives from this map (no
-    full-table count() actions)."""
+    driver; `droppable_days` runs it when the caller passes no counts
+    (`plan_retention` sums its per-file counts instead)."""
     return {
         r["d"]: r["n"]
         for r in df.select(F.date_trunc("day", F.col(ts_col)).alias("d"))
         .groupBy("d").agg(F.count("*").alias("n")).collect()
     }
+
+
+@dataclass(frozen=True)
+class RetentionPlan:
+    """What `apply_retention` would commit. Days are ascending; files are
+    local paths of the current snapshot's data files."""
+
+    dropped_days: list[dt.datetime]
+    blocked_days: list[dt.datetime]
+    rows_before: int
+    rows_after: int
+    remove_files: list[str]   # every row in a dropped day
+    rewrite_files: list[str]  # rows in both dropped and kept days
+    rows_rewritten: int       # kept rows of `rewrite_files`
+
+
+def plan_retention(
+    spark: SparkSession,
+    table: SnapshotTable,
+    log: LineageLog,
+    tiers,
+    horizon: dt.datetime,
+    ts_col: str = "ts",
+) -> RetentionPlan:
+    """Plan retention without writing: ONE aggregation of rows per
+    (data file, day) over the current snapshot, O(#files x #days) rows to
+    the driver. Per-day counts summed from it feed `droppable_days`; the
+    per-file days sort each file into removed, rewritten or carried."""
+    df = table.read(spark)
+    per_file = (
+        df.groupBy(F.input_file_name().alias("f"),
+                   F.date_trunc("day", F.col(ts_col)).alias("d"))
+        .agg(F.count("*").alias("n")).collect()
+    )
+    file_days: dict[str, dict] = {}
+    day_rows: dict = {}
+    for f, d, n in per_file:
+        file_days.setdefault(local_path(f), {})[d] = n
+        day_rows[d] = day_rows.get(d, 0) + n
+    drop = droppable_days(df, log, tiers, horizon, ts_col, day_rows=day_rows)
+    dropped = set(drop)
+    remove, rewrite, rows_rewritten = [], [], 0
+    for f, days in sorted(file_days.items()):
+        kept = sum(n for d, n in days.items() if d not in dropped)
+        if kept == sum(days.values()):
+            continue
+        if kept:
+            rewrite.append(f)
+            rows_rewritten += kept
+        else:
+            remove.append(f)
+    total = sum(day_rows.values())
+    return RetentionPlan(
+        dropped_days=drop,
+        blocked_days=sorted(d for d in day_rows if d < horizon and d not in dropped),
+        rows_before=total,
+        rows_after=total - sum(day_rows[d] for d in drop),
+        remove_files=remove,
+        rewrite_files=rewrite,
+        rows_rewritten=rows_rewritten,
+    )
 
 
 def apply_retention(
@@ -152,28 +221,23 @@ def apply_retention(
     horizon: dt.datetime,
     ts_col: str = "ts",
 ) -> dict:
-    """Drop raw rows of fully-rolled-up days older than `horizon` by
-    writing a new table snapshot; returns a report. Rows of NOT-yet-
-    committed old days are retained (and reported) — rollup must catch up
-    before retention can advance."""
-    df = table.read(spark)
-    day_col = F.date_trunc("day", F.col(ts_col))
-    day_rows = current_day_rows(df, ts_col)
-    drop = droppable_days(df, log, tiers, horizon, ts_col, day_rows=day_rows)
-    total = sum(day_rows.values())
-    if drop:
-        kept = df.filter(~day_col.isin(drop))
-    else:
-        kept = df
-    kept_n = total - sum(day_rows[d] for d in drop)
-    blocked = sorted(
-        d for d in day_rows if d < horizon and d not in set(drop)
-    )
-    snapshot_id = table.overwrite(kept) if drop else table.current_snapshot_id()
+    """Drop raw rows of fully-rolled-up days older than `horizon`: commit
+    `plan_retention`'s plan as one file-granular delete snapshot; returns
+    a report. Rows of NOT-yet-committed old days are retained (and
+    reported) — rollup must catch up before retention can advance."""
+    plan = plan_retention(spark, table, log, tiers, horizon, ts_col)
+    snapshot_id = table.current_snapshot_id()
+    if plan.dropped_days:
+        keep = ~F.date_trunc("day", F.col(ts_col)).isin(plan.dropped_days)
+        snapshot_id = table.delete_files(
+            spark, plan.remove_files, plan.rewrite_files, keep)
     return {
-        "dropped_days": [d.isoformat() for d in sorted(drop)],
-        "blocked_days": [d.isoformat() for d in sorted(blocked)],
-        "rows_before": total,
-        "rows_after": kept_n,
+        "dropped_days": [d.isoformat() for d in plan.dropped_days],
+        "blocked_days": [d.isoformat() for d in plan.blocked_days],
+        "rows_before": plan.rows_before,
+        "rows_after": plan.rows_after,
         "snapshot_id": snapshot_id,
+        "files_removed": len(plan.remove_files),
+        "files_rewritten": len(plan.rewrite_files),
+        "rows_rewritten": plan.rows_rewritten,
     }

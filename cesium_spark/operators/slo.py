@@ -47,19 +47,26 @@ def slo_burn_rate(
     Returns (key, n, n_err, err_rate, n_burn_alerts, first_alert,
     budget_consumed): err_rate is the whole-period error fraction,
     n_burn_alerts counts events at which BOTH trailing rates exceeded
-    their burn thresholds (budget * multiplier, capped at 1.0) AND the
+    their burn thresholds (budget * multiplier) AND the
     short window held at least `min_events` events — the cold-start
     guard, without which the first error of a fresh actor trivially
     alarms on a one-event window,
     first_alert is the earliest such event time (NULL if none), and
     budget_consumed = err_rate / (1 - slo) — > 1 means the period
     already blew its budget regardless of burn dynamics.
+
+    Raises ValueError when a threshold budget * multiplier is >= 1: a
+    rate never exceeds 1, so that detector could never fire.
     """
     from ..kernel import ts_micros
 
     budget = 1.0 - float(slo)
-    thr_s = min(1.0, budget * float(short_burn))
-    thr_l = min(1.0, budget * float(long_burn))
+    thr_s = budget * float(short_burn)
+    thr_l = budget * float(long_burn)
+    if max(thr_s, thr_l) >= 1.0:
+        raise ValueError(
+            f"burn thresholds {thr_s:g} (short) and {thr_l:g} (long) must be "
+            f"< 1 for slo={slo}: an error rate never exceeds 1")
     us = ts_micros(F.col(ts_col))
     is_err = (F.col(type_col) == error_type).cast("long")
 

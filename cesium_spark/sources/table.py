@@ -12,6 +12,13 @@ Layout:
                                 its live file-set (full manifest, not a
                                 delta), so reads are one JSON lookup.
 
+A manifest entry is a directory (a whole snapshot dir, or one leaf
+partition dir) or a single data file. Writes add directory entries; only
+`delete_files` lists files, and only for a directory that lost some of
+its files, so a table no delete touched has directory entries alone. A
+snapshot with no entry left records the table schema instead, and reads
+as an empty table.
+
 Writers are atomic: data lands under a new snapshot dir first, then the
 manifest is atomically replaced (tmp+rename). A crash before the manifest
 swap leaves the table at the previous snapshot (orphan data dirs are
@@ -20,12 +27,33 @@ harmless and collectable).
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
+import shutil
 import time
 import uuid
+from collections.abc import Sequence
+from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+def local_path(uri: str) -> str:
+    """Local path of a ``file:`` URI as ``input_file_name()`` returns it
+    (URL-encoded: a space reads ``%20``); plain paths pass through."""
+    u = urlparse(uri)
+    return unquote(u.path) if u.scheme == "file" else uri
+
+
+def _data_files(directory: str) -> list[str]:
+    """The files Spark reads in a leaf directory: hidden (``.``) and
+    metadata (``_``) files are skipped."""
+    return sorted(
+        os.path.join(directory, f) for f in os.listdir(directory)
+        if not f.startswith(("_", "."))
+    )
 
 
 class SnapshotTable:
@@ -46,7 +74,12 @@ class SnapshotTable:
         except (FileNotFoundError, json.JSONDecodeError):
             return []
 
-    def _append_snapshot(self, paths: list[str], operation: str, parent: list[dict]):
+    @property
+    def _data_root(self) -> str:
+        return os.path.join(self.root, "data")
+
+    def _append_snapshot(self, paths: list[str], operation: str, parent: list[dict],
+                         schema: dict | None = None):
         log = parent
         snap = {
             "snapshot_id": uuid.uuid4().hex[:16],
@@ -56,6 +89,8 @@ class SnapshotTable:
             "operation": operation,
             "paths": sorted(paths),
         }
+        if schema is not None:
+            snap["schema"] = schema
         log = log + [snap]
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
@@ -74,9 +109,18 @@ class SnapshotTable:
 
     # ------------------------------------------------------------- write
 
-    def _write_data(self, df: DataFrame, partition_by: list[str] | None) -> tuple[str, list[str]]:
+    def _partition_suffix(self, p: str) -> str:
+        """Partition identity of a manifest entry: the path of its leaf
+        directory below the snapshot dir (``"."`` when unpartitioned);
+        a file entry takes its parent directory's."""
+        if os.path.isfile(p):
+            p = os.path.dirname(p)
+        parts = os.path.relpath(p, self._data_root).split(os.sep)
+        return os.sep.join(parts[1:]) or "."
+
+    def _write_data(self, df: DataFrame, partition_by: list[str] | None) -> list[str]:
         sid_dir = uuid.uuid4().hex[:16]
-        dest = os.path.join(self.root, "data", sid_dir)
+        dest = os.path.join(self._data_root, sid_dir)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
@@ -87,18 +131,18 @@ class SnapshotTable:
             for dirpath, _dirs, files in os.walk(dest):
                 if any(f.endswith(".parquet") for f in files):
                     paths.append(dirpath)
-            return dest, paths
-        return dest, [dest]
+            return paths
+        return [dest]
 
     def append(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
         log = self._load_log()
         prev = log[-1]["paths"] if log else []
-        _dest, new_paths = self._write_data(df, partition_by)
+        new_paths = self._write_data(df, partition_by)
         return self._append_snapshot(prev + new_paths, "append", log)
 
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
         log = self._load_log()
-        _dest, new_paths = self._write_data(df, partition_by)
+        new_paths = self._write_data(df, partition_by)
         return self._append_snapshot(new_paths, "overwrite", log)
 
     def overwrite_partitions(
@@ -118,24 +162,9 @@ class SnapshotTable:
         otherwise silently keep its stale rows)."""
         log = self._load_log()
         prev = log[-1]["paths"] if log else []
-        dest, new_paths = self._write_data(df, partition_by)
-        # partition identity = the relative partition-dir suffix
-        def suffix(p, base):
-            return os.path.relpath(p, base)
-
-        replaced = {suffix(p, dest) for p in new_paths} | set(also_replace or ())
-        kept = []
-        for p in prev:
-            # previous paths belong to other snapshot dirs: compare their
-            # partition suffix (path after the snapshot dir)
-            parts = p.split(os.sep)
-            if "data" in parts:
-                i = parts.index("data")
-                suf = os.sep.join(parts[i + 2:]) or "."
-            else:
-                suf = "."
-            if suf not in replaced:
-                kept.append(p)
+        new_paths = self._write_data(df, partition_by)
+        replaced = {self._partition_suffix(p) for p in new_paths} | set(also_replace or ())
+        kept = [p for p in prev if self._partition_suffix(p) not in replaced]
         return self._append_snapshot(kept + new_paths, "overwrite_partitions", log)
 
     # ------------------------------------------------------- maintenance
@@ -149,7 +178,45 @@ class SnapshotTable:
         matches = [s for s in log if s["snapshot_id"] == snapshot_id]
         if not matches:
             raise KeyError(f"unknown snapshot {snapshot_id}")
-        return self._append_snapshot(matches[0]["paths"], "rollback", log)
+        return self._append_snapshot(
+            matches[0]["paths"], "rollback", log, matches[0].get("schema"))
+
+    def delete_files(
+        self,
+        spark: SparkSession,
+        remove: Sequence[str],
+        rewrite: Sequence[str] = (),
+        keep: Column | None = None,
+    ) -> str:
+        """File-granular delete — Iceberg's ``DeleteFiles`` plus a
+        copy-on-write ``RewriteFiles`` for the files a delete only
+        partly covers. Every file in `remove` leaves the manifest with
+        no data I/O. Each file in `rewrite` is replaced by its rows
+        that satisfy `keep`, written in the table's partition layout.
+        Every other file is carried as-is, so a directory entry stays
+        one entry unless some file under it goes. Paths are local file
+        paths (see `local_path`); older snapshots keep referencing the
+        removed files, so time travel still reads them until
+        `expire_snapshots`."""
+        log = self._load_log()
+        gone = {os.path.abspath(f) for f in (*remove, *rewrite)}
+        holders = {os.path.dirname(f) for f in gone}
+        paths = []
+        for p in log[-1]["paths"]:
+            ap = os.path.abspath(p)
+            if ap in holders:
+                # a directory that lost some files: list the survivors
+                paths += [f for f in _data_files(p) if os.path.abspath(f) not in gone]
+            elif ap not in gone:
+                paths.append(p)
+        if rewrite:
+            suffix = self._partition_suffix(rewrite[0])
+            partition_by = [] if suffix == "." else [
+                seg.split("=", 1)[0] for seg in suffix.split(os.sep)]
+            kept = self._read_paths(spark, list(rewrite)).filter(keep)
+            paths += self._write_data(kept, partition_by)
+        schema = None if paths else self.read(spark).schema.jsonValue()
+        return self._append_snapshot(paths, "delete", log, schema)
 
     def expire_snapshots(self, keep_last: int = 1) -> list[str]:
         """Iceberg's `expire_snapshots`: drop all but the last
@@ -157,9 +224,9 @@ class SnapshotTable:
         snapshot references. Returns the deleted paths. Ordering is
         crash-safe: the truncated manifest lands atomically FIRST, so
         an interruption leaves only harmless orphan files (never a
-        manifest pointing at deleted data)."""
-        import shutil
-
+        manifest pointing at deleted data). An expired directory that
+        still holds a file a kept snapshot lists loses only its other
+        files."""
         if keep_last < 1:
             raise ValueError("keep_last must be >= 1")
         log = self._load_log()
@@ -169,6 +236,7 @@ class SnapshotTable:
         referenced: set[str] = set()
         for s in kept:
             referenced.update(s["paths"])
+        holders = {os.path.dirname(p) for p in referenced}
         tmp = self._manifest_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(kept, f, indent=1)
@@ -179,18 +247,28 @@ class SnapshotTable:
         deleted = []
         for s in log[: len(log) - keep_last]:
             for p in s["paths"]:
-                if p in referenced or not os.path.exists(p):
+                # entries nest only as a file under its leaf directory
+                if (p in referenced or os.path.dirname(p) in referenced
+                        or not os.path.exists(p)):
                     continue
-                # a kept path may live UNDER an expired dir path (or
-                # vice versa) only when identical — paths are leaf
-                # partition dirs or whole snapshot dirs, never nested
-                shutil.rmtree(p, ignore_errors=True)
-                referenced.add(p)  # don't retry shared paths
-                # rmtree swallows errors: report only what's GONE —
-                # a survivor is an unreferenced orphan (harmless), not
-                # reclaimed storage
-                if not os.path.exists(p):
-                    deleted.append(p)
+                doomed = (
+                    [f for f in _data_files(p) if f not in referenced]
+                    if p in holders else [p]
+                )
+                for q in doomed:
+                    if os.path.isdir(q):
+                        shutil.rmtree(q, ignore_errors=True)
+                    else:  # the data file and its checksum sidecar
+                        for f in (q, os.path.join(os.path.dirname(q),
+                                                  f".{os.path.basename(q)}.crc")):
+                            with contextlib.suppress(OSError):
+                                os.remove(f)
+                    referenced.add(q)  # don't retry shared paths
+                    # removal swallows errors: report only what's GONE —
+                    # a survivor is an unreferenced orphan (harmless),
+                    # not reclaimed storage
+                    if not os.path.exists(q):
+                        deleted.append(q)
         return sorted(set(deleted))
 
     def merge_rows(
@@ -244,18 +322,21 @@ class SnapshotTable:
                 raise KeyError(f"unknown snapshot {as_of}")
             snap = matches[0]
         if not snap["paths"]:
+            if "schema" in snap:
+                return spark.createDataFrame([], StructType.fromJson(snap["schema"]))
             raise FileNotFoundError("snapshot has no data files")
+        return self._read_paths(spark, snap["paths"])
+
+    def _read_paths(self, spark: SparkSession, paths: list[str]) -> DataFrame:
         # group paths by their snapshot dir so partition-column discovery
         # gets a consistent basePath per group, then union
-        data_root = os.path.join(self.root, "data")
         groups: dict[str, list[str]] = {}
-        for p in snap["paths"]:
-            rel = os.path.relpath(p, data_root)
-            sid = rel.split(os.sep)[0]
-            groups.setdefault(os.path.join(data_root, sid), []).append(p)
+        for p in paths:
+            sid = os.path.relpath(p, self._data_root).split(os.sep)[0]
+            groups.setdefault(os.path.join(self._data_root, sid), []).append(p)
         dfs = [
-            spark.read.option("basePath", base).parquet(*paths)
-            for base, paths in sorted(groups.items())
+            spark.read.option("basePath", base).parquet(*group)
+            for base, group in sorted(groups.items())
         ]
         out = dfs[0]
         for d in dfs[1:]:

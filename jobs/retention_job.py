@@ -10,9 +10,14 @@ Drops raw rows of days strictly older than --horizon ONLY when every
 tier's rollup unit covering that day is committed in the lineage log
 with a per-day input fingerprint matching the table's CURRENT row
 counts (late-arriving rows block the drop until a rollup recommit).
-Deletion writes a new snapshot — prior snapshots still time-travel to
-the raw data until vacuumed. --dry-run reports what would drop without
-writing. Prints one JSON report line.
+Deletion is one new snapshot at data-file granularity: files holding
+only dropped days leave the manifest unread, and only files that also
+hold kept days are rewritten with those rows. Prior snapshots still
+time-travel to the raw data until `expire_snapshots`. Prints one JSON
+report line: `apply_retention`'s report, which counts files_removed,
+files_rewritten and rows_rewritten. --dry-run prints the same plan
+without writing: would_drop_days, would_drop_rows, blocked_days and the
+paths in would_remove_files and would_rewrite_files.
 """
 
 from __future__ import annotations
@@ -29,8 +34,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main(argv=None):
     from pyspark.sql import SparkSession
 
-    from cesium_spark.operators.retention import (
-        apply_retention, current_day_rows, droppable_days)
+    from cesium_spark.operators.retention import apply_retention, plan_retention
     from cesium_spark.sources.table import SnapshotTable
     from cesium_spark.streaming.checkpoint import LineageLog
 
@@ -44,6 +48,9 @@ def main(argv=None):
     p.add_argument("--dry-run", action="store_true")
     args = p.parse_args(argv)
 
+    # under spark-submit there is no session yet (we own it and stop it);
+    # under a test harness an active session must be left running
+    owned = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName("cesium-spark-retention").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table = SnapshotTable(args.table)
@@ -52,24 +59,21 @@ def main(argv=None):
     tiers = args.tiers.split(",")
 
     if args.dry_run:
-        df = table.read(spark)
-        day_rows = current_day_rows(df, args.ts_col)
-        drop = droppable_days(df, log, tiers, horizon, args.ts_col,
-                              day_rows=day_rows)
+        plan = plan_retention(spark, table, log, tiers, horizon, args.ts_col)
         report = {
             "dry_run": True,
-            "would_drop_days": [d.isoformat() for d in drop],
-            "would_drop_rows": sum(day_rows[d] for d in drop),
-            "blocked_days": [
-                d.isoformat() for d in sorted(day_rows)
-                if d < horizon and d not in set(drop)
-            ],
+            "would_drop_days": [d.isoformat() for d in plan.dropped_days],
+            "would_drop_rows": plan.rows_before - plan.rows_after,
+            "blocked_days": [d.isoformat() for d in plan.blocked_days],
+            "would_remove_files": plan.remove_files,
+            "would_rewrite_files": plan.rewrite_files,
         }
     else:
         report = apply_retention(
             spark, table, log, tiers, horizon, args.ts_col)
     print(json.dumps(report))
-    spark.stop()
+    if owned:
+        spark.stop()
 
 
 if __name__ == "__main__":

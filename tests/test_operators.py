@@ -425,6 +425,139 @@ def test_retention_never_claims_gap_days_covered(spark, tmp_path):
     assert table.read(spark).count() == 4  # the gap-day rows survive
 
 
+def _file_per_group_df(spark, groups):
+    """One DataFrame partition, so one written data file, per group of
+    fixture days: [[0], [1, 3]] makes a day-0 file and a file spanning
+    days 1 and 3. Turn indices stay unique across groups."""
+    frames = []
+    for g, days in enumerate(groups):
+        pdf = _retention_fixture_rows(days)
+        pdf["turn_idx"] += 1000 * g
+        frames.append(pdf.assign(_g=g))
+    df = spark.createDataFrame(pd.concat(frames, ignore_index=True))
+    return df.repartitionByRange(len(groups), "_g").drop("_g")
+
+
+def _committed_retention_table(spark, tmp_path, groups, root_name="raw"):
+    """A SnapshotTable with one data file per group, whose 1h rollup is
+    committed for every day (one unit spanning them all)."""
+    from cesium_spark.jobs import run_rollup
+    from cesium_spark.sources.table import SnapshotTable
+    from cesium_spark.streaming.checkpoint import LineageLog
+
+    df = _file_per_group_df(spark, groups)
+    table = SnapshotTable(str(tmp_path / root_name))
+    s0 = table.append(df)
+    inp = str(tmp_path / "flat")
+    df.write.mode("overwrite").parquet(inp)
+    out = str(tmp_path / "rollup")
+    run_rollup(spark, inp, out, tiers=("1h",), features=["n_epochs"],
+               bucket_days=7, verbose=False)
+    return table, s0, LineageLog(f"{out}/_lineage")
+
+
+def _parquet_files(table):
+    import glob
+
+    return set(glob.glob(f"{glob.escape(table.root)}/data/**/*.parquet",
+                         recursive=True))
+
+
+@pytest.mark.parametrize("root_name", ["raw", "raw table"])
+def test_retention_drops_day_aligned_files_without_writing(
+        spark, tmp_path, root_name):
+    """Files holding only dropped days leave the manifest with no data
+    I/O: no parquet file is written, and the table keeps exactly the rows
+    the old whole-table rewrite kept. A root with a space checks that the
+    URL-encoded input_file_name() URIs still match the manifest's files."""
+    import datetime as dt
+
+    from cesium_spark.operators.retention import apply_retention
+
+    table, s0, log = _committed_retention_table(
+        spark, tmp_path, [[0], [1], [2], [3]], root_name)
+    before = _parquet_files(table)
+    horizon = dt.datetime(2025, 2, 3)  # days 0 and 1 are old
+    rep = apply_retention(spark, table, log, ("1h",), horizon)
+    assert rep["dropped_days"] == ["2025-02-01T00:00:00", "2025-02-02T00:00:00"]
+    assert (rep["files_removed"], rep["files_rewritten"], rep["rows_rewritten"]) == (2, 0, 0)
+    assert rep["rows_before"] == 40 and rep["rows_after"] == 20
+    assert _parquet_files(table) == before
+    # the snapshot dir lost two of its four files: it is listed file by file
+    assert sorted(table.snapshots()[-1]["paths"]) == sorted(
+        f for f in before if "-00002-" in f or "-00003-" in f)
+
+    old = table.read(spark, as_of=s0)
+    rewrite_path = old.filter(~F.date_trunc("day", "ts").isin(
+        [dt.datetime(2025, 2, 1), dt.datetime(2025, 2, 2)]))
+    cur = table.read(spark)
+    assert cur.exceptAll(rewrite_path).count() == 0
+    assert rewrite_path.exceptAll(cur).count() == 0
+
+
+def test_retention_rewrites_only_the_straddling_file(spark, tmp_path):
+    """Only a file spanning a dropped and a kept day is rewritten, with
+    exactly its kept rows; a file of dropped days alone is removed, a
+    file of kept days alone carried. Time travel to the pre-retention
+    snapshot still returns every row."""
+    import datetime as dt
+
+    from cesium_spark.operators.retention import apply_retention
+
+    # file 0: days 0 (dropped) and 2 (kept); file 1: day 1; file 2: day 2
+    table, s0, log = _committed_retention_table(
+        spark, tmp_path, [[0, 2], [1], [2]])
+    before = _parquet_files(table)
+    horizon = dt.datetime(2025, 2, 3)
+    rep = apply_retention(spark, table, log, ("1h",), horizon)
+    assert rep["dropped_days"] == ["2025-02-01T00:00:00", "2025-02-02T00:00:00"]
+    assert (rep["files_removed"], rep["files_rewritten"], rep["rows_rewritten"]) == (1, 1, 10)
+    assert rep["rows_after"] == 20
+
+    (written,) = _parquet_files(table) - before
+    straddler = next(f for f in before if "-00000-" in f)
+    kept_rows = spark.read.parquet(straddler).filter(F.col("ts") >= F.lit(horizon))
+    got = spark.read.parquet(written)
+    assert got.count() == 10
+    assert got.exceptAll(kept_rows).count() == 0 and kept_rows.exceptAll(got).count() == 0
+    live = table.snapshots()[-1]["paths"]
+    assert straddler not in live and any("-00002-" in p for p in live)
+    assert table.read(spark).count() == 20
+    assert table.read(spark, as_of=s0).count() == 40
+
+
+def test_retention_dry_run_plans_what_apply_retention_drops(spark, tmp_path, capsys):
+    """The job's --dry-run reports the plan without touching the table
+    (_snapshots.json byte-identical); apply_retention then drops exactly
+    the reported days and files."""
+    import datetime as dt
+    import json
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from cesium_spark.operators.retention import apply_retention
+    from jobs.retention_job import main
+
+    table, _s0, log = _committed_retention_table(
+        spark, tmp_path, [[0, 2], [1], [2]])
+    manifest = os.path.join(table.root, "_snapshots.json")
+    with open(manifest, "rb") as f:
+        manifest_bytes = f.read()
+    main(["--table", table.root, "--lineage", log.root, "--horizon", "2025-02-03",
+          "--tiers", "1h", "--dry-run"])
+    plan = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    with open(manifest, "rb") as f:
+        assert f.read() == manifest_bytes
+    assert plan["dry_run"] and plan["would_drop_rows"] == 20 and plan["blocked_days"] == []
+    assert len(plan["would_remove_files"]) == 1 and len(plan["would_rewrite_files"]) == 1
+
+    rep = apply_retention(spark, table, log, ("1h",), dt.datetime(2025, 2, 3))
+    assert rep["dropped_days"] == plan["would_drop_days"]
+    assert rep["files_removed"] == len(plan["would_remove_files"])
+    assert rep["files_rewritten"] == len(plan["would_rewrite_files"])
+
+
 def test_state_cascade_equals_direct_rollup(spark, transcripts):
     """Hierarchical continuous aggregates: 1m states merged to 1h merged
     to 1d must equal partial states computed directly at 1d from raw —

@@ -5,6 +5,7 @@ diagnostics over the hourly grid family."""
 import math
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -1382,6 +1383,22 @@ def test_slo_burn_rate_multiwindow_alerting(spark):
     assert out[2]["first_alert"] is None
     assert out[2]["budget_consumed"] < 1.0
     assert abs(out[2]["err_rate"] - 0.02) < 1e-9
+
+
+@pytest.mark.parametrize("kw", [
+    {"slo": 0.9},                      # short: 0.1 * 14.4 = 1.44
+    {"slo": 0.8, "short_burn": 4.0},   # long: 0.2 * 6 = 1.2
+])
+def test_slo_burn_rate_rejects_thresholds_that_cannot_fire(spark, kw):
+    """A burn threshold budget * multiplier >= 1 can never be exceeded by
+    an error rate; it raises instead of returning a silent detector."""
+    from cesium_spark.operators.slo import slo_burn_rate
+
+    df = spark.createDataFrame(
+        [(1, 1, "error")], "event_id long, user_id long, event_type string"
+    ).select("event_id", F.current_timestamp().alias("ts"), "user_id", "event_type")
+    with pytest.raises(ValueError, match="never exceeds 1"):
+        slo_burn_rate(df, **kw)
 
 
 # --------------------------------------- pre-whitened Mann-Kendall

@@ -1,6 +1,7 @@
 """Snapshot-table shim (append / dynamic overwrite / time travel), the
 reference-format CSV reader, and multimodal plumbing."""
 
+import glob
 import os
 
 import numpy as np
@@ -108,6 +109,53 @@ def test_snapshot_table_merge_unpartitioned_and_empty(spark, tmp_path):
     t.merge_rows(spark, _df(spark, [(1, "a", 2.0), (2, "b", 2.0)]), keys=["k"])
     cur = t.read(spark).toPandas().sort_values("k")
     assert list(cur["k"]) == [1, 2] and cur.iloc[0]["v"] == 2.0
+
+
+def _file_per_group(spark, groups):
+    """One written data file per group of rows."""
+    rows = [(*r, g) for g, grp in enumerate(groups) for r in grp]
+    df = spark.createDataFrame(pd.DataFrame(rows, columns=["k", "part", "v", "_g"]))
+    return df.repartitionByRange(len(groups), "_g").drop("_g")
+
+
+def _live_files(t, part=""):
+    return sorted(glob.glob(os.path.join(t.root, "data", "*", part, "*.parquet")))
+
+
+def test_delete_files_then_expire_keeps_live_files(spark, tmp_path):
+    """expire_snapshots after a file-level delete: the expired snapshot
+    lists the whole directory, the live one two of its files. Only the
+    deleted file goes from disk; the directory and the read survive."""
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    s0 = t.append(_file_per_group(
+        spark, [[(1, "a", 1.0)], [(2, "a", 2.0)], [(3, "a", 3.0)]]))
+    doomed, *live = _live_files(t)
+    t.delete_files(spark, [doomed])
+    assert t.snapshots()[-1]["paths"] == live
+    assert t.read(spark, as_of=s0).count() == 3
+    before = sorted(t.read(spark).toPandas()["k"])
+    assert before == [2, 3]
+
+    assert t.expire_snapshots(keep_last=1) == [doomed]
+    assert _live_files(t) == live
+    assert sorted(t.read(spark).toPandas()["k"]) == before
+
+
+def test_overwrite_partitions_after_file_delete_leaves_no_stale_rows(spark, tmp_path):
+    """A file entry's partition is its parent directory: overwriting
+    partition a replaces the file entries the delete left there."""
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    t.append(_file_per_group(
+        spark, [[(1, "a", 1.0)], [(2, "a", 2.0)], [(3, "b", 3.0)]]),
+        partition_by=["part"])
+    doomed, kept_a = _live_files(t, "part=a")
+    t.delete_files(spark, [doomed])
+    assert kept_a in t.snapshots()[-1]["paths"]
+    assert sorted(t.read(spark).toPandas()["k"]) == [2, 3]
+
+    t.overwrite_partitions(_df(spark, [(9, "a", 9.0)]), partition_by=["part"])
+    cur = t.read(spark).toPandas().sort_values("k")
+    assert list(cur["k"]) == [3, 9] and list(cur["part"]) == ["b", "a"]
 
 
 def test_read_ts_csv_matches_reference_parse(spark, tmp_path):
