@@ -1323,6 +1323,87 @@ def hll_state_estimate(spark, store_root: str, p: int = 10,
     return hll_estimate_from_buckets(state, p, round_digits)
 
 
+_PART_FILE = "part-0.parquet"
+# the JSON StructType Spark stores in the footer of every parquet file it
+# writes; partials committed before _commit_partial existed carry it
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _commit_partial(fresh: DataFrame, store_root: str, batch_id: int,
+                    keys: tuple[str, ...]) -> None:
+    """Commit one micro-batch's mergeable partial as
+    ``<store_root>/batch=<id>/part-0.parquet``.
+
+    One ``toArrow()`` collect is the only Spark action (the aggregate's
+    map side stays parallel); a 0-row partial commits nothing. The rows
+    are sorted by ``keys`` (unique per row, so the bytes do not depend
+    on partition order) and written by pyarrow, without statistics
+    (every read consumes the whole file), into ``_tmp-batch=<id>/``,
+    then swapped in by a rename: a reader never sees a half-written
+    partial, and a replay of the id rewrites identical bytes, so
+    at-least-once delivery gives exactly-once state.
+
+    Each head bounds the collect by its partial's cardinality;
+    ``spark.driver.maxResultSize`` is the hard cap, so an oversized
+    partial fails loudly. The store must be on a local filesystem."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    table = fresh.toArrow()
+    if table.num_rows == 0:
+        return
+    tmp = os.path.join(store_root, f"_tmp-batch={batch_id}")
+    final = os.path.join(store_root, f"batch={batch_id}")
+    shutil.rmtree(tmp, ignore_errors=True)  # a crashed earlier attempt
+    os.makedirs(tmp)
+    pq.write_table(table.sort_by([(k, "ascending") for k in keys]),
+                   os.path.join(tmp, _PART_FILE), compression="zstd",
+                   store_schema=False, write_statistics=False)
+    if not os.path.isdir(final):
+        os.rename(tmp, final)
+        return
+    # a replay: swap the one file in place. An old-layout directory's
+    # own part file goes after the swap, so only a reader listing that
+    # directory in between can see the batch twice
+    os.replace(os.path.join(tmp, _PART_FILE), os.path.join(final, _PART_FILE))
+    os.rmdir(tmp)
+    for name in os.listdir(final):
+        path = os.path.join(final, name)
+        if os.path.isdir(path):  # a torn Spark write's _temporary/
+            shutil.rmtree(path)
+        elif name != _PART_FILE:
+            os.remove(path)
+
+
+def _read_partials(spark, store_root: str) -> DataFrame | None:
+    """Every committed partial under ``store_root`` as one relation, or
+    None when no batch has committed yet. The schema comes from the
+    first data file's footer on the driver (Spark's own StructType
+    JSON in an old-layout file, else the Arrow schema with tz-less
+    timestamps as TIMESTAMP_NTZ), so the read runs no schema-inference
+    job. ``_tmp-batch=<id>`` leftovers of a crashed commit are not
+    read."""
+    import glob
+    import json
+    import os
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+    from pyspark.sql.types import StructType
+
+    files = sorted(glob.glob(os.path.join(store_root, "batch=*", "*.parquet")))
+    if not files:
+        return None
+    footer = pq.read_schema(files[0])
+    spark_json = (footer.metadata or {}).get(_SPARK_ROW_METADATA)
+    schema = (StructType.fromJson(json.loads(spark_json)) if spark_json
+              else from_arrow_schema(footer, prefer_timestamp_ntz=True))
+    dirs = sorted({os.path.dirname(f) for f in files})
+    return spark.read.schema(schema).parquet(*dirs)
+
+
 def cms_batch_fn(store_root: str, col: str = "tok", d: int = 4, w: int = 512):
     """foreachBatch function for a LIVE token-frequency monitor:
     maintains the deterministic Count-Min counter state
@@ -1334,26 +1415,18 @@ def cms_batch_fn(store_root: str, col: str = "tok", d: int = 4, w: int = 512):
     merge by SUM, which (unlike the HLL's max) is NOT idempotent, so a
     replayed delivery would double-count if batches were merged into
     one running total. Instead each micro-batch's partial counter
-    relation (<= d*w rows, deterministic content) is written to its own
-    ``batch=<id>`` directory with overwrite semantics: foreachBatch
-    retries re-deliver the SAME batch_id, the rewrite is byte-identical,
-    and the read side sums across batch directories — at-least-once
-    delivery converges to exactly-once state without a transactional
-    sink. A crash mid-write leaves one torn batch directory that the
-    restart's redelivery of that same batch_id rewrites whole."""
-    import os
-
+    relation is committed by ``_commit_partial`` as its own sorted,
+    driver-written ``batch=<id>/part-0.parquet``, swapped in by a
+    rename: foreachBatch retries re-deliver the SAME batch_id, the
+    rewrite is byte-identical, and the read side sums across batch
+    directories — at-least-once delivery converges to exactly-once
+    state without a transactional sink. The driver collect is <= d*w
+    rows."""
     from ..operators.sketch import cms_counter_rows
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fresh = cms_counter_rows(batch_df, col, d, w)
-        # <= d*w rows by construction; coalesce(1) keeps the batch dir a
-        # single deterministic file so replay rewrites are byte-stable
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
+        _commit_partial(cms_counter_rows(batch_df, col, d, w), store_root,
+                        batch_id, ("_row", "_b"))
 
     return _apply
 
@@ -1363,15 +1436,11 @@ def cms_state_counters(spark, store_root: str) -> DataFrame:
     equals operators/sketch.cms_counter_rows over everything ingested.
     A stream that never saw a non-empty batch has the defined empty
     sketch (every estimate reads 0)."""
-    import glob
-    import os
-
-    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
-    if not dirs:
+    parts = _read_partials(spark, store_root)
+    if parts is None:
         return spark.createDataFrame([], "_row int, _b int, _n long")
     return (
-        spark.read.parquet(*dirs)
-        .groupBy("_row", "_b")
+        parts.groupBy("_row", "_b")
         .agg(F.sum("_n").cast("long").alias("_n"))
     )
 
@@ -1386,24 +1455,17 @@ def ddsketch_batch_fn(store_root: str, value_col: str = "value",
 
     State discipline: bucket counts merge by SUM (not idempotent), so
     this uses the cms_batch_fn exactly-once pattern — each batch's
-    partial bucket relation is written to its own ``batch=<id>``
-    directory; foreachBatch retries re-deliver the same batch_id and
-    rewrite the identical bytes; the read side sums across batch
-    directories, so at-least-once delivery converges to exactly-once
-    state."""
-    import os
-
+    partial bucket relation is committed by ``_commit_partial`` as its
+    own sorted ``batch=<id>/part-0.parquet``; foreachBatch retries
+    re-deliver the same batch_id and rewrite the identical bytes; the
+    read side sums across batch directories, so at-least-once delivery
+    converges to exactly-once state. The driver collect is <= groups x
+    buckets rows."""
     from ..operators.sketch import ddsketch_buckets
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        fresh = ddsketch_buckets(batch_df, value_col, group_cols, alpha)
-        # groups x buckets rows by construction; coalesce(1) keeps the
-        # batch dir a single deterministic file so replays are byte-stable
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
+        _commit_partial(ddsketch_buckets(batch_df, value_col, group_cols, alpha),
+                        store_root, batch_id, (*group_cols, "bkt"))
 
     return _apply
 
@@ -1418,15 +1480,11 @@ def ddsketch_state_buckets(
     so operators/sketch.ddsketch_quantiles reads identically off it
     (the == batch invariant the driver query pins). An empty stream is
     the defined empty sketch."""
-    import glob
-    import os
-
-    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
-    if not dirs:
+    parts = _read_partials(spark, store_root)
+    if parts is None:
         return spark.createDataFrame([], f"{group_schema}, bkt int, cnt long")
     return (
-        spark.read.parquet(*dirs)
-        .groupBy(*group_cols, "bkt")
+        parts.groupBy(*group_cols, "bkt")
         .agg(F.sum("cnt").cast("long").alias("cnt"))
     )
 
@@ -1437,23 +1495,18 @@ def m4_batch_fn(store_root: str, bucket_sec: int = 3600,
                 tiebreak_col: str = "event_id"):
     """foreachBatch function for LIVE M4 downsampling: each
     micro-batch's mergeable partial (operators/downsample.m4_partial —
-    selector structs + count) commits to its own ``batch=<id>``
-    directory; replays rewrite identical bytes (the cms/ddsketch
-    exactly-once pattern — the count field is a sum, so a merged
-    running state would double-count on redelivery). State is
-    series x buckets rows per batch, independent of event volume."""
-    import os
-
+    selector structs + count) is committed by ``_commit_partial`` as
+    its own sorted ``batch=<id>/part-0.parquet``; replays rewrite
+    identical bytes (the cms/ddsketch exactly-once pattern — the count
+    field is a sum, so a merged running state would double-count on
+    redelivery). The driver collect is <= keys x buckets rows in the
+    batch, independent of event volume."""
     from ..operators.downsample import m4_partial
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         fresh = m4_partial(batch_df, bucket_sec, key_cols, ts_col,
                            value_col, tiebreak_col)
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
+        _commit_partial(fresh, store_root, batch_id, (*key_cols, "bucket_idx"))
 
     return _apply
 
@@ -1463,20 +1516,18 @@ def m4_state(spark, store_root: str, bucket_sec: int = 3600,
     """Finalized M4 rows from every committed batch partial — equals
     operators/downsample.m4_downsample over everything ingested (the
     merge uses the same selectors that built the partials). An empty
-    stream yields the empty relation."""
-    import glob
-    import os
-
+    stream yields the empty relation, keyed by ``key_cols`` as string
+    columns."""
     from ..operators.downsample import m4_finalize, m4_merge
 
-    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
-    if not dirs:
+    parts = _read_partials(spark, store_root)
+    if parts is None:
+        keys = ", ".join(f"{c} string" for c in key_cols)
         return spark.createDataFrame(
-            [], "event_type string, bucket_idx long, "
+            [], f"{keys}, bucket_idx long, "
                 "bucket_start timestamp, v_first double, v_last double, "
                 "v_min double, v_max double, t_min_sec double, "
                 "t_max_sec double, n long")
-    parts = spark.read.parquet(*dirs)
     return m4_finalize(m4_merge(parts, key_cols), bucket_sec, key_cols)
 
 
@@ -1487,24 +1538,20 @@ def grid_batch_fn(store_root: str,
     per (key, hour) value sum + count, the sufficient statistic behind
     the whole grid family (Mann-Kendall, Theil-Sen, Holt's grid,
     seasonal profiles): any of their batch tails can run off the
-    merged state at any time. Sum/count partials commit per batch=<id>
-    directory (the cms exactly-once pattern: sums are not idempotent,
-    replays rewrite identical bytes). State is keys x span-hours rows
-    per batch, independent of event volume."""
-    import os
+    merged state at any time. Sum/count partials are committed by
+    ``_commit_partial`` as one sorted ``batch=<id>/part-0.parquet``
+    each (the cms exactly-once pattern: sums are not idempotent,
+    replays rewrite identical bytes). The driver collect is <= keys x
+    hours rows, and never more than the batch's rows."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         fresh = (
             batch_df.groupBy(
                 *key_cols, F.date_trunc("hour", F.col(ts_col)).alias("h"))
             .agg(F.sum(F.col(value_col).cast("double")).alias("s"),
                  F.count("*").cast("long").alias("c"))
         )
-        fresh.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(store_root, f"batch={batch_id}")
-        )
+        _commit_partial(fresh, store_root, batch_id, (*key_cols, "h"))
 
     return _apply
 
@@ -1519,16 +1566,12 @@ def grid_state(spark, store_root: str,
     mann_kendall & co. build directly (the 6-decimal round absorbs the
     partial-sum association order, exactly as it absorbs Spark's own
     partition order in the batch path)."""
-    import glob
-    import os
-
-    dirs = sorted(glob.glob(os.path.join(store_root, "batch=*")))
-    if not dirs:
+    parts = _read_partials(spark, store_root)
+    if parts is None:
         return spark.createDataFrame(
             [], f"{key_schema}, h timestamp, x double")
     return (
-        spark.read.parquet(*dirs)
-        .groupBy(*key_cols, "h")
+        parts.groupBy(*key_cols, "h")
         .agg(F.round(F.sum("s") / F.sum("c") + F.lit(1e-9),
                      round_digits).alias("x"))
     )

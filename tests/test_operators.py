@@ -902,8 +902,9 @@ def test_clean_corpus_job_end_to_end(spark, tmp_path):
     survivor, the off-language and low-quality docs drop, the kept
     parquet + JSON report agree."""
     import json
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from jobs.clean_corpus_job import main
 
     good = ("the quick brown fox jumps over the lazy dog and that is fine "
@@ -1175,8 +1176,9 @@ def test_training_set_job_end_to_end(spark, tmp_path):
     repetitive docs drop, survivors land under their md5-bucket split
     dir, and the verdict/ report agree. Split labels match hashlib."""
     import hashlib
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from jobs.training_set_job import main
 
     # single occurrence of every 8-token window (no self-repeat), so
@@ -3390,8 +3392,9 @@ def test_rewrite_zordered_preserves_data_disjoint_ranges(spark, tmp_path):
 
 
 def test_maintenance_job_end_to_end(spark, tmp_path):
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
     from cesium_spark.datagen import generate_transcripts
     from cesium_spark.sources.table import SnapshotTable

@@ -996,8 +996,9 @@ def test_seasonal_naive_interval_short_series_null(spark):
 
 
 def test_monitoring_job_end_to_end(spark, tmp_path):
+    import os
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from jobs.monitoring_job import main
 
     rng = np.random.RandomState(53)

@@ -4,6 +4,8 @@ energy."""
 
 import math
 
+import pytest
+
 from pyspark.sql import functions as F
 
 
@@ -355,6 +357,100 @@ def test_m4_stream_replay_and_batch_equality(spark, tmp_path):
                                                  bucket_sec=120)))
     pt.assert_frame_equal(merged, _norm(m4_downsample(ev, bucket_sec=120)))
     assert m4_state(spark, str(tmp_path / "nowhere")).count() == 0
+
+
+def test_m4_state_empty_store_keeps_key_columns(spark, tmp_path):
+    from cesium_spark.streaming.stream import m4_batch_fn, m4_state
+
+    ev = _events(spark, [(1, 30 * i, "A", float(i)) for i in range(10)]) \
+        .withColumn("role", F.lit("user"))
+    store = str(tmp_path / "m4_store")
+    m4_batch_fn(store, key_cols=("role",))(ev, 0)
+    full = m4_state(spark, store, key_cols=("role",))
+    empty = m4_state(spark, str(tmp_path / "nowhere"), key_cols=("role",))
+    assert empty.count() == 0
+    assert empty.columns == full.columns
+    assert empty.dtypes == full.dtypes
+
+
+_GRID_KEYS = ("user_id", "cohort")
+
+
+def _grid_partial(df):
+    """grid_batch_fn's partial, for writing an old-layout batch."""
+    return (df.groupBy(*_GRID_KEYS, F.date_trunc("hour", "ts").alias("h"))
+            .agg(F.sum(F.col("value").cast("double")).alias("s"),
+                 F.count("*").cast("long").alias("c")))
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+@pytest.mark.parametrize("head", ["grid", "m4"])
+@pytest.mark.parametrize("old_first", [True, False])
+def test_head_store_reads_old_layout_batches(spark, tmp_path, head, ts_type,
+                                             old_first):
+    """A store whose batches were partly written by Spark's parquet
+    writer (coalesce(1): INT96 timestamps, _SUCCESS, .crc sidecars)
+    reads with the same schema and rows as spark.read.parquet, merges to
+    the batch operator, and a replay into an old-layout directory leaves
+    one data file. The grid is also keyed by a ``cohort`` of the input's
+    timestamp type, so its partial carries that type (``h`` is always
+    TIMESTAMP: date_trunc returns it)."""
+    import glob
+    import os
+
+    import pandas.testing as pt
+
+    from cesium_spark.operators.downsample import m4_downsample, m4_partial
+    from cesium_spark.streaming.stream import (
+        _read_partials, grid_batch_fn, grid_state, m4_batch_fn, m4_state,
+    )
+
+    rows = [(u, 1000 * i + 7 * u, "A" if i % 3 else "B", float(i % 11) + u)
+            for u in (1, 2) for i in range(48)]
+    ev = _events(spark, rows).select(
+        "user_id", "event_id", "event_type", "value",
+        F.col("ts").cast(ts_type).alias("ts"),
+        F.timestamp_seconds(F.col("user_id") * 86400).cast(ts_type).alias("cohort"))
+    batches = [ev.where(f"event_id % 4 = {k}") for k in range(4)]
+    store = str(tmp_path / head)
+    if head == "grid":
+        fn, partial = grid_batch_fn(store, key_cols=_GRID_KEYS), _grid_partial
+        read = lambda: grid_state(spark, store, key_cols=_GRID_KEYS)  # noqa: E731
+        sort = [*_GRID_KEYS, "h"]
+        want = ev.groupBy(*_GRID_KEYS, F.date_trunc("hour", "ts").alias("h")) \
+            .agg(F.round(F.avg("value") + F.lit(1e-9), 6).alias("x"))
+    else:
+        fn, partial = m4_batch_fn(store, bucket_sec=7200), \
+            (lambda df: m4_partial(df, 7200))
+        read = lambda: m4_state(spark, store, bucket_sec=7200)  # noqa: E731
+        sort, want = ["event_type", "bucket_idx"], m4_downsample(ev, 7200)
+    old_ids = (0, 1) if old_first else (2, 3)
+    for k, b in enumerate(batches):
+        if k in old_ids:
+            partial(b).coalesce(1).write.mode("overwrite") \
+                .parquet(os.path.join(store, f"batch={k}"))
+        else:
+            fn(b, k)
+
+    def norm(df):
+        return df.toPandas().sort_values(sort).reset_index(drop=True)
+
+    dirs = sorted(glob.glob(os.path.join(store, "batch=*")))
+    got, ref = _read_partials(spark, store), spark.read.parquet(*dirs)
+    assert got.schema == ref.schema
+    assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
+    merged = norm(read())
+    pt.assert_frame_equal(merged, norm(want), check_dtype=False)
+
+    old = os.path.join(store, f"batch={old_ids[0]}")
+    assert "_SUCCESS" in os.listdir(old)
+    # what a Spark write torn before its job commit also leaves behind
+    torn = os.path.join(old, "_temporary", "0", "_temporary")
+    os.makedirs(torn)
+    open(os.path.join(torn, "part-00000.snappy.parquet"), "wb").close()
+    fn(batches[old_ids[0]], old_ids[0])
+    assert os.listdir(old) == ["part-0.parquet"]
+    pt.assert_frame_equal(norm(read()), merged)
 
 
 # ---------------------------------------------------------- reply latency

@@ -937,6 +937,129 @@ def test_cms_streamed_replay_idempotent_and_equals_batch(spark, tmp_path):
     assert empty.count() == 0
 
 
+# ------------------------------------- sum-merged heads' per-batch store
+
+
+def _head_events(spark, n=60, offset=0):
+    rows = [(i % 3, offset + i, "A" if i % 4 else "B",
+             float(offset + 900 * i), float(i % 7) + 0.5) for i in range(n)]
+    return spark.createDataFrame(
+        rows, "user_id long, event_id long, event_type string, "
+              "sec double, value double",
+    ).select("user_id", "event_id", "event_type",
+             F.timestamp_seconds("sec").alias("ts"), "value")
+
+
+def _heads(store):
+    """name -> (batch fn, merged-state reader) of the four sum-merged
+    heads, each with its own store under ``store``."""
+    from cesium_spark.streaming import stream as st
+
+    return {
+        "cms": (st.cms_batch_fn(f"{store}/cms", col="event_type", d=2, w=8),
+                lambda sp: st.cms_state_counters(sp, f"{store}/cms")),
+        "ddsketch": (st.ddsketch_batch_fn(f"{store}/ddsketch"),
+                     lambda sp: st.ddsketch_state_buckets(sp, f"{store}/ddsketch")),
+        "m4": (st.m4_batch_fn(f"{store}/m4", bucket_sec=3600),
+               lambda sp: st.m4_state(sp, f"{store}/m4", bucket_sec=3600)),
+        "grid": (st.grid_batch_fn(f"{store}/grid"),
+                 lambda sp: st.grid_state(sp, f"{store}/grid")),
+    }
+
+
+def _rows(df):
+    """``df`` as a pandas frame in a canonical row order."""
+    pdf = df.toPandas()
+    return pdf.sort_values(list(pdf.columns)).reset_index(drop=True)
+
+
+def _spark_jobs(spark, fn):
+    """Number of Spark jobs ``fn()`` starts."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("head", ["cms", "ddsketch", "m4", "grid"])
+def test_head_commit_and_state_read_job_counts(spark, tmp_path, head):
+    """A head commit is one collect of the partial (at most the AQE map
+    stage plus the collect; no isEmpty probe, no Spark writer job), and
+    building the merged-state relation runs no schema-inference job."""
+    fn, read = _heads(str(tmp_path))[head]
+    ev = _head_events(spark)
+    jobs = _spark_jobs(spark, lambda: fn(ev, 0))
+    assert 1 <= jobs <= 2
+    assert _spark_jobs(spark, lambda: read(spark)) == 0
+
+
+@pytest.mark.parametrize("head", ["cms", "ddsketch", "m4", "grid"])
+def test_head_replay_rewrites_one_identical_file(spark, tmp_path, head):
+    import hashlib
+    import os
+
+    fn, read = _heads(str(tmp_path))[head]
+    ev = _head_events(spark)
+    fn(ev, 3)
+    bdir = tmp_path / head / "batch=3"
+    assert os.listdir(bdir) == ["part-0.parquet"]
+    digest = hashlib.sha256((bdir / "part-0.parquet").read_bytes()).digest()
+    before = _rows(read(spark))
+    fn(ev, 3)
+    assert os.listdir(bdir) == ["part-0.parquet"]
+    assert hashlib.sha256((bdir / "part-0.parquet").read_bytes()).digest() == digest
+    assert sorted(os.listdir(tmp_path / head)) == ["batch=3"]
+    assert _rows(read(spark)).equals(before)
+
+
+@pytest.mark.parametrize("head", ["cms", "ddsketch", "m4", "grid"])
+def test_head_empty_batch_commits_nothing(spark, tmp_path, head):
+    import os
+
+    fn, read = _heads(str(tmp_path))[head]
+    ev = _head_events(spark)
+    fn(ev.limit(0), 0)
+    assert not os.path.exists(tmp_path / head)
+    empty = read(spark)
+    assert empty.count() == 0
+    fn(ev, 1)
+    fn(ev.limit(0), 2)
+    assert sorted(os.listdir(tmp_path / head)) == ["batch=1"]
+    assert read(spark).columns == empty.columns
+
+
+@pytest.mark.parametrize("head", ["cms", "ddsketch", "m4", "grid"])
+def test_head_ignores_and_replaces_crashed_commit(spark, tmp_path, head):
+    """A ``_tmp-batch=<id>`` left by a crash mid-commit is never read,
+    and the redelivery of that id replaces it."""
+    import os
+    import shutil
+
+    fn, read = _heads(str(tmp_path))[head]
+    b0, b1 = _head_events(spark), _head_events(spark, n=40, offset=1800)
+    fn(b0, 0)
+    only_first = _rows(read(spark))
+    fn(b1, 1)
+    want = _rows(read(spark))
+    assert not want.equals(only_first)
+    # the crash: batch 1's files were written but never swapped in
+    store = tmp_path / head
+    os.rename(store / "batch=1", store / "_tmp-batch=1")
+    shutil.copy(store / "_tmp-batch=1" / "part-0.parquet",
+                store / "_tmp-batch=1" / "part-1.parquet")
+    assert _rows(read(spark)).equals(only_first)
+    fn(b1, 1)  # the restart redelivers batch 1
+    assert sorted(os.listdir(store)) == ["batch=0", "batch=1"]
+    assert os.listdir(store / "batch=1") == ["part-0.parquet"]
+    assert _rows(read(spark)).equals(want)
+
+
 def test_streaming_holt_matches_batch_across_restart(spark, tmp_path):
     """Live Holt forecaster: an hour split across the batch boundary
     folds ONCE with its full count, gap hours fold as zeros, and after
