@@ -28,7 +28,9 @@ harmless and collectable).
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
+import operator
 import os
 import shutil
 import time
@@ -37,6 +39,7 @@ from collections.abc import Sequence
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 
@@ -275,38 +278,50 @@ class SnapshotTable:
         self,
         spark: SparkSession,
         df: DataFrame,
-        keys: list[str],
+        retire: Sequence[DataFrame],
         partition_by: list[str] | None = None,
     ) -> str:
-        """Upsert — Iceberg's ``MERGE INTO ... WHEN MATCHED THEN UPDATE
-        WHEN NOT MATCHED THEN INSERT`` for whole rows, as copy-on-write.
-        With ``partition_by`` the rewrite is PARTITION-SCOPED: only the
-        partitions the source rows land in are read back, anti-joined
-        on ``keys`` and rewritten; every untouched partition's files
-        are carried into the new snapshot as-is (the scalable CoW shape
-        — rewrite cost tracks the touched data, not the table).
+        """Upsert — Iceberg's ``MERGE INTO ... WHEN MATCHED THEN DELETE``
+        plus an insert of `df`, as one copy-on-write snapshot. A current
+        row is retired when it matches some frame of `retire` on all of
+        that frame's columns, whatever partition it sits in; then every
+        row of `df` is added. An empty table takes `df` as an append.
 
-        Requires ``partition_by`` to be a prefix-stable property of the
-        key (a row's partition never changes), as in Iceberg: otherwise
-        the old version of a moved row would survive in its previous
-        partition."""
-        from pyspark.sql import functions as F
-
+        With ``partition_by`` the rewrite is PARTITION-SCOPED: one
+        bounded collect finds the partitions `df` lands in and the data
+        files that hold a retired row; only those partitions are read
+        back (pruned on their values), stripped of retired rows and
+        rewritten with `df`. A partition whose rows are all retired
+        leaves the manifest; every other partition's files are carried
+        into the new snapshot as-is, so rewrite cost tracks the touched
+        data, not the table. Without it the whole table is rewritten."""
         log = self._load_log()
-        if not log:
+        if not (log and log[-1]["paths"]):
             return self.append(df, partition_by)
+
+        def upserted(rows: DataFrame) -> DataFrame:
+            for r in retire:
+                rows = rows.join(r, r.columns, "left_anti")
+            return rows.unionByName(df)
+
         current = self.read(spark)
-        if partition_by:
-            touched = df.select(*partition_by).distinct()
-            scoped = current.join(F.broadcast(touched), partition_by, "left_semi")
-            survivors = scoped.join(
-                df.select(*keys).distinct(), keys, "left_anti"
-            )
-            return self.overwrite_partitions(
-                survivors.unionByName(df), partition_by
-            )
-        survivors = current.join(df.select(*keys).distinct(), keys, "left_anti")
-        return self.overwrite(survivors.unionByName(df), partition_by)
+        if not partition_by:
+            return self.overwrite(upserted(current))
+        marked = current.withColumn("_merge_file", F.input_file_name())
+        hits = df.select(*partition_by, F.lit(None).cast("string").alias("_merge_file"))
+        for r in retire:
+            hits = hits.unionByName(
+                marked.join(r, r.columns, "left_semi").select(*partition_by, "_merge_file"))
+        touched = hits.distinct().collect()
+        in_scope = F.lit(False)
+        for part in {tuple(row[:-1]) for row in touched}:
+            in_scope |= functools.reduce(operator.and_, (
+                F.col(c).eqNullSafe(v) for c, v in zip(partition_by, part)))
+        # a partition that only lost rows writes nothing: name it too
+        holders = {self._partition_suffix(local_path(row[-1]))
+                   for row in touched if row[-1] is not None}
+        return self.overwrite_partitions(
+            upserted(current.filter(in_scope)), partition_by, also_replace=holders)
 
     # -------------------------------------------------------------- read
 

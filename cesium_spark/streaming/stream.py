@@ -29,7 +29,7 @@ __all__ = [
     "start_span_dedup_stream", "minhash_dedup_batch_fn",
     "start_minhash_dedup_stream", "ivf_index_batch_fn",
     "start_ivf_index_stream", "streaming_run_stats", "streaming_psi",
-    "contamination_batch_fn", "start_contamination_stream",
+    "contamination_batch_fn",
     "streaming_anomaly_zscore", "streaming_session_window",
     "hll_batch_fn", "hll_state_estimate",
     "cms_batch_fn", "cms_state_counters", "streaming_holt",
@@ -156,6 +156,25 @@ def streaming_partial_states(
     )
 
 
+def _start_available_now(spark, input_dir: str, schema, checkpoint_dir: str,
+                         sink, max_files_per_trigger: int | None = None):
+    """Stream the parquet files under `input_dir` through `sink` (a
+    function from the source DataFrame to its DataStreamWriter) with an
+    availableNow trigger: drains what exists, then stops — restartable
+    from `checkpoint_dir`. `max_files_per_trigger` caps the files per
+    micro-batch (Spark rejects a value below 1); None drains every
+    pending file in one batch. Returns the StreamingQuery."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return (
+        sink(reader.parquet(input_dir))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def start_file_stream(
     spark,
     input_dir: str,
@@ -169,15 +188,11 @@ def start_file_stream(
     """File-source streaming job: new parquet files under `input_dir`
     roll into append-mode parquet tier output. Returns the StreamingQuery
     (caller awaits/stops)."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    agg = streaming_rollup(src, tier=tier, watermark=watermark, **kwargs)
-    return (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_available_now(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda src: streaming_rollup(src, tier=tier, watermark=watermark, **kwargs)
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", output_dir),
     )
 
 
@@ -363,19 +378,19 @@ def start_session_stream(
     **kwargs,
 ):
     """File-source stateful sessionization job (availableNow trigger)."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_dir)
-    sess = streaming_sessionize(src, gap_minutes=gap_minutes, **kwargs)
-    return (
-        sess.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_available_now(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda src: streaming_sessionize(src, gap_minutes=gap_minutes, **kwargs)
+        .writeStream.outputMode("append").format("parquet")
+        .option("path", output_dir),
+        max_files_per_trigger,
     )
+
+
+def _bucket(col, n_buckets: int):
+    """Hash bucket of `col` in [0, n_buckets): the partition column of
+    the index heads' SnapshotTables."""
+    return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
 
 
 def span_dedup_batch_fn(
@@ -402,11 +417,11 @@ def span_dedup_batch_fn(
          retention horizon; the index suffices);
       3. upsert verdicts, then commit the index.
 
-    Both tables are hash-bucketed on their key (`pmod(xxhash64, n_buckets)`)
-    and maintained with PARTITION-level dynamic overwrite: a batch
-    rewrites only the buckets it touched — O(batch + touched buckets),
-    never O(corpus) — the plain-parquet stand-in for an Iceberg
-    MERGE INTO (sources/table.py docstring).
+    Both tables are hash-bucketed on their key (`_bucket`) and upserted
+    with `SnapshotTable.merge_rows`, which rewrites only the buckets a
+    batch touches — O(batch + touched buckets), never O(corpus). A
+    replayed id retires all its old index rows, even when its new text
+    yields no span.
 
     Crash/replay discipline (foreachBatch may redeliver a batch): all
     reads in a delivery see ONE index snapshot; verdicts commit BEFORE
@@ -425,9 +440,6 @@ def span_dedup_batch_fn(
     verd_table = SnapshotTable(os.path.join(store_root, "span_verdicts"))
     key_type = "string" if hash_fn == "md5" else "bigint"
 
-    def _bucket(col):
-        return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -435,11 +447,9 @@ def span_dedup_batch_fn(
 
         sp = batch_df.sparkSession
         id_type = dict(batch_df.dtypes)[id_col]
-        bootstrap = False
         try:
             idx = idx_table.read(sp)
         except FileNotFoundError:
-            bootstrap = True
             idx = sp.createDataFrame(
                 [], f"id {id_type}, key {key_type}, n bigint, bucket int"
             )
@@ -452,12 +462,11 @@ def span_dedup_batch_fn(
         new_ids = batch_df.select(F.col(id_col).alias("id")).distinct()
         fresh = idx.join(new_ids, "id", "left_anti")
         # cache the batch-derived relations for the batch duration:
-        # the verdict write, the bucket collects, and the index write
-        # would each re-tokenize/re-hash the batch text otherwise
-        # (~5 actions per micro-batch; review finding r5) — unpersisted
-        # before returning, so nothing outlives the batch
+        # each merge's bucket collect and write would re-tokenize/
+        # re-hash the batch text otherwise — unpersisted before
+        # returning, so nothing outlives the batch
         new_rows_b = new_rows.withColumn(
-            "bucket", _bucket(F.col("key"))
+            "bucket", _bucket(F.col("key"), n_buckets)
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
             post_index = fresh.select("id", "key", "n").unionByName(
@@ -470,47 +479,14 @@ def span_dedup_batch_fn(
                 id_col=id_col, round_digits=round_digits,
             )
             upserts = profiles.unionByName(aff_prof).withColumn(
-                "vbucket", _bucket(F.col(id_col))
+                "vbucket", _bucket(F.col(id_col), n_buckets)
             ).persist(StorageLevel.MEMORY_AND_DISK)
             try:
-                verd = verd_table.read(sp)
-                v_touched = sorted(
-                    r["vbucket"]
-                    for r in upserts.select("vbucket").distinct().collect()
-                )
-                up_ids = upserts.select(id_col).distinct()
-                keep = (
-                    verd.filter(F.col("vbucket").isin(v_touched))
-                    .join(up_ids, id_col, "left_anti")
-                )
-                verd_table.overwrite_partitions(
-                    keep.unionByName(upserts), ["vbucket"],
-                    also_replace={f"vbucket={b}" for b in v_touched},
-                )
-            except FileNotFoundError:
-                verd_table.overwrite(upserts, ["vbucket"])
+                verd_table.merge_rows(sp, upserts, [upserts.select(id_col)],
+                                      ["vbucket"])
             finally:
                 upserts.unpersist()
-
-            # ---- index maintenance: only touched buckets rewritten ----
-            if bootstrap:
-                idx_table.overwrite(new_rows_b, ["bucket"])
-                return
-            replaced = idx.join(new_ids, "id", "semi")
-            touched = sorted(
-                {r["bucket"] for r in
-                 new_rows_b.select("bucket").distinct().collect()}
-                | {r["bucket"] for r in
-                   replaced.select("bucket").distinct().collect()}
-            )
-            content = (
-                fresh.filter(F.col("bucket").isin(touched))
-                .unionByName(new_rows_b)
-            )
-            idx_table.overwrite_partitions(
-                content, ["bucket"],
-                also_replace={f"bucket={b}" for b in touched},
-            )
+            idx_table.merge_rows(sp, new_rows_b, [new_ids], ["bucket"])
         finally:
             new_rows_b.unpersist()
 
@@ -531,12 +507,10 @@ def start_span_dedup_stream(
     availableNow trigger: drains what exists, then stops — restartable
     from the checkpoint like every head in this module. Returns the
     StreamingQuery."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    return (
-        src.writeStream.foreachBatch(span_dedup_batch_fn(store_root, **kwargs))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_available_now(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda src: src.writeStream.foreachBatch(
+            span_dedup_batch_fn(store_root, **kwargs)),
     )
 
 
@@ -564,10 +538,10 @@ def minhash_dedup_batch_fn(
     (incremental_minhash_pairs); replayed ids REPLACE their index rows
     AND retire every stale pair they touch.
 
-    Storage discipline mirrors the span head: both tables hash-bucketed,
-    partition-level dynamic overwrite (only touched buckets rewritten),
-    pair table committed BEFORE the index so a foreachBatch redelivery
-    converges from either commit point."""
+    Storage mirrors the span head: both tables hash-bucketed and
+    upserted with `SnapshotTable.merge_rows`, the pair table committed
+    BEFORE the index so a foreachBatch redelivery converges from either
+    commit point."""
     import os
 
     from ..operators.dedup import incremental_minhash_pairs
@@ -577,9 +551,6 @@ def minhash_dedup_batch_fn(
     pairs_table = SnapshotTable(os.path.join(store_root, "dup_pairs"))
     key_type = "string" if hash_fn == "md5" else "bigint"
 
-    def _bucket(col):
-        return F.pmod(F.xxhash64(col), F.lit(n_buckets)).cast("int")
-
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
@@ -587,11 +558,9 @@ def minhash_dedup_batch_fn(
 
         sp = batch_df.sparkSession
         id_type = dict(batch_df.dtypes)[id_col]
-        bootstrap = False
         try:
             idx = idx_table.read(sp)
         except FileNotFoundError:
-            bootstrap = True
             idx = sp.createDataFrame(
                 [], f"id {id_type}, band int, key {key_type}, bucket int"
             )
@@ -602,64 +571,21 @@ def minhash_dedup_batch_fn(
             hash_fn=hash_fn,
         )
         new_ids = batch_df.select(F.col(id_col).alias("id")).distinct()
-        fresh = idx.join(new_ids, "id", "left_anti")
         new_rows_b = new_rows.withColumn(
-            "bucket", _bucket(F.col("key"))
+            "bucket", _bucket(F.col("key"), n_buckets)
         ).persist(StorageLevel.MEMORY_AND_DISK)
         new_pairs_b = new_pairs.withColumn(
-            "pbucket", _bucket(F.col("id_a"))
+            "pbucket", _bucket(F.col("id_a"), n_buckets)
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            # ---- pair-table maintenance (commit FIRST) ----
-            ids_a = new_ids.withColumnRenamed("id", "id_a")
-            ids_b = new_ids.withColumnRenamed("id", "id_b")
-            try:
-                pr = pairs_table.read(sp)
-                # a replayed id retires EVERY pair it touches, on
-                # either side — collect the (<= n_buckets) buckets
-                # holding new or stale rows and rewrite only those
-                touched = sorted(
-                    {r["pbucket"] for r in
-                     new_pairs_b.select("pbucket").distinct().collect()}
-                    | {r["pbucket"] for r in
-                       pr.join(ids_a, "id_a", "semi")
-                       .select("pbucket").distinct().collect()}
-                    | {r["pbucket"] for r in
-                       pr.join(ids_b, "id_b", "semi")
-                       .select("pbucket").distinct().collect()}
-                )
-                keep = (
-                    pr.filter(F.col("pbucket").isin(touched))
-                    .join(ids_a, "id_a", "left_anti")
-                    .join(ids_b, "id_b", "left_anti")
-                    .select("id_a", "id_b", "matching_bands", "pbucket")
-                )
-                pairs_table.overwrite_partitions(
-                    keep.unionByName(new_pairs_b), ["pbucket"],
-                    also_replace={f"pbucket={b}" for b in touched},
-                )
-            except FileNotFoundError:
-                pairs_table.overwrite(new_pairs_b, ["pbucket"])
-
-            # ---- band-index maintenance ----
-            if bootstrap:
-                idx_table.overwrite(new_rows_b, ["bucket"])
-                return
-            replaced = idx.join(new_ids, "id", "semi")
-            touched_i = sorted(
-                {r["bucket"] for r in
-                 new_rows_b.select("bucket").distinct().collect()}
-                | {r["bucket"] for r in
-                   replaced.select("bucket").distinct().collect()}
+            # pairs commit FIRST (see docstring); a replayed id retires
+            # every pair it sits in, on either side
+            pairs_table.merge_rows(
+                sp, new_pairs_b,
+                [new_ids.withColumnRenamed("id", side) for side in ("id_a", "id_b")],
+                ["pbucket"],
             )
-            content = (
-                fresh.filter(F.col("bucket").isin(touched_i))
-                .unionByName(new_rows_b)
-            )
-            idx_table.overwrite_partitions(
-                content, ["bucket"],
-                also_replace={f"bucket={b}" for b in touched_i},
-            )
+            idx_table.merge_rows(sp, new_rows_b, [new_ids], ["bucket"])
         finally:
             new_rows_b.unpersist()
             new_pairs_b.unpersist()
@@ -679,13 +605,10 @@ def start_minhash_dedup_stream(
     under `input_dir` update the band index and the near-dup candidate
     pair table under `store_root` micro-batch by micro-batch
     (minhash_dedup_batch_fn). Returns the StreamingQuery."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    return (
-        src.writeStream
-        .foreachBatch(minhash_dedup_batch_fn(store_root, **kwargs))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_available_now(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda src: src.writeStream.foreachBatch(
+            minhash_dedup_batch_fn(store_root, **kwargs)),
     )
 
 
@@ -708,10 +631,10 @@ def ivf_index_batch_fn(
     foreachBatch redelivery re-reads the same centroids instead of
     retraining on different data. Every batch then assigns its vectors
     with one broadcast-centroid Arrow pass (extend_ivf_index) and
-    rewrites ONLY the touched list partitions: a replayed id is
-    upserted, and if a re-ingested vector CHANGED (assignment moved
-    lists), its stale row's old partition is rewritten too — the
-    moved-row case a naive partition-scoped upsert would leak.
+    upserts them with `SnapshotTable.merge_rows`, which rewrites ONLY
+    the touched list partitions: a replayed id is retired wherever it
+    sits, so a re-ingested vector whose assignment moved lists leaves
+    no stale row in its old list.
 
     Invariant (tested): after every micro-batch the table equals
     extend_ivf_index(latest version of every ingested vector, cents).
@@ -742,42 +665,19 @@ def ivf_index_batch_fn(
         )
         if os.path.exists(cents_path):
             cents = np.load(cents_path)
-            bootstrap = False
         else:
             sample = _driver_sample(deduped, id_col, vec_col, train_sample)
             cents = _kmeans_centroids(sample, n_lists, seed)
             tmp = cents_path + ".tmp.npy"
             np.save(tmp, cents)
             os.replace(tmp, cents_path)
-            bootstrap = True
 
         rows = extend_ivf_index(deduped, cents, id_col=id_col,
                                 vec_col=vec_col).localCheckpoint(eager=True)
-        if bootstrap:
-            idx_table.overwrite(rows, ["list_id"])
-            return
-        try:
-            idx = idx_table.read(sp)
-        except FileNotFoundError:
-            # centroids committed but the bootstrap write didn't land
-            # (crash window): this redelivery IS the bootstrap write
-            idx_table.overwrite(rows, ["list_id"])
-            return
-        new_ids = rows.select(F.col("neighbor_id")).distinct()
-        stale = idx.join(new_ids, "neighbor_id", "semi")
-        touched = sorted(
-            {r["list_id"] for r in rows.select("list_id").distinct().collect()}
-            | {r["list_id"] for r in stale.select("list_id").distinct().collect()}
-        )
-        content = (
-            idx.filter(F.col("list_id").isin(touched))
-            .join(new_ids, "neighbor_id", "left_anti")
-            .unionByName(rows)
-        )
-        idx_table.overwrite_partitions(
-            content, ["list_id"],
-            also_replace={f"list_id={b}" for b in touched},
-        )
+        # an empty table (bootstrap, or centroids committed but the
+        # bootstrap write lost to a crash) takes the rows as an append
+        idx_table.merge_rows(sp, rows, [rows.select("neighbor_id")],
+                             ["list_id"])
 
     return _apply
 
@@ -798,16 +698,11 @@ def start_ivf_index_stream(
     without it an availableNow start drains every pending file in ONE
     batch (i.e. pre-staged multi-file tests would only exercise the
     bootstrap path)."""
-    src = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        src = src.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = src.parquet(input_dir)
-    return (
-        src.writeStream
-        .foreachBatch(ivf_index_batch_fn(store_root, **kwargs))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return _start_available_now(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda src: src.writeStream.foreachBatch(
+            ivf_index_batch_fn(store_root, **kwargs)),
+        max_files_per_trigger,
     )
 
 
@@ -1043,8 +938,8 @@ def contamination_batch_fn(
 
     Invariant (tested): after every micro-batch, verdicts ==
     ngram_contamination(latest version of every ingested doc, test).
-    Storage mirrors the other heads: hash-bucketed by id, only touched
-    buckets rewritten per batch."""
+    Storage mirrors the other heads: hash-bucketed by id and upserted
+    with `SnapshotTable.merge_rows`."""
     import os
 
     from ..operators.dedup import ngram_contamination
@@ -1072,57 +967,14 @@ def contamination_batch_fn(
             latest, test, id_col=id_col, text_col=text_col, n=n,
             hash_fn=hash_fn,
         ).withColumn(
-            "bucket", F.pmod(F.xxhash64(F.col(id_col).cast("string")),
-                             F.lit(n_buckets)).cast("int")
+            "bucket", _bucket(F.col(id_col).cast("string"), n_buckets)
         ).persist(StorageLevel.MEMORY_AND_DISK)
         try:
-            new_ids = prof.select(id_col).distinct()
-            try:
-                cur = table.read(sp)
-                touched = sorted(
-                    {r["bucket"] for r in
-                     prof.select("bucket").distinct().collect()}
-                    | {r["bucket"] for r in
-                       cur.join(new_ids, id_col, "semi")
-                       .select("bucket").distinct().collect()}
-                )
-                keep = (
-                    cur.filter(F.col("bucket").isin(touched))
-                    .join(new_ids, id_col, "left_anti")
-                )
-                table.overwrite_partitions(
-                    keep.unionByName(prof), ["bucket"],
-                    also_replace={f"bucket={b}" for b in touched},
-                )
-            except FileNotFoundError:
-                table.overwrite(prof, ["bucket"])
+            table.merge_rows(sp, prof, [prof.select(id_col)], ["bucket"])
         finally:
             prof.unpersist()
 
     return _apply
-
-
-def start_contamination_stream(
-    spark,
-    input_dir: str,
-    store_root: str,
-    checkpoint_dir: str,
-    schema,
-    test: DataFrame,
-    **kwargs,
-):
-    """File-source streaming decontamination: new parquet training-doc
-    files under `input_dir` are screened against the frozen `test` set
-    micro-batch by micro-batch (contamination_batch_fn); verdicts
-    accumulate under `store_root`. Returns the StreamingQuery."""
-    src = spark.readStream.schema(schema).parquet(input_dir)
-    return (
-        src.writeStream
-        .foreachBatch(contamination_batch_fn(store_root, test, **kwargs))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 def streaming_anomaly_zscore(

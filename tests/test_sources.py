@@ -75,9 +75,8 @@ def test_snapshot_table_rollback_expire_and_merge(spark, tmp_path):
     t.overwrite(_df(spark, [(1, "a", 1.0), (2, "b", 2.0), (7, "c", 7.0)]),
                 partition_by=["part"])
     paths_before = {p for p in t.snapshots()[-1]["paths"] if "part=c" in p}
-    t.merge_rows(spark,
-                 _df(spark, [(1, "a", 111.0), (5, "b", 5.0)]),
-                 keys=["k"], partition_by=["part"])
+    up = _df(spark, [(1, "a", 111.0), (5, "b", 5.0)])
+    t.merge_rows(spark, up, retire=[up.select("k")], partition_by=["part"])
     cur = t.read(spark).toPandas().sort_values("k").reset_index(drop=True)
     assert list(cur["k"]) == [1, 2, 5, 7]
     assert cur.loc[0, "v"] == 111.0
@@ -104,11 +103,31 @@ def test_snapshot_table_merge_unpartitioned_and_empty(spark, tmp_path):
     """merge_rows on an empty table degrades to append; unpartitioned
     merge rewrites the whole table (documented CoW cost)."""
     t = SnapshotTable(str(tmp_path / "tbl"))
-    t.merge_rows(spark, _df(spark, [(1, "a", 1.0)]), keys=["k"])
+    first = _df(spark, [(1, "a", 1.0)])
+    t.merge_rows(spark, first, retire=[first.select("k")])
     assert t.read(spark).toPandas()["k"].tolist() == [1]
-    t.merge_rows(spark, _df(spark, [(1, "a", 2.0), (2, "b", 2.0)]), keys=["k"])
+    up = _df(spark, [(1, "a", 2.0), (2, "b", 2.0)])
+    t.merge_rows(spark, up, retire=[up.select("k")])
     cur = t.read(spark).toPandas().sort_values("k")
     assert list(cur["k"]) == [1, 2] and cur.iloc[0]["v"] == 2.0
+
+
+def test_merge_rows_moved_key_drops_stale_row_and_emptied_partition(spark, tmp_path):
+    """A retired key whose new row lands in another partition: the stale
+    copy goes, and the partition it leaves empty drops out of the
+    manifest; an untouched partition keeps its files."""
+    t = SnapshotTable(str(tmp_path / "tbl"))
+    t.append(_df(spark, [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)]),
+             partition_by=["part"])
+    kept_c = {p for p in t.snapshots()[-1]["paths"] if "part=c" in p}
+    moved = _df(spark, [(1, "b", 10.0)])
+    t.merge_rows(spark, moved, retire=[moved.select("k")], partition_by=["part"])
+    cur = t.read(spark).toPandas().sort_values("k").reset_index(drop=True)
+    assert list(zip(cur["k"], cur["part"], cur["v"])) == [
+        (1, "b", 10.0), (2, "b", 2.0), (3, "c", 3.0)]
+    paths = t.snapshots()[-1]["paths"]
+    assert not [p for p in paths if "part=a" in p]
+    assert {p for p in paths if "part=c" in p} == kept_c
 
 
 def _file_per_group(spark, groups):

@@ -179,6 +179,23 @@ def test_sessionize_event_time_timeout_closes_trailing_session(spark, tmp_path):
     assert set(got.conv_id) == {"a"}
 
 
+def test_session_stream_rejects_zero_max_files_per_trigger(spark, tmp_path):
+    """max_files_per_trigger=0 reaches Spark, which fails the query,
+    instead of silently draining every file in one batch."""
+    from cesium_spark.sources.transcripts import TRANSCRIPT_SCHEMA
+    from cesium_spark.streaming.stream import start_session_stream
+
+    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    spark.createDataFrame(
+        [("c", 0, "user", "x", "", pd.Timestamp("2025-03-01").to_pydatetime())],
+        TRANSCRIPT_SCHEMA,
+    ).write.parquet(in_dir)
+    with pytest.raises(Exception, match="maxFilesPerTrigger"):
+        q = start_session_stream(spark, in_dir, out_dir, ckpt, TRANSCRIPT_SCHEMA,
+                                 max_files_per_trigger=0)
+        q.awaitTermination(120)
+
+
 def test_streaming_exact_dedup_first_seen(spark, tmp_path):
     """Duplicates arriving in LATER micro-batches (within the watermark)
     are dropped; distinct texts all survive exactly once."""
@@ -286,6 +303,7 @@ def test_streaming_span_dedup_availablenow_restart(spark, tmp_path):
         (2, "unique words only here nothing shared at all"),
         (3, SPAN + " other tail words"),
         (4, "short text"),                      # < k tokens: 0 spans
+        (7, "seven owns these nine tokens and shares none of them"),
     ]
     schema = "doc_id long, text string"
     spark.createDataFrame(batch1, schema).coalesce(1) \
@@ -294,6 +312,9 @@ def test_streaming_span_dedup_availablenow_restart(spark, tmp_path):
     q = start_span_dedup_stream(spark, in_dir, store, ckpt, schema,
                                 k=8, n_buckets=8)
     q.awaitTermination(120)
+    idx_ids = SnapshotTable(f"{store}/span_index").read(spark) \
+        .select("id").distinct().toPandas()["id"]
+    assert 7 in set(idx_ids)
 
     verd = SnapshotTable(f"{store}/span_verdicts")
     got1 = verd.read(spark).drop("vbucket").toPandas() \
@@ -306,11 +327,13 @@ def test_streaming_span_dedup_availablenow_restart(spark, tmp_path):
 
     # batch 2: replay doc 1 WITHOUT the span (downward crossing for
     # doc 3), duplicate doc 2's text (upward crossing for doc 2), one
-    # fresh unique doc
+    # fresh unique doc, and replay doc 7 with fewer than k tokens (no
+    # new span rows, yet its old index rows must go)
     batch2 = [
         (1, "replayed text now totally different from before honestly"),
         (5, "unique words only here nothing shared at all plus extra"),
         (6, "a genuinely fresh document with eight plus tokens inside"),
+        (7, "now too short"),
     ]
     spark.createDataFrame(batch2, schema).coalesce(1) \
         .write.mode("append").parquet(in_dir)
@@ -338,6 +361,7 @@ def test_streaming_span_dedup_availablenow_restart(spark, tmp_path):
     want_idx = span_index_rows(corpus, k=8).toPandas() \
         .sort_values(["id", "key"]).reset_index(drop=True)
     pd.testing.assert_frame_equal(idx, want_idx, check_dtype=False)
+    assert 7 not in set(idx.id)
 
 
 def test_streaming_minhash_dedup_availablenow_restart(spark, tmp_path):
