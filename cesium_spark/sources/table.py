@@ -137,16 +137,29 @@ class SnapshotTable:
             return paths
         return [dest]
 
+    def _commit(self, paths: list[str], operation: str, parent: list[dict],
+                df: DataFrame, partition_by: list[str] | None) -> str:
+        """Commit a write of `df`. A write that leaves the snapshot with
+        no entry (a partitioned write of no rows lands no file) records
+        `df`'s schema, partition columns last as a read returns them."""
+        schema = None
+        if not paths:
+            parts = list(partition_by or ())
+            schema = StructType(
+                [f for f in df.schema if f.name not in parts] + [df.schema[c] for c in parts]
+            ).jsonValue()
+        return self._append_snapshot(paths, operation, parent, schema)
+
     def append(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
         log = self._load_log()
         prev = log[-1]["paths"] if log else []
         new_paths = self._write_data(df, partition_by)
-        return self._append_snapshot(prev + new_paths, "append", log)
+        return self._commit(prev + new_paths, "append", log, df, partition_by)
 
     def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> str:
         log = self._load_log()
         new_paths = self._write_data(df, partition_by)
-        return self._append_snapshot(new_paths, "overwrite", log)
+        return self._commit(new_paths, "overwrite", log, df, partition_by)
 
     def overwrite_partitions(
         self,
@@ -168,7 +181,7 @@ class SnapshotTable:
         new_paths = self._write_data(df, partition_by)
         replaced = {self._partition_suffix(p) for p in new_paths} | set(also_replace or ())
         kept = [p for p in prev if self._partition_suffix(p) not in replaced]
-        return self._append_snapshot(kept + new_paths, "overwrite_partitions", log)
+        return self._commit(kept + new_paths, "overwrite_partitions", log, df, partition_by)
 
     # ------------------------------------------------------- maintenance
 

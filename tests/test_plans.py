@@ -114,46 +114,6 @@ def test_token_topk_plan_is_distributed_topk(spark):
     assert "TakeOrderedAndProject" in phys
 
 
-def test_bucketed_join_and_agg_have_no_exchange(spark, tmp_path):
-    """Bucketing pays the series-key shuffle once at write time: a join
-    of two tables bucketed by the same key/count, and a groupBy on the
-    bucket key, must both plan with ZERO Exchange nodes."""
-    import pandas as pd
-    from cesium_spark.datagen import generate_transcripts
-    from cesium_spark.sources.bucketed import bucketed_table, write_bucketed
-
-    tr = generate_transcripts(spark, n_convs=8, seed=9)
-    meta = tr.select("conv_id").distinct().withColumn(
-        "segment", F.length("conv_id") % 3)
-    try:
-        write_bucketed(tr, "tr_b", "conv_id", 4, sort_cols=["conv_id", "ts"],
-                       path=str(tmp_path / "tr_b"))
-        write_bucketed(meta, "meta_b", "conv_id", 4,
-                       path=str(tmp_path / "meta_b"))
-        a, b = bucketed_table(spark, "tr_b"), bucketed_table(spark, "meta_b")
-
-        old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = a.join(b, "conv_id")
-            phys = joined._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in phys  # co-located join, no shuffle
-            assert joined.count() == tr.count()
-
-            agg = a.groupBy("conv_id").agg(F.count("*").alias("n"))
-            phys2 = agg._jdf.queryExecution().executedPlan().toString()
-            assert "Exchange" not in phys2  # bucket key pre-partitions
-            got = agg.toPandas().sort_values("conv_id").reset_index(drop=True)
-            want = tr.groupBy("conv_id").agg(F.count("*").alias("n")) \
-                .toPandas().sort_values("conv_id").reset_index(drop=True)
-            pd.testing.assert_frame_equal(got, want)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    finally:
-        spark.sql("DROP TABLE IF EXISTS tr_b")
-        spark.sql("DROP TABLE IF EXISTS meta_b")
-
-
 def test_dup_spans_plan_pruned_and_skew_safe(spark, tmp_path):
     """duplicate_token_spans: parquet scan pruned to (id, text) only,
     and the hot-span count is a groupBy (partial agg absorbs unbounded

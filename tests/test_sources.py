@@ -1,5 +1,5 @@
-"""Snapshot-table shim (append / dynamic overwrite / time travel), the
-reference-format CSV reader, and multimodal plumbing."""
+"""Snapshot-table shim (append / dynamic overwrite / time travel) and the
+reference-format CSV reader."""
 
 import glob
 import os
@@ -11,12 +11,6 @@ from pyspark.sql import functions as F
 
 from cesium_spark.sources.table import SnapshotTable
 from cesium_spark.sources.transcripts import read_ts_csv
-from cesium_spark.operators.multimodal import (
-    attach_media_metadata,
-    dedup_media_exact,
-    extract_features,
-    MEDIA_FEATURE_DIM,
-)
 
 
 def _df(spark, rows):
@@ -130,6 +124,26 @@ def test_merge_rows_moved_key_drops_stale_row_and_emptied_partition(spark, tmp_p
     assert {p for p in paths if "part=c" in p} == kept_c
 
 
+def test_empty_partitioned_writes_read_back_empty(spark, tmp_path):
+    """A partitioned write of no rows lands no data file. Through append
+    and through merge_rows' bootstrap of a new table, the snapshot keeps
+    the written schema, partition column last as a non-empty read has it,
+    and reads as an empty table."""
+    empty = spark.createDataFrame([], "k long, part string, v double")
+    t = SnapshotTable(str(tmp_path / "appended"))
+    t.append(empty, partition_by=["part"])
+    u = SnapshotTable(str(tmp_path / "merged"))
+    u.merge_rows(spark, empty, retire=[empty.select("k")], partition_by=["part"])
+    for tbl in (t, u):
+        got = tbl.read(spark)
+        assert got.dtypes == [("k", "bigint"), ("v", "double"), ("part", "string")]
+        assert got.count() == 0
+
+    t.append(_df(spark, [(1, "a", 1.0)]), partition_by=["part"])
+    assert "schema" not in t.snapshots()[-1]
+    assert t.read(spark).columns == ["k", "v", "part"]
+
+
 def _file_per_group(spark, groups):
     """One written data file per group of rows."""
     rows = [(*r, g) for g, grp in enumerate(groups) for r in grp]
@@ -188,34 +202,6 @@ def test_read_ts_csv_matches_reference_parse(spark, tmp_path):
     p2.write_text("1.0,10.0\n2.0,11.0\n")
     df2 = read_ts_csv(spark, str(p2)).toPandas()
     assert (df2["e"] == 1e-4).all()
-
-
-@pytest.fixture()
-def media(spark):
-    rows = [
-        (1, "image/png", bytearray(b"payload-one"), 8, 8, None),
-        (2, "image/png", bytearray(b"payload-one"), 8, 8, None),  # exact dup of 1
-        (3, "audio/wav", bytearray(b"other"), None, None, 1200),
-    ]
-    return spark.createDataFrame(
-        rows, "media_id long, media_type string, payload binary, width int, height int, duration_ms int"
-    )
-
-
-def test_media_metadata_and_exact_dedup(spark, media):
-    meta = attach_media_metadata(media).toPandas()
-    assert list(meta["n_bytes"]) == [11, 11, 5]
-    groups = dedup_media_exact(media).toPandas().sort_values("keeper_id")
-    assert list(groups["group_size"]) == [2, 1]
-    assert list(groups["keeper_id"]) == [1, 3]
-
-
-def test_media_feature_extraction_stub(spark, media):
-    feats = extract_features(media).toPandas().set_index("media_id")
-    assert all(len(v) == MEDIA_FEATURE_DIM for v in feats["features"])
-    # deterministic: same payload -> same features; different -> different
-    np.testing.assert_array_equal(feats.loc[1, "features"], feats.loc[2, "features"])
-    assert not np.array_equal(feats.loc[1, "features"], feats.loc[3, "features"])
 
 
 def test_featurize_csv_series_matches_golden(spark):
