@@ -1,20 +1,20 @@
-"""Spark featurization kernel: cesium's per-series feature evaluation as a
-vectorized ``groupBy(...).applyInPandas(...)`` over a long-format
-transcript/event DataFrame.
+"""Spark featurization kernel: cesium's per-series feature evaluation as
+vectorized numpy over a long-format transcript/event DataFrame, run by
+``mapInPandas`` after one shuffle on the group key.
 
 Parallelism model (mirrors the reference's design, SURVEY.md §3.3-3.4):
-one Spark task group = one (series [, window]) = one serial numpy kernel
-invocation; Spark supplies cross-series parallelism, Arrow supplies
+one (series [, window]) group = one serial numpy evaluation, many groups
+per Arrow batch; Spark supplies cross-series parallelism, Arrow supplies
 zero-copy JVM->pandas transfer. No per-row Python anywhere.
 
-Determinism: within each group rows are stably sorted by
-(t, tiebreak) before any feature is computed — the stable
+Determinism: within each group rows are sorted by (t, tiebreak) in the
+shuffle's secondary sort, before any feature is computed — the stable
 (conv_id, turn_idx) ordering the north rule requires (the reference sorts
 by t alone with a non-stable quicksort; we document the stronger
 tie-broken ordering and use it everywhere).
 
 Scale notes (100 TB):
-  - the groupBy shuffles once on the group key; tier windows bound group
+  - the kernel shuffles once on the group key; tier windows bound group
     size, so no group outgrows one task even for hot conversations;
   - for whole-conversation featurization of extreme series, use
     operators.aggstate (mergeable two-phase aggregation) for the mergeable
@@ -40,7 +40,7 @@ SECONDS_PER_DAY = 86400.0
 
 __all__ = [
     "featurize", "featurize_multichannel", "attach_meta_features",
-    "make_kernel", "ts_micros", "DEFAULT_ERROR_VALUE", "SECONDS_PER_DAY",
+    "ts_micros", "DEFAULT_ERROR_VALUE", "SECONDS_PER_DAY",
 ]
 
 
@@ -49,38 +49,6 @@ def ts_micros(col: Column) -> Column:
     inputs (cast is value-identity under the engine's fixed UTC session
     timezone, see session.py)."""
     return F.unix_micros(col.cast("timestamp"))
-
-
-def make_kernel(
-    features: Sequence[str],
-    key_cols: Sequence[str],
-    custom_functions: Mapping[str, Callable] | None = None,
-    raise_exceptions: bool = False,
-    const_e: float | None = None,
-) -> Callable[[pd.DataFrame], pd.DataFrame]:
-    """Build the applyInPandas function: one output row per group with the
-    group keys followed by one float64 column per feature.
-
-    Expects input columns: ``key_cols + ['t', 'm', 'e', '_ord']`` where t is
-    float64 in the kernel's time unit and _ord is the stable tiebreaker.
-    """
-    features = list(features)
-
-    def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["t", "_ord"], kind="stable")
-        t = pdf["t"].to_numpy(dtype=np.float64)
-        m = pdf["m"].to_numpy(dtype=np.float64)
-        e = (np.full(len(pdf), const_e, dtype=np.float64)
-             if const_e is not None else pdf["e"].to_numpy(dtype=np.float64))
-        vals = compute_features(
-            t, m, e, features, custom_functions=custom_functions,
-            raise_exceptions=raise_exceptions,
-        )
-        row = {k: [pdf[k].iloc[0]] for k in key_cols}
-        row.update({name: [vals[name]] for name in features})
-        return pd.DataFrame(row)
-
-    return _kernel
 
 
 def iter_group_frames(batches, keys: Sequence[str]):
@@ -217,7 +185,6 @@ def featurize(
     window: str | None = None,
     time_unit_seconds: float = SECONDS_PER_DAY,
     custom_functions: Mapping[str, Callable] | None = None,
-    strategy: str = "batched",
     num_partitions: int | None = None,
     raise_exceptions: bool = False,
 ) -> DataFrame:
@@ -238,11 +205,6 @@ def featurize(
         (/root/reference/cesium/featurize.py:76-95,156): a feature (most
         relevantly a custom callable) that throws yields NaN for its
         column by default; True re-raises inside the task instead.
-    strategy : "batched" (default) shuffles once on the group key with a
-        secondary sort and evaluates many groups per Arrow batch via
-        mapInPandas — the scale path; "grouped" uses plain
-        groupBy().applyInPandas() (reference semantics, ~15 ms/group
-        dispatch overhead — only sensible for few, large groups).
     """
     features = list(features)
     cols, const_e = kernel_columns(key_col, ts_col, tiebreak_col, m, e, t,
@@ -258,12 +220,8 @@ def featurize(
     out_fields += [StructField(name, DoubleType(), True) for name in features]
     schema = StructType(out_fields)
 
-    if strategy == "grouped":
-        kernel = make_kernel(features, key_cols, custom_functions,
-                             raise_exceptions, const_e)
-        return narrow.groupBy(*key_cols).applyInPandas(kernel, schema=schema)
-
-    # default "batched": whole-batch numpy evaluation, no per-group dispatch
+    # one shuffle on the group key plus a secondary sort, then many groups
+    # per Arrow batch: no per-group Python dispatch
     mapper = make_batch_kernel(features, key_cols, custom_functions,
                                raise_exceptions, const_e)
     return map_sorted_groups(narrow, key_cols, mapper, schema, num_partitions)

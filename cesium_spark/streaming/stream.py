@@ -1,23 +1,40 @@
-"""Structured Streaming rollup: the tier pipeline as a continuous query.
+"""Structured Streaming heads: the engine's relations as continuous
+queries, for deployments that want push-based ingestion. The
+batch-incremental path (operators/incremental.py + lineage checkpoints)
+stays the primary ingestion mode; most heads here are the live twin of
+a batch operator and are tested against it. Three families:
 
-The batch-incremental path (operators/incremental.py + lineage
-checkpoints) is the engine's primary ingestion mode per the north rule;
-this module additionally exposes the same tier semantics as a native
-Structured Streaming job for deployments that want push-based ingestion:
-
-  readStream (file/kafka source) -> event-time tumbling window aggregates
-  with a watermark for late data -> append-mode sink.
-
-Only mergeable aggregates run in the streaming path (Spark's streaming
-aggregation state is exactly our partial-state algebra); non-mergeable
-features are produced by the batch kernel over closed windows downstream
-(the `complete/dirty` flag pattern from SURVEY.md §7 risk 4).
+  - Windowed aggregates (`streaming_rollup`, `streaming_partial_states`,
+    `streaming_session_window`; `streaming_exact_dedup` is the same kind
+    of watermarked Spark operator): their state is Spark's own streaming
+    state, evicted by the watermark. Only mergeable aggregates run here;
+    non-mergeable features come from the batch kernel over closed
+    windows downstream (the `complete/dirty` flag pattern from SURVEY.md
+    §7 risk 4).
+  - Keyed-state heads: one carried state tuple per key, folded over each
+    micro-batch by `applyInPandasWithState`. Eleven of them share the
+    frame `_keyed_state_head` and supply only a narrow projection, their
+    state and output fields, and a pure fold step. `streaming_sessionize`
+    (event-time timeout, several closed sessions per batch) is written
+    out by hand.
+  - foreachBatch store heads (`*_batch_fn`): each micro-batch is merged
+    into a store on disk, a SnapshotTable for the index, verdict and HLL
+    heads and one partial per batch directory for the sum-merged
+    sketches.
 """
-
 from __future__ import annotations
 
+import math
+import re
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, BooleanType, DoubleType, IntegerType, LongType, StringType,
+    StructField, StructType, TimestampType,
+)
 
 from ..kernel import SECONDS_PER_DAY, ts_micros
 from .rollup_schema import STREAM_ROLLUP_COLUMNS
@@ -34,6 +51,8 @@ __all__ = [
     "hll_batch_fn", "hll_state_estimate",
     "cms_batch_fn", "cms_state_counters", "streaming_holt",
     "streaming_markov_nll", "streaming_gap_deltas", "streaming_funnel",
+    "streaming_pattern_counts", "streaming_page_hinkley",
+    "streaming_holt_winters", "streaming_lateness",
     "ddsketch_batch_fn", "ddsketch_state_buckets",
     "m4_batch_fn", "m4_state",
     "grid_batch_fn", "grid_state",
@@ -260,12 +279,6 @@ def streaming_sessionize(
     batch's sorted event times merged with the carried state) — the
     Python boundary stays Arrow-batched, no per-row loop.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType, TimestampType,
-    )
-
     gap_us = int(gap_minutes) * 60 * 1_000_000
     out_schema = StructType([
         StructField(key_col, StringType()),
@@ -642,8 +655,6 @@ def ivf_index_batch_fn(
     relative); retrain = a new store_root when drift degrades recall."""
     import os
 
-    import numpy as np
-
     from ..operators.similarity import _driver_sample, _kmeans_centroids, extend_ivf_index
     from ..sources.table import SnapshotTable
 
@@ -706,6 +717,94 @@ def start_ivf_index_stream(
     )
 
 
+def _round(v, digits: int = 6):
+    """round(v + 1e-9, digits): the batch operators' rounding, Python side."""
+    return round(v + 1e-9, digits)
+
+
+# in-batch order of the event heads: event time, then the tiebreak id
+_TS_ORDER = ["_ts_us", "_tb"]
+
+
+def _keyed_state_head(narrow: DataFrame, key_col: str, order_cols,
+                      state_schema: StructType, out_fields, step):
+    """The one `applyInPandasWithState` frame of the keyed-state heads:
+    `narrow` grouped by `key_col`, append mode.
+
+    Per key and micro-batch the key's rows are concatenated (a key with
+    no rows is skipped) and sorted by `order_cols` (None keeps them
+    unsorted, for order-free folds), then
+    ``step(state, pdf) -> (new_state, out)`` runs with the carried state
+    tuple, or None for a key seen for the first time. A non-None
+    `new_state` replaces the state; `out`, a {column: list} dict in
+    `out_fields` order (or None), is emitted with the key column
+    prepended. The output schema is (key_col, *out_fields), the key
+    typed as in `narrow`.
+
+    State is one row per key ever seen and nothing evicts it (NoTimeout):
+    it grows with the key population, not with the stream. Heads whose
+    fold is order-dependent assume per-key in-order delivery ACROSS
+    batches — a row older than the carried state in a later batch is
+    folded as current."""
+    out_schema = StructType(
+        [StructField(key_col, narrow.schema[key_col].dataType), *out_fields]
+    )
+
+    def fn(key, pdfs, state):
+        parts = [p for p in pdfs if len(p)]
+        if not parts:
+            return
+        pdf = pd.concat(parts)
+        if order_cols:
+            pdf = pdf.sort_values(order_cols)
+        new_state, out = step(state.get if state.exists else None, pdf)
+        if new_state is not None:
+            state.update(new_state)
+        if out:
+            n = len(next(iter(out.values())))
+            yield pd.DataFrame({key_col: [key[0]] * n, **out})
+
+    return narrow.groupBy(key_col).applyInPandasWithState(
+        fn, out_schema, state_schema, "append", "NoTimeout"
+    )
+
+
+def _run_stats_step(type_col: str, loop_threshold: int):
+    def differs(a, b):
+        # IS DISTINCT FROM, matching the batch operator's oracle:
+        # None vs None continues a run, None vs value is a change
+        return (a is None) != (b is None) or (a is not None and a != b)
+
+    def step(st, pdf):
+        types = list(pdf[type_col])
+        last_type, run_len, max_run, n_events, n_runs = st or (None, 0, 0, 0, 0)
+        has_carry = n_events > 0
+        seq = ([last_type] + types) if has_carry else types
+        breaks = [i - 1 for i in range(1, len(seq)) if differs(seq[i], seq[i - 1])]
+        seg_starts = [0] + [b + 1 for b in breaks]
+        seg_ends = breaks + [len(seq) - 1]
+        for i, (s, z) in enumerate(zip(seg_starts, seg_ends)):
+            seg_len = z - s + 1
+            if i == 0 and has_carry:
+                # the marker isn't an event; a lone marker (types[0]
+                # differs) gives the carried run back, already counted
+                seg_len = run_len + seg_len - 1
+            else:
+                n_runs += 1
+            max_run = max(max_run, seg_len)
+            run_len = seg_len  # after the loop: the TRAILING run length
+        n_events += len(types)
+        return (types[-1], run_len, max_run, n_events, n_runs), {
+            "n_events": [n_events],
+            "n_runs": [n_runs],
+            "max_run": [max_run],
+            "repeat_frac": [_round((n_events - n_runs) / n_events)],
+            "looping": [int(max_run >= loop_threshold)],
+        }
+
+    return step
+
+
 def streaming_run_stats(
     stream_df: DataFrame,
     key_col: str = "user_id",
@@ -727,24 +826,14 @@ def streaming_run_stats(
     row older than the carried last event in a LATER batch is treated
     as current (the standard in-order-per-key ingestion assumption —
     bound it with source ordering, as the file-stream tests do).
-    State is one tiny tuple per key, NoTimeout (bounded by the actor
-    population; add a timeout wrapper if keys are unbounded)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, IntegerType, LongType, StructField, StructType,
+    State is one tiny tuple per key."""
+    narrow = stream_df.select(
+        F.col(key_col), F.col(type_col),
+        ts_micros(F.col(ts_col)).alias("_ts_us"),
+        F.col(tiebreak_col).alias("_tb"),  # natural type — any orderable
     )
-
-    # key/type schemas come from the INPUT (string actor ids, int
-    # codes, ... all work); only the stats columns are fixed
-    key_type = stream_df.schema[key_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField("n_events", LongType()),
-        StructField("n_runs", LongType()),
-        StructField("max_run", LongType()),
-        StructField("repeat_frac", DoubleType()),
-        StructField("looping", IntegerType()),
-    ])
+    # the carried type keeps the INPUT's type (string names, int codes,
+    # ... all work); only the stats columns are fixed
     state_schema = StructType([
         StructField("last_type", stream_df.schema[type_col].dataType),
         StructField("run_len", LongType()),
@@ -752,63 +841,36 @@ def streaming_run_stats(
         StructField("n_events", LongType()),
         StructField("n_runs", LongType()),
     ])
+    out_fields = [
+        StructField("n_events", LongType()),
+        StructField("n_runs", LongType()),
+        StructField("max_run", LongType()),
+        StructField("repeat_frac", DoubleType()),
+        StructField("looping", IntegerType()),
+    ]
+    return _keyed_state_head(narrow, key_col, _TS_ORDER, state_schema,
+                             out_fields, _run_stats_step(type_col, loop_threshold))
 
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(["_ts_us", "_tb"])
-        types = list(pdf[type_col])
-        if not types:
-            return
-        if state.exists:
-            last_type, run_len, max_run, n_events, n_runs = state.get
-        else:
-            last_type, run_len, max_run, n_events, n_runs = None, 0, 0, 0, 0
 
-        def differs(a, b):
-            # IS DISTINCT FROM, matching the batch operator's oracle:
-            # None vs None continues a run, None vs value is a change
-            return (a is None) != (b is None) or (a is not None and a != b)
+def _psi_step(group_col: str, ref_stats: dict, n_bins: int, eps: float,
+              round_digits: int):
+    def step(st, pdf):
+        counts = list(st or [0] * n_bins)
+        for b, n in pdf["_bin"].value_counts().items():
+            counts[int(b)] += int(n)
+        n_ref, p_ref = ref_stats[pdf[group_col].iloc[0]]
+        tot = sum(counts)
+        psi = 0.0
+        for b in range(n_bins):
+            pc = counts[b] / tot + eps
+            psi += (pc - p_ref[b]) * math.log(pc / p_ref[b])
+        return tuple(counts), {
+            "n_ref": [n_ref],
+            "n_cur": [tot],
+            "psi": [_round(psi, round_digits)],
+        }
 
-        has_carry = n_events > 0
-        seq = ([last_type] + types) if has_carry else types
-        breaks = [i - 1 for i in range(1, len(seq)) if differs(seq[i], seq[i - 1])]
-        seg_starts = [0] + [b + 1 for b in breaks]
-        seg_ends = breaks + [len(seq) - 1]
-        for i, (s, z) in enumerate(zip(seg_starts, seg_ends)):
-            seg_len = z - s + 1
-            if i == 0 and has_carry:
-                seg_len = run_len + seg_len - 1  # marker isn't an event
-                if seg_len == run_len:
-                    # segment 0 is the lone carry marker (types[0]
-                    # differs): the carried run is unchanged and already
-                    # counted — skip so max/run counts don't double
-                    continue
-            else:
-                n_runs += 1
-            max_run = max(max_run, seg_len)
-            run_len = seg_len  # after the loop: the TRAILING run length
-        last_type = types[-1]
-        n_events += len(types)
-        state.update((last_type, run_len, max_run, n_events, n_runs))
-        yield pd.DataFrame({
-            key_col: [key[0]],
-            "n_events": [n_events],
-            "n_runs": [n_runs],
-            "max_run": [max_run],
-            "repeat_frac": [round((n_events - n_runs) / n_events + 1e-9, 6)],
-            "looping": [int(max_run >= loop_threshold)],
-        })
-
-    narrow = stream_df.select(
-        F.col(key_col), F.col(type_col),
-        ts_micros(F.col(ts_col)).alias("_ts_us"),
-        F.col(tiebreak_col).alias("_tb"),  # natural type — any orderable
-    )
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+    return step
 
 
 def streaming_psi(
@@ -838,13 +900,6 @@ def streaming_psi(
     State per group is the n_bins count vector; PSI arithmetic replays
     the batch formula term-for-term in fixed bin order with the same
     eps smoothing and round(+1e-9) discipline."""
-    import math
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
-
     from ..operators.drift import bin_index_column, reference_edges
 
     edges = reference_edges(ref, group_col, value_col, n_bins, round_digits)
@@ -868,48 +923,20 @@ def streaming_psi(
         for g, c in ref_counts.items()
     }
 
-    key_type = stream_df.schema[group_col].dataType
-    out_schema = StructType([
-        StructField(group_col, key_type),
-        StructField("n_ref", LongType()),
-        StructField("n_cur", LongType()),
-        StructField("psi", DoubleType()),
-    ])
-    state_schema = StructType(
-        [StructField(f"b{i}", LongType()) for i in range(n_bins)]
-    )
-
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts)
-        if pdf.empty:
-            return
-        counts = list(state.get) if state.exists else [0] * n_bins
-        vc = pdf["_bin"].value_counts()
-        for b, n in vc.items():
-            counts[int(b)] += int(n)
-        state.update(tuple(counts))
-        group = key[0]
-        n_ref, p_ref = ref_stats[group]
-        tot = sum(counts)
-        psi = 0.0
-        for b in range(n_bins):
-            pc = counts[b] / tot + eps
-            psi += (pc - p_ref[b]) * math.log(pc / p_ref[b])
-        yield pd.DataFrame({
-            group_col: [group],
-            "n_ref": [n_ref],
-            "n_cur": [tot],
-            "psi": [round(psi + 1e-9, round_digits)],
-        })
-
     binned = stream_df.join(F.broadcast(edges), group_col).select(
         group_col, bin_index_column(value_col).alias("_bin")
     )
-    return binned.groupBy(group_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    state_schema = StructType(
+        [StructField(f"b{i}", LongType()) for i in range(n_bins)]
+    )
+    out_fields = [
+        StructField("n_ref", LongType()),
+        StructField("n_cur", LongType()),
+        StructField("psi", DoubleType()),
+    ]
+    return _keyed_state_head(
+        binned, group_col, None, state_schema, out_fields,
+        _psi_step(group_col, ref_stats, n_bins, eps, round_digits),
     )
 
 
@@ -977,6 +1004,37 @@ def contamination_batch_fn(
     return _apply
 
 
+def _zscore_step(order_col: str, value_col: str, window: int,
+                 min_points: int, threshold: float):
+    def step(st, pdf):
+        hist = list(st[0]) if st else []
+        orders, vals, bases, zs = [], [], [], []
+        for o, v in zip(pdf[order_col], pdf[value_col]):
+            v = None if pd.isna(v) else float(v)
+            # batch parity for NULL values: a null row occupies a frame
+            # slot (n_base = count(*) counts it) but contributes nothing
+            # to mean/std (avg/stddev_samp skip nulls) and is itself
+            # never flagged
+            base = hist[-window:]
+            nb = len(base)
+            nn = [b for b in base if b is not None]
+            if v is not None and nb >= min_points and len(nn) >= 2:
+                m = sum(nn) / len(nn)
+                var = sum((b - m) ** 2 for b in nn) / (len(nn) - 1)
+                if var > 0:
+                    z = _round((v - m) / math.sqrt(var))
+                    if abs(z) > threshold:
+                        orders.append(o)
+                        vals.append(v)
+                        bases.append(nb)
+                        zs.append(z)
+            hist.append(v)
+        out = {order_col: orders, value_col: vals, "n_base": bases, "z": zs}
+        return (hist[-window:],), out if orders else None
+
+    return step
+
+
 def streaming_anomaly_zscore(
     stream_df: DataFrame,
     key_col: str = "user_id",
@@ -1003,65 +1061,18 @@ def streaming_anomaly_zscore(
     sample std, round(z + 1e-9, 6) — including the batch NULL
     semantics (null rows occupy frame slots but never contribute to
     the moments and are never flagged)."""
-    import math
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, StructField, StructType,
-    )
-
-    key_type = stream_df.schema[key_col].dataType
-    order_type = stream_df.schema[order_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField(order_col, order_type),
+    narrow = stream_df.select(key_col, order_col, value_col)
+    out_fields = [
+        StructField(order_col, stream_df.schema[order_col].dataType),
         StructField(value_col, DoubleType()),
         StructField("n_base", LongType()),
         StructField("z", DoubleType()),
-    ])
-    state_schema = StructType([StructField("vals", ArrayType(DoubleType()))])
-
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs if len(p)]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(order_col)
-        hist = list(state.get[0]) if state.exists else []
-        orders, vals, bases, zs = [], [], [], []
-        for o, v in zip(pdf[order_col], pdf[value_col]):
-            v = None if pd.isna(v) else float(v)
-            # batch parity for NULL values: a null row occupies a frame
-            # slot (n_base = count(*) counts it) but contributes nothing
-            # to mean/std (avg/stddev_samp skip nulls) and is itself
-            # never flagged
-            base = hist[-window:]
-            nb = len(base)
-            nn = [b for b in base if b is not None]
-            if v is not None and nb >= min_points and len(nn) >= 2:
-                m = sum(nn) / len(nn)
-                var = sum((b - m) ** 2 for b in nn) / (len(nn) - 1)
-                if var > 0:
-                    z = round((v - m) / math.sqrt(var) + 1e-9, 6)
-                    if abs(z) > threshold:
-                        orders.append(o)
-                        vals.append(v)
-                        bases.append(nb)
-                        zs.append(z)
-            hist.append(v)
-        state.update((hist[-window:],))
-        if orders:
-            yield pd.DataFrame({
-                key_col: [key[0]] * len(orders),
-                order_col: orders,
-                value_col: vals,
-                "n_base": bases,
-                "z": zs,
-            })
-
-    return stream_df.select(key_col, order_col, value_col).groupBy(
-        key_col
-    ).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    ]
+    return _keyed_state_head(
+        narrow, key_col, [order_col],
+        StructType([StructField("vals", ArrayType(DoubleType()))]),
+        out_fields,
+        _zscore_step(order_col, value_col, window, min_points, threshold),
     )
 
 
@@ -1243,7 +1254,6 @@ def _read_partials(spark, store_root: str) -> DataFrame | None:
 
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import from_arrow_schema
-    from pyspark.sql.types import StructType
 
     files = sorted(glob.glob(os.path.join(store_root, "batch=*", "*.parquet")))
     if not files:
@@ -1429,6 +1439,69 @@ def grid_state(spark, store_root: str,
     )
 
 
+_HOUR_US = 3_600_000_000
+
+
+def _hour_grid_step(fold0: tuple, commit, emit):
+    """The fold step of the hour-grid forecasters (holt, holt_winters).
+    State is (open hour us, its count so far, *fold, n_events). An hour
+    is committed once, with its full count, when a later hour arrives;
+    the empty hours of a gap commit 0.0 (the batch grid's zero fill).
+    ``emit(n_events, fold)`` sees the fold with the still-open hour
+    committed provisionally and returns the output columns or None."""
+
+    def step(st, pdf):
+        cur_hour, cur_cnt, *fold, n_events = st or (None, 0, *fold0, 0)
+        hours = (pdf["_ts_us"] // _HOUR_US) * _HOUR_US
+        for h, c in hours.value_counts().sort_index().items():
+            h, c = int(h), int(c)
+            if cur_hour is not None and h != cur_hour:
+                fold = commit(fold, float(cur_cnt))
+                for _ in range((h - cur_hour) // _HOUR_US - 1):
+                    fold = commit(fold, 0.0)
+                cur_cnt = 0
+            cur_hour, cur_cnt = h, cur_cnt + c
+        n_events += len(pdf)
+        return ((cur_hour, cur_cnt, *fold, n_events),
+                emit(n_events, commit(fold, float(cur_cnt))))
+
+    return step
+
+
+def _holt_step(alpha: float, beta: float, horizon: int, round_digits: int):
+    a1, a0 = float(alpha), float(1.0 - alpha)
+    b1, b0 = float(beta), round(1.0 - beta, 12)
+
+    def commit(st, y):
+        """Fold one completed grid hour into (n, y_prev, l, b, sse)."""
+        n, y_prev, l, b, sse = st
+        if n == 0:
+            return (1, y, l, b, sse)
+        if n == 1:
+            # l1 = y1, b1 = y1 - y0 (the batch init)
+            return (2, y, y, y - y_prev, 0.0)
+        pred = l + b
+        e = y - pred
+        l2 = _round(a1 * y + a0 * pred, round_digits)
+        b2 = _round(b1 * (l2 - l) + b0 * b, round_digits)
+        return (n + 1, y, l2, b2, sse + e * e)
+
+    def emit(n_events, fold):
+        pn, _, pl, pb, psse = fold
+        if pn < 3:
+            return None
+        return {
+            "n_events": [n_events],
+            "n_hours": [pn],
+            "level": [pl],
+            "trend": [pb],
+            "forecast_h": [_round(pl + float(horizon) * pb, round_digits)],
+            "rmse_1step": [_round((psse / (pn - 2)) ** 0.5, round_digits)],
+        }
+
+    return _hour_grid_step((0, 0.0, 0.0, 0.0, 0.0), commit, emit)
+
+
 def streaming_holt(
     stream_df: DataFrame,
     key_col: str = "event_type",
@@ -1458,28 +1531,11 @@ def streaming_holt(
 
     Ordering: per-key ingestion must be event-time ordered ACROSS
     batches (the run-stats head's assumption; bound it with source
-    ordering). State is one tiny tuple per key, NoTimeout. Keys with
-    fewer than 3 grid hours so far emit nothing (matching batch).
+    ordering). State is one tiny tuple per key. Keys with fewer than 3
+    grid hours so far emit nothing (matching batch).
     """
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
-
-    HOUR_US = 3_600_000_000
-    a1, a0 = float(alpha), float(1.0 - alpha)
-    b1, b0 = float(beta), round(1.0 - beta, 12)
-
-    key_type = stream_df.schema[key_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField("n_events", LongType()),
-        StructField("n_hours", LongType()),
-        StructField("level", DoubleType()),
-        StructField("trend", DoubleType()),
-        StructField("forecast_h", DoubleType()),
-        StructField("rmse_1step", DoubleType()),
-    ])
+    narrow = stream_df.select(
+        F.col(key_col), ts_micros(F.col(ts_col)).alias("_ts_us"))
     state_schema = StructType([
         StructField("cur_hour_us", LongType()),
         StructField("cur_cnt", LongType()),
@@ -1490,77 +1546,72 @@ def streaming_holt(
         StructField("sse", DoubleType()),
         StructField("n_events", LongType()),
     ])
-
-    def r6(v):
-        return round(v + 1e-9, round_digits)
-
-    def commit(st, y):
-        """Fold one completed grid hour into (n, y_prev, l, b, sse)."""
-        n, y_prev, l, b, sse = st
-        if n == 0:
-            return (1, y, l, b, sse)
-        if n == 1:
-            # l1 = y1, b1 = y1 - y0 (the batch init)
-            return (2, y, y, y - y_prev, 0.0)
-        pred = l + b
-        e = y - pred
-        l2 = r6(a1 * y + a0 * pred)
-        b2 = r6(b1 * (l2 - l) + b0 * b)
-        return (n + 1, y, l2, b2, sse + e * e)
-
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts)
-        if len(pdf) == 0:
-            return
-        hours = (pdf["_ts_us"] // HOUR_US) * HOUR_US
-        counts = hours.value_counts().sort_index()
-
-        if state.exists:
-            (cur_hour, cur_cnt, n, y_prev, l, b, sse, n_events) = state.get
-        else:
-            cur_hour, cur_cnt, n = None, 0, 0
-            y_prev, l, b, sse, n_events = 0.0, 0.0, 0.0, 0.0, 0
-
-        st = (n, y_prev, l, b, sse)
-        for h, c in counts.items():
-            h = int(h)
-            if cur_hour is None:
-                cur_hour, cur_cnt = h, int(c)
-                continue
-            if h == cur_hour:
-                cur_cnt += int(c)
-                continue
-            # h > cur_hour: the open hour is complete -> fold it, then
-            # fold the zero hours of the gap (the batch grid's fill)
-            st = commit(st, float(cur_cnt))
-            for _ in range((h - cur_hour) // HOUR_US - 1):
-                st = commit(st, 0.0)
-            cur_hour, cur_cnt = h, int(c)
-        n_events += len(pdf)
-        n, y_prev, l, b, sse = st
-        state.update((cur_hour, cur_cnt, n, y_prev, l, b, sse, n_events))
-
-        # provisional fold of the still-open hour for emission
-        pn, _, pl, pb, psse = commit(st, float(cur_cnt))
-        if pn >= 3:
-            yield pd.DataFrame({
-                key_col: [key[0]],
-                "n_events": [n_events],
-                "n_hours": [pn],
-                "level": [pl],
-                "trend": [pb],
-                "forecast_h": [r6(pl + float(horizon) * pb)],
-                "rmse_1step": [r6((psse / (pn - 2)) ** 0.5)],
-            })
-
-    narrow = stream_df.select(
-        F.col(key_col), ts_micros(F.col(ts_col)).alias("_ts_us"))
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    out_fields = [
+        StructField("n_events", LongType()),
+        StructField("n_hours", LongType()),
+        StructField("level", DoubleType()),
+        StructField("trend", DoubleType()),
+        StructField("forecast_h", DoubleType()),
+        StructField("rmse_1step", DoubleType()),
+    ]
+    return _keyed_state_head(
+        narrow, key_col, None, state_schema, out_fields,
+        _holt_step(alpha, beta, horizon, round_digits),
     )
+
+
+def _markov_step(matrix: dict, type_col: str, round_digits: int):
+    q = 10.0 ** round_digits
+    eps = 1e-9
+    sep = "\x1f"  # unit separator — cannot appear in event-type names
+
+    def half_up(x):
+        # half-up rounding, matching Spark/DuckDB round() for
+        # non-negative inputs (python round() is banker's)
+        return math.floor((x + eps) * q + 0.5) / q
+
+    def step(st, pdf):
+        types = [t for t in pdf[type_col] if t is not None]
+        if not types:
+            return None, None
+        last_type, pair_keys, pair_counts, n_unseen = st or (None, [], [], 0)
+        counts = dict(zip(list(pair_keys), [int(c) for c in pair_counts]))
+        n_unseen = int(n_unseen)
+        seq = ([last_type] + types) if last_type is not None else types
+        for f, t in zip(seq, seq[1:]):
+            if (f, t) in matrix:
+                k = f + sep + t
+                counts[k] = counts.get(k, 0) + 1
+            else:
+                n_unseen += 1
+        new_state = (types[-1], list(counts), [counts[k] for k in counts],
+                     n_unseen)
+        n = sum(counts.values())
+        if n == 0:
+            return new_state, {
+                "n_transitions": [0], "nll_bits": [None],
+                "max_surprise_bits": [None], "surprise_from": [None],
+                "surprise_to": [None], "n_unseen": [n_unseen],
+            }
+        tot = 0.0
+        best = None  # (-rbits, f, t): min == bits desc, then pair asc
+        for k in sorted(counts):  # deterministic summation order
+            f, t = k.split(sep)
+            bits = -math.log2(matrix[(f, t)])
+            tot += counts[k] * bits
+            cand = (-half_up(bits), f, t)
+            if best is None or cand < best:
+                best = cand
+        return new_state, {
+            "n_transitions": [n],
+            "nll_bits": [half_up(tot / n)],
+            "max_surprise_bits": [-best[0]],
+            "surprise_from": [best[1]],
+            "surprise_to": [best[2]],
+            "n_unseen": [n_unseen],
+        }
+
+    return step
 
 
 def streaming_markov_nll(
@@ -1590,162 +1641,38 @@ def streaming_markov_nll(
     excluded from the score — at 100 TB the alternative (a pseudo-count
     floor) is a caller decision, not a silent default.
 
-    State is one small struct per key, NoTimeout (actor-bounded)."""
-    import math
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, StringType, StructField,
-        StructType,
+    State is one small struct per key."""
+    narrow = stream_df.select(
+        F.col(key_col), F.col(type_col),
+        ts_micros(F.col(ts_col)).alias("_ts_us"),
+        F.col(tiebreak_col).alias("_tb"),
     )
-
-    key_type = stream_df.schema[key_col].dataType
-    ttype = stream_df.schema[type_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
+    state_schema = StructType([
+        StructField("last_type", stream_df.schema[type_col].dataType),
+        StructField("pair_keys", ArrayType(StringType())),
+        StructField("pair_counts", ArrayType(LongType())),
+        StructField("n_unseen", LongType()),
+    ])
+    out_fields = [
         StructField("n_transitions", LongType()),
         StructField("nll_bits", DoubleType()),
         StructField("max_surprise_bits", DoubleType()),
         StructField("surprise_from", StringType()),
         StructField("surprise_to", StringType()),
         StructField("n_unseen", LongType()),
-    ])
-    state_schema = StructType([
-        StructField("last_type", ttype),
-        StructField("pair_keys", ArrayType(StringType())),
-        StructField("pair_counts", ArrayType(LongType())),
-        StructField("n_unseen", LongType()),
-    ])
-    q = 10.0 ** round_digits
-    eps = 1e-9
-    sep = "\x1f"  # unit separator — cannot appear in event-type names
-
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(["_ts_us", "_tb"])
-        types = [t for t in pdf[type_col] if t is not None]
-        if not types:
-            return
-        if state.exists:
-            last_type, pair_keys, pair_counts, n_unseen = state.get
-            counts = dict(zip(list(pair_keys), [int(c) for c in pair_counts]))
-            n_unseen = int(n_unseen)
-        else:
-            last_type, counts, n_unseen = None, {}, 0
-        seq = ([last_type] + types) if last_type is not None else types
-        for f, t in zip(seq, seq[1:]):
-            if (f, t) in matrix:
-                k = f + sep + t
-                counts[k] = counts.get(k, 0) + 1
-            else:
-                n_unseen += 1
-        last_type = types[-1]
-        state.update(
-            (last_type, list(counts), [counts[k] for k in counts], n_unseen)
-        )
-        n = sum(counts.values())
-        if n == 0:
-            yield pd.DataFrame({
-                key_col: [key[0]], "n_transitions": [0], "nll_bits": [None],
-                "max_surprise_bits": [None], "surprise_from": [None],
-                "surprise_to": [None], "n_unseen": [n_unseen],
-            })
-            return
-        tot = 0.0
-        best = None  # (-rbits, f, t): min == bits desc, then pair asc
-        for k in sorted(counts):  # deterministic summation order
-            f, t = k.split(sep)
-            bits = -math.log2(matrix[(f, t)])
-            tot += counts[k] * bits
-            # half-up rounding, matching Spark/DuckDB round() for
-            # non-negative inputs (python round() is banker's)
-            rbits = math.floor((bits + eps) * q + 0.5) / q
-            cand = (-rbits, f, t)
-            if best is None or cand < best:
-                best = cand
-        yield pd.DataFrame({
-            key_col: [key[0]],
-            "n_transitions": [n],
-            "nll_bits": [math.floor((tot / n + eps) * q + 0.5) / q],
-            "max_surprise_bits": [-best[0]],
-            "surprise_from": [best[1]],
-            "surprise_to": [best[2]],
-            "n_unseen": [n_unseen],
-        })
-
-    narrow = stream_df.select(
-        F.col(key_col), F.col(type_col),
-        ts_micros(F.col(ts_col)).alias("_ts_us"),
-        F.col(tiebreak_col).alias("_tb"),
-    )
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+    ]
+    return _keyed_state_head(narrow, key_col, _TS_ORDER, state_schema,
+                             out_fields, _markov_step(matrix, type_col, round_digits))
 
 
-def streaming_gap_deltas(
-    stream_df: DataFrame,
-    key_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-):
-    """LIVE burstiness ingestion: the stateful streaming twin of
-    operators/survival.gap_burstiness, emitting per-(actor, type)
-    DELTA sufficient statistics each micro-batch. The (B, M) moments
-    are functions of ADDITIVE raw sums (n, Σg, Σg², pair sums), so the
-    readback is one groupBy-sum over every emitted delta row followed
-    by survival.burstiness_finalize — and equals the batch operator
-    exactly, including gaps and lag-1 pairs that SPAN micro-batch
-    boundaries (state carries the last event's type/time and the last
-    completed gap with its opening type).
+_GAP_SUMS = ["n", "s1", "s2", "np", "sx", "sy", "sxx", "syy", "sxy"]
 
-    Emitting deltas instead of cumulative rows keeps the sink
-    append-only and idempotent to downstream summation — no
-    latest-row-per-key selection step — and the per-key state is four
-    scalars, NoTimeout (actor-bounded)."""
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType, LongType, StructField, StructType,
-    )
 
-    key_type = stream_df.schema[key_col].dataType
-    ttype = stream_df.schema[type_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField(type_col, ttype),
-        StructField("n", LongType()),
-        StructField("s1", DoubleType()),
-        StructField("s2", DoubleType()),
-        StructField("np", LongType()),
-        StructField("sx", DoubleType()),
-        StructField("sy", DoubleType()),
-        StructField("sxx", DoubleType()),
-        StructField("syy", DoubleType()),
-        StructField("sxy", DoubleType()),
-    ])
-    state_schema = StructType([
-        StructField("last_type", ttype),
-        StructField("last_us", LongType()),
-        StructField("pg_type", ttype),
-        StructField("pg_s", DoubleType()),
-    ])
-
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(["_ts_us", "_tb"])
-        if not len(pdf):
-            return
-        if state.exists:
-            last_type, last_us, pg_type, pg_s = state.get
-            last_us = None if last_us is None else int(last_us)
-        else:
-            last_type, last_us, pg_type, pg_s = None, None, None, None
-        acc: dict = {}
+def _gap_deltas_step(type_col: str):
+    def step(st, pdf):
+        last_type, last_us, pg_type, pg_s = st or (None, None, None, None)
+        last_us = None if last_us is None else int(last_us)
+        acc: dict = {}  # opening type -> the _GAP_SUMS deltas
 
         def slot(ty):
             if ty not in acc:
@@ -1772,23 +1699,99 @@ def streaming_gap_deltas(
                     b[8] += pg_s * g
                 pg_type, pg_s = last_type, g
             last_type, last_us = ty, u
-        state.update((last_type, last_us, pg_type, pg_s))
-        if not acc:
-            return
-        yield pd.DataFrame(
-            [(key[0], ty, *vals) for ty, vals in acc.items()],
-            columns=[key_col, type_col, "n", "s1", "s2", "np",
-                     "sx", "sy", "sxx", "syy", "sxy"],
-        )
+        out = {type_col: list(acc)}
+        out.update((c, [v[i] for v in acc.values()])
+                   for i, c in enumerate(_GAP_SUMS))
+        return (last_type, last_us, pg_type, pg_s), out if acc else None
 
+    return step
+
+
+def streaming_gap_deltas(
+    stream_df: DataFrame,
+    key_col: str = "user_id",
+    type_col: str = "event_type",
+    ts_col: str = "ts",
+    tiebreak_col: str = "event_id",
+):
+    """LIVE burstiness ingestion: the stateful streaming twin of
+    operators/survival.gap_burstiness, emitting per-(actor, type)
+    DELTA sufficient statistics each micro-batch. The (B, M) moments
+    are functions of ADDITIVE raw sums (n, Σg, Σg², pair sums), so the
+    readback is one groupBy-sum over every emitted delta row followed
+    by survival.burstiness_finalize — and equals the batch operator
+    exactly, including gaps and lag-1 pairs that SPAN micro-batch
+    boundaries (state carries the last event's type/time and the last
+    completed gap with its opening type).
+
+    Emitting deltas instead of cumulative rows keeps the sink
+    append-only and idempotent to downstream summation — no
+    latest-row-per-key selection step — and the per-key state is four
+    scalars."""
     narrow = stream_df.select(
         F.col(key_col), F.col(type_col),
         ts_micros(F.col(ts_col)).alias("_ts_us"),
         F.col(tiebreak_col).alias("_tb"),
     )
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+    ttype = stream_df.schema[type_col].dataType
+    state_schema = StructType([
+        StructField("last_type", ttype),
+        StructField("last_us", LongType()),
+        StructField("pg_type", ttype),
+        StructField("pg_s", DoubleType()),
+    ])
+    out_fields = [StructField(type_col, ttype)] + [
+        StructField(c, LongType() if c in ("n", "np") else DoubleType())
+        for c in _GAP_SUMS
+    ]
+    return _keyed_state_head(narrow, key_col, _TS_ORDER, state_schema,
+                             out_fields, _gap_deltas_step(type_col))
+
+
+def _funnel_step(steps: list, type_col: str, round_digits: int):
+    k = len(steps)
+
+    def to_ts(t):
+        return None if t is None else pd.Timestamp(np.datetime64(t, "us"))
+
+    def step(st, pdf):
+        ts = pdf["_ts_us"].to_numpy(dtype=np.int64)
+        tb = pdf["_tb"].to_numpy(dtype=np.int64)
+        ty = pdf[type_col].to_numpy()
+        reached, t_first, t_deep, bound_us, bound_tb, n_seen = (
+            st or (0, None, None, None, None, 0))
+        lo = 0
+        if bound_us is not None:
+            # strictly-after the carried deepest match: first index with
+            # (ts, tb) > (bound_us, bound_tb) in the sorted batch
+            lo = int(np.searchsorted(ts, bound_us, side="left"))
+            n = len(ts)
+            while lo < n and (ts[lo] < bound_us
+                              or (ts[lo] == bound_us and tb[lo] <= bound_tb)):
+                lo += 1
+        while reached < k:
+            hits = np.nonzero(ty[lo:] == steps[reached])[0]
+            if hits.size == 0:
+                break
+            j = lo + int(hits[0])
+            reached += 1
+            t_deep, bound_us, bound_tb = int(ts[j]), int(ts[j]), int(tb[j])
+            if reached == 1:
+                t_first = int(ts[j])
+            lo = j + 1
+        n_seen += len(ts)
+        secs = (_round((t_deep - t_first) / 1e6, round_digits)
+                if reached == k else None)
+        return (reached, t_first, t_deep, bound_us, bound_tb, n_seen), {
+            "steps_reached": [reached],
+            "t_first": [to_ts(t_first)],
+            "t_deepest": [to_ts(t_deep)],
+            "seconds_to_convert": [secs],
+            "converted": [reached == k],
+            "n_seen": [n_seen],
+        }
+
+    return step
 
 
 def streaming_funnel(
@@ -1814,27 +1817,14 @@ def streaming_funnel(
 
     Same ingestion contract as streaming_run_stats: rows are sorted by
     (ts, tiebreak) WITHIN a batch; cross-batch order must come from the
-    source. State is one tuple per key, NoTimeout."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, IntegerType, LongType, StructField,
-        StructType, TimestampType,
-    )
-
+    source. State is one tuple per key."""
     if not steps:
         raise ValueError("steps must be a non-empty ordered list")
-    k = len(steps)
-    key_type = stream_df.schema[key_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField("steps_reached", IntegerType()),
-        StructField("t_first", TimestampType()),
-        StructField("t_deepest", TimestampType()),
-        StructField("seconds_to_convert", DoubleType()),
-        StructField("converted", BooleanType()),
-        StructField("n_seen", LongType()),
-    ])
+    narrow = stream_df.select(
+        F.col(key_col), F.col(type_col),
+        ts_micros(F.col(ts_col)).alias("_ts_us"),
+        F.col(tiebreak_col).cast("long").alias("_tb"),
+    )
     state_schema = StructType([
         StructField("reached", IntegerType()),
         StructField("t_first_us", LongType()),
@@ -1843,63 +1833,43 @@ def streaming_funnel(
         StructField("bound_tb", LongType()),
         StructField("n_seen", LongType()),
     ])
+    out_fields = [
+        StructField("steps_reached", IntegerType()),
+        StructField("t_first", TimestampType()),
+        StructField("t_deepest", TimestampType()),
+        StructField("seconds_to_convert", DoubleType()),
+        StructField("converted", BooleanType()),
+        StructField("n_seen", LongType()),
+    ]
+    return _keyed_state_head(narrow, key_col, _TS_ORDER, state_schema,
+                             out_fields, _funnel_step(steps, type_col, round_digits))
 
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(["_ts_us", "_tb"])
-        ts = pdf["_ts_us"].to_numpy(dtype=np.int64)
-        tb = pdf["_tb"].to_numpy(dtype=np.int64)
-        ty = pdf[type_col].to_numpy()
-        if state.exists:
-            reached, t_first, t_deep, bound_us, bound_tb, n_seen = state.get
-        else:
-            reached, t_first, t_deep, bound_us, bound_tb, n_seen = (
-                0, None, None, None, None, 0)
-        lo = 0
-        if bound_us is not None:
-            # strictly-after the carried deepest match: first index with
-            # (ts, tb) > (bound_us, bound_tb) in the sorted batch
-            lo = int(np.searchsorted(ts, bound_us, side="left"))
-            n = len(ts)
-            while lo < n and (ts[lo] < bound_us
-                              or (ts[lo] == bound_us and tb[lo] <= bound_tb)):
-                lo += 1
-        while reached < k:
-            hits = np.nonzero(ty[lo:] == steps[reached])[0]
-            if hits.size == 0:
-                break
-            j = lo + int(hits[0])
-            reached += 1
-            t_deep, bound_us, bound_tb = int(ts[j]), int(ts[j]), int(tb[j])
-            if reached == 1:
-                t_first = int(ts[j])
-            lo = j + 1
-        n_seen += len(ts)
-        state.update((reached, t_first, t_deep, bound_us, bound_tb, n_seen))
-        secs = (round((t_deep - t_first) / 1e6 + 1e-9, round_digits)
-                if reached == k else None)
-        to_ts = (lambda t: None if t is None
-                 else pd.Timestamp(np.datetime64(t, "us")))
-        yield pd.DataFrame({
-            key_col: [key[0]],
-            "steps_reached": [reached],
-            "t_first": [to_ts(t_first)],
-            "t_deepest": [to_ts(t_deep)],
-            "seconds_to_convert": [secs],
-            "converted": [reached == k],
-            "n_seen": [n_seen],
-        })
 
-    narrow = stream_df.select(
-        F.col(key_col), F.col(type_col),
-        ts_micros(F.col(ts_col)).alias("_ts_us"),
-        F.col(tiebreak_col).cast("long").alias("_tb"),
-    )
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+def _pattern_step(pattern: str, max_match_len: int):
+    rx = re.compile(pattern)
+    keep = max(max_match_len - 1, 0)
+
+    def step(st, pdf):
+        syms = "".join(pdf["_sym"])
+        if not syms:
+            return None, None
+        tail, seq_len, n_matches, first_match = st or ("", 0, 0, "")
+        s = (tail or "") + syms
+        last_end = 0
+        for m in rx.finditer(s):
+            n_matches += 1
+            last_end = m.end()
+            if not first_match:
+                first_match = m.group(0)
+        tail = s[last_end:][-keep:] if keep else ""
+        seq_len += len(syms)
+        return (tail, seq_len, n_matches, first_match), {
+            "seq_len": [seq_len],
+            "n_matches": [n_matches],
+            "first_match": [first_match],
+        }
+
+    return step
 
 
 def streaming_pattern_counts(
@@ -1925,61 +1895,9 @@ def streaming_pattern_counts(
     batch oracle).
 
     State is O(max_match_len) per actor — smaller than the run-stats
-    head's; the in-order-per-key ingestion assumption and NoTimeout
-    bounds are identical to streaming_run_stats."""
-    import re as _re
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
-
+    head's; the in-order-per-key ingestion assumption is identical to
+    streaming_run_stats."""
     from ..operators.seqpattern import DEFAULT_SYMBOLS, symbol_column
-
-    rx = _re.compile(pattern)
-    key_type = stream_df.schema[key_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField("seq_len", LongType()),
-        StructField("n_matches", LongType()),
-        StructField("first_match", StringType()),
-    ])
-    state_schema = StructType([
-        StructField("tail", StringType()),
-        StructField("seq_len", LongType()),
-        StructField("n_matches", LongType()),
-        StructField("first_match", StringType()),
-    ])
-    keep = max(max_match_len - 1, 0)
-
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(["_ts_us", "_tb"])
-        syms = "".join(pdf["_sym"])
-        if not syms:
-            return
-        if state.exists:
-            tail, seq_len, n_matches, first_match = state.get
-        else:
-            tail, seq_len, n_matches, first_match = "", 0, 0, ""
-        s = (tail or "") + syms
-        last_end = 0
-        for m in rx.finditer(s):
-            n_matches += 1
-            last_end = m.end()
-            if not first_match:
-                first_match = m.group(0)
-        tail = s[last_end:][-keep:] if keep else ""
-        seq_len += len(syms)
-        state.update((tail, seq_len, n_matches, first_match))
-        yield pd.DataFrame({
-            key_col: [key[0]],
-            "seq_len": [seq_len],
-            "n_matches": [n_matches],
-            "first_match": [first_match],
-        })
 
     narrow = stream_df.select(
         F.col(key_col),
@@ -1987,9 +1905,49 @@ def streaming_pattern_counts(
         ts_micros(F.col(ts_col)).alias("_ts_us"),
         F.col(tiebreak_col).cast("long").alias("_tb"),
     )
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+    state_schema = StructType([
+        StructField("tail", StringType()),
+        StructField("seq_len", LongType()),
+        StructField("n_matches", LongType()),
+        StructField("first_match", StringType()),
+    ])
+    out_fields = [
+        StructField("seq_len", LongType()),
+        StructField("n_matches", LongType()),
+        StructField("first_match", StringType()),
+    ]
+    return _keyed_state_head(narrow, key_col, _TS_ORDER, state_schema,
+                             out_fields, _pattern_step(pattern, max_match_len))
+
+
+def _page_hinkley_step(delta: float, lam: float, round_digits: int):
+    d, lm = float(delta), float(lam)
+
+    def step(st, pdf):
+        n, sum_x, m, min_m, max_m, breach_us = (
+            st or (0, 0.0, 0.0, None, None, None))
+        for x, us in zip(pdf["_x"], pdf["_ts_us"]):
+            x = float(x)
+            n += 1
+            sum_x += x
+            m += x - sum_x / n - d
+            min_m = m if min_m is None else min(min_m, m)
+            max_m = m if max_m is None else max(max_m, m)
+            if breach_us is None and (_round(m - min_m, round_digits) > lm
+                                      or _round(max_m - m, round_digits) > lm):
+                breach_us = int(us)
+        return (n, sum_x, m, min_m, max_m, breach_us), {
+            "n": [n],
+            "ph_inc": [_round(m - min_m, round_digits)],
+            "ph_dec": [_round(max_m - m, round_digits)],
+            "drift": [breach_us is not None],
+            "first_breach": [
+                pd.to_datetime(breach_us, unit="us")
+                if breach_us is not None else pd.NaT
+            ],
+        }
+
+    return step
 
 
 def streaming_page_hinkley(
@@ -2016,23 +1974,14 @@ def streaming_page_hinkley(
     Ordering contract matches streaming_run_stats: rows sort by
     (ts, tiebreak) within each batch and per-key ingestion is assumed
     in order across batches (bound it with source ordering). State is
-    one 6-field tuple per key, NoTimeout.
+    one 6-field tuple per key.
     """
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, LongType, StructField, StructType,
-        TimestampType,
+    narrow = stream_df.select(
+        F.col(key_col),
+        F.col(value_col).cast("double").alias("_x"),
+        ts_micros(F.col(ts_col)).alias("_ts_us"),
+        F.col(tiebreak_col).alias("_tb"),
     )
-
-    key_type = stream_df.schema[key_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField("n", LongType()),
-        StructField("ph_inc", DoubleType()),
-        StructField("ph_dec", DoubleType()),
-        StructField("drift", BooleanType()),
-        StructField("first_breach", TimestampType()),
-    ])
     state_schema = StructType([
         StructField("n", LongType()),
         StructField("sum_x", DoubleType()),
@@ -2041,54 +1990,71 @@ def streaming_page_hinkley(
         StructField("max_m", DoubleType()),
         StructField("breach_us", LongType()),
     ])
-    d, lm = float(delta), float(lam)
+    out_fields = [
+        StructField("n", LongType()),
+        StructField("ph_inc", DoubleType()),
+        StructField("ph_dec", DoubleType()),
+        StructField("drift", BooleanType()),
+        StructField("first_breach", TimestampType()),
+    ]
+    return _keyed_state_head(narrow, key_col, _TS_ORDER, state_schema,
+                             out_fields, _page_hinkley_step(delta, lam, round_digits))
 
-    def _r(x):
-        return round(x + 1e-9, round_digits)
 
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values(["_ts_us", "_tb"])
-        if len(pdf) == 0:
-            return
-        if state.exists:
-            n, sum_x, m, min_m, max_m, breach_us = state.get
-        else:
-            n, sum_x, m, min_m, max_m, breach_us = 0, 0.0, 0.0, None, None, None
-        for x, us in zip(pdf["_x"], pdf["_ts_us"]):
-            x = float(x)
+def _holt_winters_step(alpha: float, beta: float, gamma: float, period: int,
+                       round_digits: int):
+    m = int(period)
+    a1, a0 = float(alpha), round(1.0 - alpha, 12)
+    b1, b0 = float(beta), round(1.0 - beta, 12)
+    g1, g0 = float(gamma), round(1.0 - gamma, 12)
+
+    def hw_step(l, b, s, sse, t, y):
+        """One recursion step at 0-based position t; returns fresh s."""
+        j = t % m
+        sold = s[j]
+        pred = l + b + sold
+        sse = sse + (y - pred) * (y - pred)
+        l2 = _round(a1 * (y - sold) + a0 * (l + b), round_digits)
+        b2 = _round(b1 * (l2 - l) + b0 * b, round_digits)
+        s = list(s)
+        s[j] = _round(g1 * (y - l - b) + g0 * sold, round_digits)
+        return l2, b2, s, sse
+
+    def commit(st, y):
+        """Fold one completed grid hour; st = (n, buf, l, b, s, sse)."""
+        n, buf, l, b, s, sse = st
+        if n < 2 * m:
+            buf = list(buf) + [y]
             n += 1
-            sum_x += x
-            m += x - sum_x / n - d
-            min_m = m if min_m is None else min(min_m, m)
-            max_m = m if max_m is None else max(max_m, m)
-            if breach_us is None and (_r(m - min_m) > lm
-                                      or _r(max_m - m) > lm):
-                breach_us = int(us)
-        state.update((n, sum_x, m, min_m, max_m, breach_us))
-        yield pd.DataFrame({
-            key_col: [key[0]],
-            "n": [n],
-            "ph_inc": [_r(m - min_m)],
-            "ph_dec": [_r(max_m - m)],
-            "drift": [breach_us is not None],
-            "first_breach": [
-                pd.to_datetime(breach_us, unit="us")
-                if breach_us is not None else pd.NaT
-            ],
-        })
+            if n == 2 * m:
+                mean1 = sum(buf[:m]) / float(m)
+                mean2 = sum(buf[m:2 * m]) / float(m)
+                l = _round(mean1, round_digits)
+                b = _round((mean2 - mean1) / m, round_digits)
+                s = [_round(v - l, round_digits) for v in buf[:m]]
+                sse = 0.0
+                for t in range(m, 2 * m):
+                    l, b, s, sse = hw_step(l, b, s, sse, t, buf[t])
+            return (n, buf, l, b, s, sse)
+        l, b, s, sse = hw_step(l, b, s, sse, n, y)
+        return (n + 1, buf, l, b, s, sse)
 
-    narrow = stream_df.select(
-        F.col(key_col),
-        F.col(value_col).cast("double").alias("_x"),
-        ts_micros(F.col(ts_col)).alias("_ts_us"),
-        F.col(tiebreak_col).alias("_tb"),
-    )
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+    def emit(n_events, fold):
+        pn, _, pl, pb, ps, psse = fold
+        if pn < 2 * m:
+            return None
+        return {
+            "n_events": [n_events],
+            "n_hours": [pn],
+            "level": [pl],
+            "trend": [pb],
+            "seasonal_amplitude": [_round(max(ps) - min(ps), round_digits)],
+            "forecast_24h": [_round(pl + float(m) * pb + ps[(pn - 1) % m],
+                                    round_digits)],
+            "rmse_1step": [_round((psse / (pn - m)) ** 0.5, round_digits)],
+        }
+
+    return _hour_grid_step((0, [], 0.0, 0.0, [], 0.0), commit, emit)
 
 
 def streaming_holt_winters(
@@ -2116,28 +2082,8 @@ def streaming_holt_winters(
     oracle is shared. Keys with fewer than 2*period grid hours emit
     nothing (matching batch).
     """
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, LongType, StructField, StructType,
-    )
-
-    HOUR_US = 3_600_000_000
-    m = int(period)
-    a1, a0 = float(alpha), round(1.0 - alpha, 12)
-    b1, b0 = float(beta), round(1.0 - beta, 12)
-    g1, g0 = float(gamma), round(1.0 - gamma, 12)
-
-    key_type = stream_df.schema[key_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField("n_events", LongType()),
-        StructField("n_hours", LongType()),
-        StructField("level", DoubleType()),
-        StructField("trend", DoubleType()),
-        StructField("seasonal_amplitude", DoubleType()),
-        StructField("forecast_24h", DoubleType()),
-        StructField("rmse_1step", DoubleType()),
-    ])
+    narrow = stream_df.select(
+        F.col(key_col), ts_micros(F.col(ts_col)).alias("_ts_us"))
     state_schema = StructType([
         StructField("cur_hour_us", LongType()),
         StructField("cur_cnt", LongType()),
@@ -2149,95 +2095,72 @@ def streaming_holt_winters(
         StructField("sse", DoubleType()),
         StructField("n_events", LongType()),
     ])
-
-    def r6(v):
-        return round(v + 1e-9, round_digits)
-
-    def hw_step(l, b, s, sse, t, y):
-        """One recursion step at 0-based position t; returns fresh s."""
-        j = t % m
-        sold = s[j]
-        pred = l + b + sold
-        sse = sse + (y - pred) * (y - pred)
-        l2 = r6(a1 * (y - sold) + a0 * (l + b))
-        b2 = r6(b1 * (l2 - l) + b0 * b)
-        s = list(s)
-        s[j] = r6(g1 * (y - l - b) + g0 * sold)
-        return l2, b2, s, sse
-
-    def commit(st, y):
-        """Fold one completed grid hour; st = (n, buf, l, b, s, sse)."""
-        n, buf, l, b, s, sse = st
-        if n < 2 * m:
-            buf = list(buf) + [y]
-            n += 1
-            if n == 2 * m:
-                mean1 = sum(buf[:m]) / float(m)
-                mean2 = sum(buf[m:2 * m]) / float(m)
-                l = r6(mean1)
-                b = r6((mean2 - mean1) / m)
-                s = [r6(v - l) for v in buf[:m]]
-                sse = 0.0
-                for t in range(m, 2 * m):
-                    l, b, s, sse = hw_step(l, b, s, sse, t, buf[t])
-            return (n, buf, l, b, s, sse)
-        l, b, s, sse = hw_step(l, b, s, sse, n, y)
-        return (n + 1, buf, l, b, s, sse)
-
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts)
-        if len(pdf) == 0:
-            return
-        hours = (pdf["_ts_us"] // HOUR_US) * HOUR_US
-        counts = hours.value_counts().sort_index()
-
-        if state.exists:
-            (cur_hour, cur_cnt, n, buf, l, b, s, sse, n_events) = state.get
-            buf = list(buf) if buf is not None else []
-            s = list(s) if s is not None else []
-        else:
-            cur_hour, cur_cnt, n = None, 0, 0
-            buf, l, b, s, sse, n_events = [], 0.0, 0.0, [], 0.0, 0
-
-        st = (n, buf, l, b, s, sse)
-        for h, c in counts.items():
-            h = int(h)
-            if cur_hour is None:
-                cur_hour, cur_cnt = h, int(c)
-                continue
-            if h == cur_hour:
-                cur_cnt += int(c)
-                continue
-            st = commit(st, float(cur_cnt))
-            for _ in range((h - cur_hour) // HOUR_US - 1):
-                st = commit(st, 0.0)
-            cur_hour, cur_cnt = h, int(c)
-        n_events += len(pdf)
-        n, buf, l, b, s, sse = st
-        state.update((cur_hour, cur_cnt, n, buf, l, b, s, sse, n_events))
-
-        pn, _, pl, pb, ps, psse = commit(st, float(cur_cnt))
-        if pn >= 2 * m:
-            yield pd.DataFrame({
-                key_col: [key[0]],
-                "n_events": [n_events],
-                "n_hours": [pn],
-                "level": [pl],
-                "trend": [pb],
-                "seasonal_amplitude": [r6(max(ps) - min(ps))],
-                "forecast_24h": [r6(pl + float(m) * pb
-                                    + ps[(pn - 1) % m])],
-                "rmse_1step": [r6((psse / (pn - m)) ** 0.5)],
-            })
-
-    narrow = stream_df.select(
-        F.col(key_col), ts_micros(F.col(ts_col)).alias("_ts_us"))
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
+    out_fields = [
+        StructField("n_events", LongType()),
+        StructField("n_hours", LongType()),
+        StructField("level", DoubleType()),
+        StructField("trend", DoubleType()),
+        StructField("seasonal_amplitude", DoubleType()),
+        StructField("forecast_24h", DoubleType()),
+        StructField("rmse_1step", DoubleType()),
+    ]
+    return _keyed_state_head(
+        narrow, key_col, None, state_schema, out_fields,
+        _holt_winters_step(alpha, beta, gamma, period, round_digits),
     )
+
+
+def _lateness_step(alpha: float, round_digits: int):
+    from ..operators.sketch import _dd_gamma
+
+    gamma = _dd_gamma(alpha)
+    lg = float(math.log(gamma))
+
+    def est_s(bkt):
+        return _round(2.0 * gamma ** bkt / (gamma + 1.0) / 1e6, round_digits)
+
+    def step(st, pdf):
+        runmax, n, n_late, max_late, bkts, cnts = (
+            st or (None, 0, 0, None, [], []))
+        counts = dict(zip(list(bkts), list(cnts)))
+        for us in pdf["_ts_us"]:
+            us = int(us)
+            late = (runmax - us) if (runmax is not None and runmax > us) \
+                else 0
+            runmax = us if runmax is None or us > runmax else runmax
+            n += 1
+            if late > 0:
+                n_late += 1
+                max_late = late if max_late is None or late > max_late \
+                    else max_late
+                b = int(math.ceil(round(math.log(float(late)) / lg, 6)))
+                counts[b] = counts.get(b, 0) + 1
+
+        ests = {}
+        nl = sum(counts.values())
+        if nl > 0:
+            items = sorted(counts.items())
+            for q in (0.5, 0.95, 0.99):
+                target = int(math.floor(q * (nl - 1))) + 1
+                cum = 0
+                for b, c in items:
+                    cum += c
+                    if cum >= target:
+                        ests[q] = est_s(b)
+                        break
+        return (runmax, n, n_late, max_late,
+                list(counts.keys()), list(counts.values())), {
+            "n": [n],
+            "n_late": [n_late],
+            "frac_late": [_round(n_late / n, round_digits)],
+            "p50_late_s": [ests.get(0.5)],
+            "p95_late_s": [ests.get(0.95)],
+            "p99_late_s": [ests.get(0.99)],
+            "max_late_s": [None if max_late is None
+                           else _round(max_late / 1e6, round_digits)],
+        }
+
+    return step
 
 
 def streaming_lateness(
@@ -2264,31 +2187,13 @@ def streaming_lateness(
     After each batch the key emits cumulative (n, n_late, frac_late,
     p50/p95/p99 lateness estimates in seconds, exact max) — the
     watermark-sizing dashboard kept warm while the stream runs. State
-    is O(log-range) buckets per key, NoTimeout.
+    is O(log-range) buckets per key.
     """
-    import math as _math
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType, DoubleType, IntegerType, LongType, StructField,
-        StructType,
+    narrow = stream_df.select(
+        F.col(key_col),
+        ts_micros(F.col(ts_col)).alias("_ts_us"),
+        F.col(arrival_col).alias("_arr"),
     )
-
-    from ..operators.sketch import _dd_gamma
-
-    gamma = _dd_gamma(alpha)
-    lg = float(_math.log(gamma))
-    key_type = stream_df.schema[key_col].dataType
-    out_schema = StructType([
-        StructField(key_col, key_type),
-        StructField("n", LongType()),
-        StructField("n_late", LongType()),
-        StructField("frac_late", DoubleType()),
-        StructField("p50_late_s", DoubleType()),
-        StructField("p95_late_s", DoubleType()),
-        StructField("p99_late_s", DoubleType()),
-        StructField("max_late_s", DoubleType()),
-    ])
     state_schema = StructType([
         StructField("runmax_us", LongType()),
         StructField("n", LongType()),
@@ -2297,69 +2202,14 @@ def streaming_lateness(
         StructField("bkts", ArrayType(IntegerType())),
         StructField("cnts", ArrayType(LongType())),
     ])
-
-    def _r(v):
-        return round(v + 1e-9, round_digits)
-
-    def _est_s(bkt):
-        return _r(2.0 * gamma ** bkt / (gamma + 1.0) / 1e6)
-
-    def fn(key, pdfs, state):
-        parts = [p for p in pdfs]
-        if not parts:
-            return
-        pdf = pd.concat(parts).sort_values("_arr")
-        if len(pdf) == 0:
-            return
-        if state.exists:
-            runmax, n, n_late, max_late, bkts, cnts = state.get
-            counts = dict(zip(list(bkts), list(cnts)))
-        else:
-            runmax, n, n_late, max_late = None, 0, 0, None
-            counts = {}
-        for us in pdf["_ts_us"]:
-            us = int(us)
-            late = (runmax - us) if (runmax is not None and runmax > us) \
-                else 0
-            runmax = us if runmax is None or us > runmax else runmax
-            n += 1
-            if late > 0:
-                n_late += 1
-                max_late = late if max_late is None or late > max_late \
-                    else max_late
-                b = int(_math.ceil(round(_math.log(float(late)) / lg, 6)))
-                counts[b] = counts.get(b, 0) + 1
-        state.update((runmax, n, n_late, max_late,
-                      list(counts.keys()), list(counts.values())))
-
-        ests = {}
-        nl = sum(counts.values())
-        if nl > 0:
-            items = sorted(counts.items())
-            for q in (0.5, 0.95, 0.99):
-                target = int(_math.floor(q * (nl - 1))) + 1
-                cum = 0
-                for b, c in items:
-                    cum += c
-                    if cum >= target:
-                        ests[q] = _est_s(b)
-                        break
-        yield pd.DataFrame({
-            key_col: [key[0]],
-            "n": [n],
-            "n_late": [n_late],
-            "frac_late": [_r(n_late / n)],
-            "p50_late_s": [ests.get(0.5)],
-            "p95_late_s": [ests.get(0.95)],
-            "p99_late_s": [ests.get(0.99)],
-            "max_late_s": [None if max_late is None else _r(max_late / 1e6)],
-        })
-
-    narrow = stream_df.select(
-        F.col(key_col),
-        ts_micros(F.col(ts_col)).alias("_ts_us"),
-        F.col(arrival_col).alias("_arr"),
-    )
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", "NoTimeout"
-    )
+    out_fields = [
+        StructField("n", LongType()),
+        StructField("n_late", LongType()),
+        StructField("frac_late", DoubleType()),
+        StructField("p50_late_s", DoubleType()),
+        StructField("p95_late_s", DoubleType()),
+        StructField("p99_late_s", DoubleType()),
+        StructField("max_late_s", DoubleType()),
+    ]
+    return _keyed_state_head(narrow, key_col, ["_arr"], state_schema,
+                             out_fields, _lateness_step(alpha, round_digits))

@@ -1,4 +1,4 @@
-"""Spark-side kernel tests: applyInPandas featurization equals the direct
+"""Spark-side kernel tests: the batched featurization equals the direct
 numpy kernel on identical data; results are invariant to partitioning and
 input row order; tumbling windows group correctly."""
 
@@ -110,13 +110,20 @@ def test_text_byte_equality_survives_generation(spark, transcripts):
     assert (a["ts"] == b["ts"]).all()
 
 
-def test_batched_equals_grouped_strategy(spark, transcripts):
+def test_batched_windows_equal_compute_features(spark, transcripts):
+    """Each (conv_id, 1-hour window) row of the batched kernel equals the
+    reference compute_features over that window's rows in (t, turn_idx)
+    order, bit for bit."""
     feats = ["n_epochs", "mean", "std", "median", "stetson_j", "cads_avg"]
-    a = featurize(transcripts, feats, strategy="batched", window="1 hour") \
+    got = featurize(transcripts, feats, window="1 hour") \
         .toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
-    b = featurize(transcripts, feats, strategy="grouped", window="1 hour") \
-        .toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)  # bit-exact across physical strategies
+    local = transcripts.toPandas()
+    local["window_start"] = local["ts"].dt.floor("h")
+    want = pd.DataFrame([
+        {"conv_id": c, "window_start": w, **_oracle(g, feats)}
+        for (c, w), g in local.groupby(["conv_id", "window_start"])
+    ])
+    pd.testing.assert_frame_equal(got, want[got.columns])
 
 
 def test_multichannel_featurize(spark, transcripts):
