@@ -105,7 +105,8 @@ def run_rollup(
         df.groupBy(day_col.alias("d")).agg(F.count("*").alias("n"))
         .orderBy("d").collect()
     )
-    days = [r["d"] for r in per_day]
+    # rows with NULL ts fall in no window of any tier, so in no unit
+    days = [r["d"] for r in per_day if r["d"] is not None]
     day_rows = {r["d"]: r["n"] for r in per_day}
     buckets = [days[i: i + bucket_days] for i in range(0, len(days), bucket_days)]
 

@@ -14,8 +14,9 @@ by t alone with a non-stable quicksort; we document the stronger
 tie-broken ordering and use it everywhere).
 
 Scale notes (100 TB):
-  - the kernel shuffles once on the group key; tier windows bound group
-    size, so no group outgrows one task even for hot conversations;
+  - the kernel shuffles once on the group key; the tier rollups shuffle
+    on (key, UTC day), which bounds group size, so no group outgrows one
+    task even for hot conversations;
   - for whole-conversation featurization of extreme series, use
     operators.aggstate (mergeable two-phase aggregation) for the mergeable
     subset instead of this kernel;
@@ -39,7 +40,7 @@ DEFAULT_ERROR_VALUE = 1e-4  # cesium's DEFAULT_ERROR_VALUE (time_series.py:10)
 SECONDS_PER_DAY = 86400.0
 
 __all__ = [
-    "featurize", "featurize_multichannel", "attach_meta_features",
+    "featurize", "attach_meta_features",
     "ts_micros", "DEFAULT_ERROR_VALUE", "SECONDS_PER_DAY",
 ]
 
@@ -51,40 +52,59 @@ def ts_micros(col: Column) -> Column:
     return F.unix_micros(col.cast("timestamp"))
 
 
-def iter_group_frames(batches, keys: Sequence[str]):
-    """Yield maximal group-complete pandas frames from an Arrow batch
-    iterator whose rows are key-contiguous (hash-partitioned + sorted by
-    keys). Groups spanning batch boundaries are stitched via carry-over.
-    Each yielded frame contains one or more complete groups."""
-    carry: pd.DataFrame | None = None
-    for pdf in batches:
-        if carry is not None and len(carry):
-            pdf = pd.concat([carry, pdf], ignore_index=True)
-        if not len(pdf):
-            continue
-        last = pdf.iloc[-1]
-        tail_mask = np.ones(len(pdf), dtype=bool)
-        for k in keys:
-            tail_mask &= (pdf[k] == last[k]).to_numpy()
-        split = len(pdf) - int(
-            tail_mask[::-1].argmin() if not tail_mask.all() else len(pdf)
-        )
-        body, carry = pdf.iloc[:split], pdf.iloc[split:]
-        if len(body):
-            yield body
-    if carry is not None and len(carry):
-        yield carry
-
-
-def group_starts(pdf: pd.DataFrame, keys: Sequence[str]) -> np.ndarray:
-    """Start offsets of each contiguous group in a key-sorted frame."""
-    n = len(pdf)
-    change = np.zeros(n, dtype=bool)
+def _group_starts(pdf: pd.DataFrame, keys: Sequence[str]) -> np.ndarray:
+    """Start offsets of each contiguous group in a key-sorted, non-empty
+    frame."""
+    change = np.zeros(len(pdf), dtype=bool)
     change[0] = True
     for k in keys:
         col = pdf[k].to_numpy()
         change[1:] |= col[1:] != col[:-1]
     return np.flatnonzero(change)
+
+
+def map_sorted_groups(
+    narrow: DataFrame,
+    keys: Sequence[str],
+    order: Sequence[str],
+    per_frame: Callable[[pd.DataFrame, np.ndarray], pd.DataFrame],
+    schema: StructType | str,
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """The one grouped pass of every batched grouped operator: one shuffle
+    of `narrow` on `keys` into `num_partitions` partitions (default
+    spark.sql.shuffle.partitions), a JVM in-partition sort on
+    (keys..., order...), then mapInPandas over many groups per Arrow
+    batch — Spark's grouped-map dispatch costs ~15 ms *per group*, which
+    batching amortizes to ~nothing.
+
+    A group can span Arrow batches: each batch's rows from its last group
+    start on are carried into the next batch, so ``per_frame(body,
+    starts)`` only ever sees whole groups. `body` holds one or more
+    complete groups, contiguous and sorted by `order` within each;
+    `starts` are the offsets of their first rows (``starts[0] == 0``).
+    It returns the groups' output rows as one pandas frame in `schema`.
+    """
+    keys = list(keys)
+
+    def _mapper(batches):
+        carry = None
+        for pdf in batches:
+            if carry is not None:
+                pdf = pd.concat([carry, pdf], ignore_index=True)
+            if not len(pdf):
+                continue
+            starts = _group_starts(pdf, keys)
+            split = starts[-1]
+            if split:
+                yield per_frame(pdf.iloc[:split], starts[:-1])
+            carry = pdf.iloc[split:].reset_index(drop=True)
+        if carry is not None:
+            yield per_frame(carry, np.zeros(1, dtype=np.int64))
+
+    npart = num_partitions or narrow.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    arranged = narrow.repartition(int(npart), *keys).sortWithinPartitions(*keys, *order)
+    return arranged.mapInPandas(_mapper, schema=schema)
 
 
 def make_batch_kernel(
@@ -94,17 +114,9 @@ def make_batch_kernel(
     raise_exceptions: bool = False,
     const_e: float | None = None,
     windows: Mapping[str, str] | None = None,
-) -> Callable:
-    """Build the mapInPandas function: processes MANY groups per Arrow
-    batch (Spark's grouped-map dispatch costs ~15 ms *per group*, which is
-    catastrophic for tiny tier windows; batched mapping amortizes it to
-    ~nothing).
-
-    Contract: the input iterator covers one partition whose rows are
-    (a) hash-partitioned by the full ``key_cols`` and (b) sorted by
-    (key_cols..., t, _ord) — i.e. groups are contiguous and internally
-    time-ordered. A group can span Arrow batch boundaries; the trailing
-    (possibly incomplete) group of each batch is carried into the next.
+) -> Callable[[pd.DataFrame, np.ndarray], pd.DataFrame]:
+    """The feature kernel as a `map_sorted_groups` per-frame function, for
+    rows grouped by `key_cols` and sorted by (t, _ord) within each group.
 
     windows : nested group keys, ``{tag: column}``. None is the one-level
         case: one output row per ``key_cols`` group, as
@@ -121,12 +133,6 @@ def make_batch_kernel(
     # rest (iterative/model-based) fall back to the per-group registry
     fast = [f for f in features if f in FAST_FEATS] if not custom_functions else []
     slow = [f for f in features if f not in set(fast)]
-    # (constant output columns, group columns, their output names)
-    if windows is None:
-        levels = [({}, keys, keys)]
-    else:
-        levels = [({"tier": tag}, [keys[0], col], [keys[0], "window_start"])
-                  for tag, col in windows.items()]
 
     def _features(t, m, e, starts) -> dict[str, np.ndarray]:
         out: dict[str, np.ndarray] = {}
@@ -144,9 +150,9 @@ def make_batch_kernel(
                 )
                 for f in slow:
                     out[f][gi] = vals[f]
-        return out
+        return {f: out[f] for f in features}
 
-    def _emit(pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_frame(pdf: pd.DataFrame, starts: np.ndarray) -> pd.DataFrame:
         n = len(pdf)
         t = pdf["t"].to_numpy(dtype=np.float64)
         m = pdf["m"].to_numpy(dtype=np.float64)
@@ -155,22 +161,21 @@ def make_batch_kernel(
         # drops 8 bytes/row from the kernel's one exchange)
         e = (np.full(n, const_e, dtype=np.float64)
              if const_e is not None else pdf["e"].to_numpy(dtype=np.float64))
+        if windows is None:
+            return pd.DataFrame({**{k: pdf[k].to_numpy()[starts] for k in keys},
+                                 **_features(t, m, e, starts)})
         frames = []
-        for const, group, names in levels:
-            starts = group_starts(pdf, group)
-            vals = _features(t, m, e, starts)
+        for tag, col in windows.items():
+            level = _group_starts(pdf, [keys[0], col])
             frames.append(pd.DataFrame({
-                **const,
-                **{name: pdf[k].to_numpy()[starts] for name, k in zip(names, group)},
-                **{f: vals[f] for f in features},
+                "tier": tag,
+                keys[0]: pdf[keys[0]].to_numpy()[level],
+                "window_start": pdf[col].to_numpy()[level],
+                **_features(t, m, e, level),
             }))
-        return frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        return pd.concat(frames, ignore_index=True)
 
-    def _mapper(batches):
-        for body in iter_group_frames(batches, keys):
-            yield _emit(body)
-
-    return _mapper
+    return per_frame
 
 
 def featurize(
@@ -182,13 +187,12 @@ def featurize(
     m: Column | str | None = None,
     e: Column | str | None = None,
     t: Column | str | None = None,
-    window: str | None = None,
     time_unit_seconds: float = SECONDS_PER_DAY,
     custom_functions: Mapping[str, Callable] | None = None,
-    num_partitions: int | None = None,
     raise_exceptions: bool = False,
 ) -> DataFrame:
-    """Featurize each (series [, tumbling window]) group of `df`.
+    """Featurize each series (`key_col` group) of `df`; tumbling-window
+    tiers are ``operators.rollup.rollup_tiers``.
 
     Parameters
     ----------
@@ -198,33 +202,22 @@ def featurize(
     t : time axis as float64; default ``unix_seconds(ts)/time_unit_seconds``
         (days, so cad_probs_<k> keep their "k minutes" meaning — the golden
         astronomy vectors use days too).
-    window : tumbling tier width, e.g. "1 minute"/"1 hour"/"1 day"; when
-        set, output has a window_start timestamp column and groups are
-        (key, window).
     raise_exceptions : cesium's public failure policy
-        (/root/reference/cesium/featurize.py:76-95,156): a feature (most
+        (cesium's featurize.py:76-95,156): a feature (most
         relevantly a custom callable) that throws yields NaN for its
         column by default; True re-raises inside the task instead.
     """
     features = list(features)
     cols, const_e = kernel_columns(key_col, ts_col, tiebreak_col, m, e, t,
                                    time_unit_seconds)
-    key_cols = [key_col]
-    if window is not None:
-        cols.append(F.window(F.col(ts_col), window).start.alias("window_start"))
-        key_cols = [key_col, "window_start"]
-
     narrow = df.select(*cols)
-
-    out_fields = [narrow.schema[k] for k in key_cols]
-    out_fields += [StructField(name, DoubleType(), True) for name in features]
-    schema = StructType(out_fields)
-
-    # one shuffle on the group key plus a secondary sort, then many groups
-    # per Arrow batch: no per-group Python dispatch
-    mapper = make_batch_kernel(features, key_cols, custom_functions,
-                               raise_exceptions, const_e)
-    return map_sorted_groups(narrow, key_cols, mapper, schema, num_partitions)
+    schema = StructType([
+        narrow.schema[key_col],
+        *[StructField(name, DoubleType(), True) for name in features],
+    ])
+    per_frame = make_batch_kernel(features, [key_col], custom_functions,
+                                  raise_exceptions, const_e)
+    return map_sorted_groups(narrow, [key_col], ["t", "_ord"], per_frame, schema)
 
 
 def kernel_columns(
@@ -260,48 +253,6 @@ def kernel_columns(
         F.col(tiebreak_col).cast("long").alias("_ord"),
     ]
     return cols, const_e
-
-
-def map_sorted_groups(
-    narrow: DataFrame,
-    key_cols: Sequence[str],
-    mapper: Callable,
-    schema: StructType,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """Run a `make_batch_kernel` mapper: one shuffle on `key_cols` plus a
-    JVM in-partition secondary sort on (key_cols..., t, _ord), then
-    mapInPandas. `num_partitions` defaults to spark.sql.shuffle.partitions."""
-    npart = num_partitions or narrow.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    arranged = narrow.repartition(int(npart), *key_cols).sortWithinPartitions(
-        *key_cols, "t", "_ord"
-    )
-    return arranged.mapInPandas(mapper, schema=schema)
-
-
-def featurize_multichannel(
-    df: DataFrame,
-    features: Sequence[str],
-    channels: Mapping[str, Column | str],
-    key_col: str = "conv_id",
-    window: str | None = None,
-    **kwargs,
-) -> DataFrame:
-    """Multichannel featurization: cesium computes each channel's features
-    independently over shared (t, e) axes (featurize.py:62, channels()
-    iteration in time_series.py:245-258); here each channel is one
-    featurize() pass and the per-channel frames join on the series (and
-    window) key. Output columns are ``{feature}_{channel}`` — the flattened
-    form of cesium's (feature, channel) MultiIndex (SURVEY.md §1.4)."""
-    keys = [key_col] + (["window_start"] if window is not None else [])
-    out = None
-    for ch_name, m in channels.items():
-        part = featurize(df, features, key_col=key_col, m=m, window=window, **kwargs)
-        part = part.select(
-            *keys, *[F.col(f).alias(f"{f}_{ch_name}") for f in features]
-        )
-        out = part if out is None else out.join(part, keys, "outer")
-    return out
 
 
 def attach_meta_features(

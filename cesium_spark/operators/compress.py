@@ -10,9 +10,9 @@ prove the rollup saw exactly those bytes).
 decompress_blocks: the exact inverse of the (ts, value) encoding —
 bit-lossless, verified by roundtrip tests and the text hash.
 
-Physical plan: same single-shuffle batched-group pattern as the kernel
-(repartition on keys + secondary sort + mapInPandas); encode/decode are
-vectorized numpy per group.
+Physical plan: compress_blocks is one ``kernel.map_sorted_groups`` pass
+(one shuffle on (series, window), secondary sort, mapInPandas);
+encode/decode are vectorized numpy per group.
 """
 
 from __future__ import annotations
@@ -25,7 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..codec.gorilla import decode_block, encode_block
-from ..kernel import group_starts, iter_group_frames, ts_micros
+from ..kernel import map_sorted_groups, ts_micros
 from .rollup import TIERS
 
 __all__ = [
@@ -92,7 +92,6 @@ def compress_blocks(
     tiebreak_col: str = "turn_idx",
     value: Column | str | None = None,
     text_col: str | None = "text",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     v_col = F.col(value) if isinstance(value, str) else value
     if v_col is None:
@@ -128,34 +127,29 @@ def compress_blocks(
         + (", text_md5 string" if text_col is not None else "")
     )
 
-    def _mapper(batches):
-        for body in iter_group_frames(batches, keys):
-            starts = group_starts(body, keys)
-            ends = np.append(starts[1:], len(body))
-            ts_all = body["ts_us"].to_numpy(dtype=np.int64)
-            v_all = body["v"].to_numpy(dtype=np.float64)
-            texts = body["_text"].to_numpy() if text_col is not None else None
-            rows = {k: body[k].to_numpy()[starts] for k in keys}
-            n_pts, blocks, raw_b, blk_b, hashes = [], [], [], [], []
-            for s, z in zip(starts, ends):
-                blk = encode_block(ts_all[s:z], v_all[s:z])
-                n_pts.append(z - s)
-                blocks.append(blk)
-                raw_b.append((z - s) * 16)
-                blk_b.append(len(blk))
-                if texts is not None:
-                    hashes.append(digest_chain_hash(texts[s:z]))
-            out = {**rows, "n_points": n_pts, "block": blocks,
-                   "raw_bytes": raw_b, "block_bytes": blk_b}
-            if text_col is not None:
-                out["text_md5"] = hashes
-            yield pd.DataFrame(out)
+    def _per_frame(body, starts):
+        ends = np.append(starts[1:], len(body))
+        ts_all = body["ts_us"].to_numpy(dtype=np.int64)
+        v_all = body["v"].to_numpy(dtype=np.float64)
+        texts = body["_text"].to_numpy() if text_col is not None else None
+        rows = {k: body[k].to_numpy()[starts] for k in keys}
+        n_pts, blocks, raw_b, blk_b, hashes = [], [], [], [], []
+        for s, z in zip(starts, ends):
+            blk = encode_block(ts_all[s:z], v_all[s:z])
+            n_pts.append(z - s)
+            blocks.append(blk)
+            raw_b.append((z - s) * 16)
+            blk_b.append(len(blk))
+            if texts is not None:
+                hashes.append(digest_chain_hash(texts[s:z]))
+        out = {**rows, "n_points": n_pts, "block": blocks,
+               "raw_bytes": raw_b, "block_bytes": blk_b}
+        if text_col is not None:
+            out["text_md5"] = hashes
+        return pd.DataFrame(out)
 
-    npart = num_partitions or narrow.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    arranged = narrow.repartition(int(npart), *keys).sortWithinPartitions(
-        *keys, "ts_us", "_ord"
-    )
-    return arranged.mapInPandas(_mapper, schema=out_schema)
+    return map_sorted_groups(narrow, keys, ["ts_us", "_ord"], _per_frame,
+                             out_schema)
 
 
 def decompress_blocks(

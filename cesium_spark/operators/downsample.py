@@ -20,7 +20,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel import group_starts, iter_group_frames, ts_micros
+from ..kernel import map_sorted_groups, ts_micros
 from .rollup import TIERS
 
 __all__ = ["ohlc_downsample", "lttb_downsample", "m4_downsample",
@@ -63,7 +63,6 @@ def lttb_downsample(
     ts_col: str = "ts",
     tiebreak_col: str = "turn_idx",
     value: Column | str | None = None,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """At most n_out points per series, chosen by LTTB: first and last
     always kept; each interior bucket keeps the point forming the
@@ -120,38 +119,29 @@ def lttb_downsample(
         kept[n - 1] = m - 1
         return kept
 
-    def _mapper(batches):
-        for body in iter_group_frames(batches, [key_col]):
-            starts = group_starts(body, [key_col])
-            ends = np.append(starts[1:], len(body))
-            ts_all = body["ts_us"].to_numpy(dtype=np.int64)
-            v_all = body["v"].to_numpy(dtype=np.float64)
-            keys = body[key_col].to_numpy()
-            out_k, out_t, out_v, out_r = [], [], [], []
-            for s, z in zip(starts, ends):
-                idx = _lttb(ts_all[s:z].astype(np.float64), v_all[s:z], n_out)
-                out_k.append(np.repeat(keys[s], len(idx)))
-                out_t.append(ts_all[s:z][idx])
-                out_v.append(v_all[s:z][idx])
-                out_r.append(np.arange(len(idx), dtype=np.int32))
-            if not out_k:
-                continue
-            yield pd.DataFrame(
-                {
-                    key_col: np.concatenate(out_k),
-                    "ts": np.concatenate(out_t).astype("datetime64[us]"),
-                    "value": np.concatenate(out_v),
-                    "kept_rank": np.concatenate(out_r),
-                }
-            )
+    def _per_frame(body, starts):
+        ends = np.append(starts[1:], len(body))
+        ts_all = body["ts_us"].to_numpy(dtype=np.int64)
+        v_all = body["v"].to_numpy(dtype=np.float64)
+        keys = body[key_col].to_numpy()
+        out_k, out_t, out_v, out_r = [], [], [], []
+        for s, z in zip(starts, ends):
+            idx = _lttb(ts_all[s:z].astype(np.float64), v_all[s:z], n_out)
+            out_k.append(np.repeat(keys[s], len(idx)))
+            out_t.append(ts_all[s:z][idx])
+            out_v.append(v_all[s:z][idx])
+            out_r.append(np.arange(len(idx), dtype=np.int32))
+        return pd.DataFrame(
+            {
+                key_col: np.concatenate(out_k),
+                "ts": np.concatenate(out_t).astype("datetime64[us]"),
+                "value": np.concatenate(out_v),
+                "kept_rank": np.concatenate(out_r),
+            }
+        )
 
-    npart = num_partitions or narrow.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    arranged = narrow.repartition(int(npart), key_col).sortWithinPartitions(
-        key_col, "ts_us", "_ord"
-    )
-    return arranged.mapInPandas(_mapper, schema=out_schema)
+    return map_sorted_groups(narrow, [key_col], ["ts_us", "_ord"], _per_frame,
+                             out_schema)
 
 
 def m4_downsample(

@@ -8,11 +8,11 @@ then the first occurrence of step 2 STRICTLY AFTER it (by the
 (ts, tiebreak) composite), and so on — the standard "first matching
 subsequence" semantics (strict ordering, unbounded horizon).
 
-Physical shape: the kernel idiom — narrow projection, ONE Exchange on
-the series key with a partition-local secondary sort, then a vectorized
-Arrow pass (per step a numpy first-match over the remaining suffix, so
-a k-step funnel is k vectorized scans per series, not a Python row
-loop). Output is series-sized, never event-sized.
+Physical shape: a narrow projection into one ``kernel.map_sorted_groups``
+pass — ONE Exchange on the series key with a partition-local secondary
+sort, then a vectorized Arrow pass (per step a numpy first-match over the
+remaining suffix, so a k-step funnel is k vectorized scans per series,
+not a Python row loop). Output is series-sized, never event-sized.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..kernel import group_starts, iter_group_frames, ts_micros
+from ..kernel import map_sorted_groups, ts_micros
 
 __all__ = ["funnel_conversion", "conversion_latency", "touch_attribution"]
 
@@ -35,7 +35,6 @@ def funnel_conversion(
     type_col: str = "event_type",
     tiebreak_col: str = "event_id",
     round_digits: int = 6,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Per-series funnel over `steps` (ordered event types).
 
@@ -64,72 +63,63 @@ def funnel_conversion(
         "seconds_to_convert double, converted boolean"
     )
 
-    def _mapper(batches):
-        for body in iter_group_frames(batches, [key_col]):
-            starts = group_starts(body, [key_col])
-            ends = np.append(starts[1:], len(body))
-            ts_all = body["ts_us"].to_numpy(dtype=np.int64)
-            ty_all = body["_ty"].to_numpy()
-            keys = body[key_col].to_numpy()
-            out_k, out_n, out_tf, out_td = [], [], [], []
-            for s, z in zip(starts, ends):
-                ty = ty_all[s:z]
-                # rows arrive sorted by (ts_us, _ord); strictly-after is
-                # a row-position bound, so each step is one first-match
-                # over the remaining suffix
-                lo = 0
-                reached = 0
-                t_first = t_deep = None
-                for st in steps:
-                    hits = np.nonzero(ty[lo:] == st)[0]
-                    if hits.size == 0:
-                        break
-                    j = lo + int(hits[0])
-                    reached += 1
-                    t_deep = ts_all[s + j]
-                    if reached == 1:
-                        t_first = t_deep
-                    lo = j + 1
-                out_k.append(keys[s])
-                out_n.append(reached)
-                out_tf.append(t_first)
-                out_td.append(t_deep)
-            if not out_k:
-                continue
-            tf = np.array(
-                [np.datetime64("NaT", "us") if t is None
-                 else np.datetime64(int(t), "us") for t in out_tf],
-                dtype="datetime64[us]",
-            )
-            td = np.array(
-                [np.datetime64("NaT", "us") if t is None
-                 else np.datetime64(int(t), "us") for t in out_td],
-                dtype="datetime64[us]",
-            )
-            nr = np.asarray(out_n, dtype=np.int32)
-            # NaT pairs subtract to 0 here; the nr==k mask discards them
-            diff_us = td.astype("int64") - tf.astype("int64")
-            secs = np.where(
-                nr == k,
-                np.round(diff_us / 1e6 + 1e-9, round_digits),
-                np.nan,
-            )
-            yield pd.DataFrame({
-                key_col: out_k,
-                "steps_reached": nr,
-                "t_first": tf,
-                "t_deepest": td,
-                "seconds_to_convert": secs,
-                "converted": nr == k,
-            })
+    def _per_frame(body, starts):
+        ends = np.append(starts[1:], len(body))
+        ts_all = body["ts_us"].to_numpy(dtype=np.int64)
+        ty_all = body["_ty"].to_numpy()
+        keys = body[key_col].to_numpy()
+        out_k, out_n, out_tf, out_td = [], [], [], []
+        for s, z in zip(starts, ends):
+            ty = ty_all[s:z]
+            # rows arrive sorted by (ts_us, _ord); strictly-after is
+            # a row-position bound, so each step is one first-match
+            # over the remaining suffix
+            lo = 0
+            reached = 0
+            t_first = t_deep = None
+            for st in steps:
+                hits = np.nonzero(ty[lo:] == st)[0]
+                if hits.size == 0:
+                    break
+                j = lo + int(hits[0])
+                reached += 1
+                t_deep = ts_all[s + j]
+                if reached == 1:
+                    t_first = t_deep
+                lo = j + 1
+            out_k.append(keys[s])
+            out_n.append(reached)
+            out_tf.append(t_first)
+            out_td.append(t_deep)
+        tf = np.array(
+            [np.datetime64("NaT", "us") if t is None
+             else np.datetime64(int(t), "us") for t in out_tf],
+            dtype="datetime64[us]",
+        )
+        td = np.array(
+            [np.datetime64("NaT", "us") if t is None
+             else np.datetime64(int(t), "us") for t in out_td],
+            dtype="datetime64[us]",
+        )
+        nr = np.asarray(out_n, dtype=np.int32)
+        # NaT pairs subtract to 0 here; the nr==k mask discards them
+        diff_us = td.astype("int64") - tf.astype("int64")
+        secs = np.where(
+            nr == k,
+            np.round(diff_us / 1e6 + 1e-9, round_digits),
+            np.nan,
+        )
+        return pd.DataFrame({
+            key_col: out_k,
+            "steps_reached": nr,
+            "t_first": tf,
+            "t_deepest": td,
+            "seconds_to_convert": secs,
+            "converted": nr == k,
+        })
 
-    npart = num_partitions or narrow.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    arranged = narrow.repartition(int(npart), key_col).sortWithinPartitions(
-        key_col, "ts_us", "_ord"
-    )
-    return arranged.mapInPandas(_mapper, schema=out_schema)
+    return map_sorted_groups(narrow, [key_col], ["ts_us", "_ord"], _per_frame,
+                             out_schema)
 
 
 def conversion_latency(

@@ -20,9 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel import featurize
 from .aggstate import merge_states, partial_states
-from .rollup import TIERS
+from .rollup import TIERS, rollup_kernel
 
 __all__ = ["merge_new_batch", "affected_windows", "recompute_windows", "incremental_rollup"]
 
@@ -71,8 +70,8 @@ def recompute_windows(
     scoped = keyed.join(
         F.broadcast(dirty), [key_col, "window_start"], "left_semi"
     ).drop("window_start")
-    return featurize(scoped, features, key_col=key_col, ts_col=ts_col,
-                     window=TIERS.get(tier, tier), **kwargs)
+    return rollup_kernel(scoped, features, tier, key_col=key_col,
+                         ts_col=ts_col, **kwargs)
 
 
 def incremental_rollup(

@@ -2,23 +2,22 @@
 retention tiers (1m / 1h / 1d) plus a pure-SQL fast path for the
 mergeable feature subset.
 
-Two physical strategies, chosen per feature set:
+1. The kernel path, ``rollup_tiers`` (``rollup_kernel`` is its one-tier
+   case) — the full cesium feature registry, every requested tier in one
+   ``kernel.map_sorted_groups`` pass: one shuffle on (series, UTC day),
+   one sort, one mapInPandas. Needed for order-sensitive / non-mergeable
+   features (median, MAD, percentiles, stetson, peaks...). A tier's
+   window nests in a UTC day, so (series, day) bounds group size.
 
-1. ``rollup_kernel`` — the full cesium feature registry via one
-   applyInPandas per (series, window). Needed for order-sensitive /
-   non-mergeable features (median, MAD, percentiles, stetson, peaks...).
-   Window bounds group size, so even a hot conversation's 1m window fits
-   one task. ``rollup_tiers`` computes several tiers in one such pass.
-
-2. ``rollup_sql`` — whole-stage-codegen JVM aggregation for the features
-   expressible as exact built-in aggs (count/mean/min/max/stddev_pop/...).
-   No Python in the hot path; this is the 100 TB fast lane and is provably
-   identical to the kernel for these features (modulo float summation
-   order; see tests).
+2. The SQL lane, ``rollup_sql`` — whole-stage-codegen JVM aggregation
+   for the features expressible as exact built-in aggs
+   (count/mean/min/max/stddev_pop/...). No Python in the hot path; this
+   is the 100 TB fast lane and is provably identical to the kernel for
+   these features (modulo float summation order; see tests).
 
 Tier semantics: window_start = floor(event-time) to the tier width,
-computed with date_trunc-equivalent ``F.window`` so Iceberg/parquet
-partition pruning on ts still applies upstream.
+epoch-aligned as ``F.window``, so Iceberg/parquet partition pruning on ts
+still applies upstream.
 """
 
 from __future__ import annotations
@@ -30,8 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..kernel import (
-    SECONDS_PER_DAY, featurize, kernel_columns, make_batch_kernel,
-    map_sorted_groups, ts_micros,
+    SECONDS_PER_DAY, kernel_columns, make_batch_kernel, map_sorted_groups,
+    ts_micros,
 )
 
 TIERS = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
@@ -61,13 +60,13 @@ def rollup_kernel(
     m: Column | str | None = None,
     e: Column | str | None = None,
 ) -> DataFrame:
-    """Full-registry featurization at one tier; output one row per
-    (series, window_start)."""
-    window = TIERS.get(tier, tier)
-    return featurize(
-        df, features, key_col=key_col, ts_col=ts_col, tiebreak_col=tiebreak_col,
-        m=m, e=e, window=window,
-    )
+    """Full-registry featurization at one tier (a width that divides a
+    day, see `tier_micros`); output one row per (series, window_start):
+    the one-tier case of `rollup_tiers`."""
+    return rollup_tiers(
+        df, features, [tier], key_col=key_col, ts_col=ts_col,
+        tiebreak_col=tiebreak_col, m=m, e=e,
+    ).drop("tier")
 
 
 def rollup_sql(
@@ -141,8 +140,8 @@ def rollup_tiers(
     num_partitions: int | None = None,
 ) -> DataFrame:
     """Every tier in ONE pass: output ``(tier, key, window_start,
-    features...)`` where the rows of tier t equal ``rollup_kernel(df,
-    features, t)``.
+    features...)``, where each row of tier t equals ``compute_features``
+    over the rows of its (series, t-window) in (t, tiebreak) order.
 
     Each tier's window nests in a (series, UTC day), so the rows are
     shuffled once on (key, day), sorted by (key, day, t, tiebreak) in the
@@ -175,8 +174,9 @@ def rollup_tiers(
         *[StructField(f, DoubleType(), True) for f in features],
     ])
     keys = [key_col, "_day"]
-    mapper = make_batch_kernel(features, keys, const_e=const_e, windows=windows)
-    return map_sorted_groups(narrow, keys, mapper, schema, num_partitions)
+    per_frame = make_batch_kernel(features, keys, const_e=const_e, windows=windows)
+    return map_sorted_groups(narrow, keys, ["t", "_ord"], per_frame, schema,
+                             num_partitions)
 
 
 def rollup_hop(

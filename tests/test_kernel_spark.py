@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from cesium_spark.datagen import generate_transcripts
 from cesium_spark.features.registry import compute_features
 from cesium_spark.kernel import featurize, SECONDS_PER_DAY
+from cesium_spark.operators.rollup import rollup_kernel
 
 FEATS = [
     "n_epochs", "mean", "std", "amplitude", "total_time", "avgt",
@@ -65,7 +66,7 @@ def test_row_order_invariance(spark, transcripts):
 
 def test_windowed_featurize_matches_pandas_grouping(spark, transcripts):
     feats = ["n_epochs", "mean", "amplitude", "std"]
-    result = featurize(transcripts, feats, window="1 hour").toPandas()
+    result = rollup_kernel(transcripts, feats, "1h").toPandas()
     local = transcripts.toPandas()
     local["window_start"] = local["ts"].dt.floor("h")
     assert len(result) == local.groupby(["conv_id", "window_start"]).ngroups
@@ -115,7 +116,7 @@ def test_batched_windows_equal_compute_features(spark, transcripts):
     reference compute_features over that window's rows in (t, turn_idx)
     order, bit for bit."""
     feats = ["n_epochs", "mean", "std", "median", "stetson_j", "cads_avg"]
-    got = featurize(transcripts, feats, window="1 hour") \
+    got = rollup_kernel(transcripts, feats, "1h") \
         .toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
     local = transcripts.toPandas()
     local["window_start"] = local["ts"].dt.floor("h")
@@ -124,26 +125,6 @@ def test_batched_windows_equal_compute_features(spark, transcripts):
         for (c, w), g in local.groupby(["conv_id", "window_start"])
     ])
     pd.testing.assert_frame_equal(got, want[got.columns])
-
-
-def test_multichannel_featurize(spark, transcripts):
-    """Two channels over shared t/e axes: per-channel values equal the
-    single-channel runs; columns follow the {feature}_{channel} flattening."""
-    from cesium_spark.kernel import featurize_multichannel
-
-    feats = ["n_epochs", "mean", "std", "median"]
-    chans = {
-        "len": F.length("text").cast("double"),
-        "words": F.size(F.split("text", " ")).cast("double"),
-    }
-    multi = featurize_multichannel(transcripts, feats, chans) \
-        .toPandas().sort_values("conv_id").reset_index(drop=True)
-    for ch, m in chans.items():
-        single = featurize(transcripts, feats, m=m) \
-            .toPandas().sort_values("conv_id").reset_index(drop=True)
-        for f in feats:
-            npt.assert_allclose(multi[f"{f}_{ch}"], single[f], rtol=1e-12,
-                                err_msg=f"{f}_{ch}")
 
 
 def test_attach_meta_features(spark, transcripts):

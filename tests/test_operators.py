@@ -220,34 +220,59 @@ def _sorted_pdf(sdf):
 
 @pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
 def test_run_rollup_one_pass_equals_per_tier_kernel(spark, tmp_path, ts_type):
-    """The one-pass bucket rollup writes, for every tier, exactly what
-    rollup_kernel computes for that tier alone: same windows, values and
-    schema, a feature outside the segmented fast path included, for
-    TIMESTAMP and TIMESTAMP_NTZ event times."""
+    """The one-pass bucket rollup writes, for every tier, the reference
+    kernel's values per window: `compute_features` over the rows of each
+    (conv_id, pandas-floored tier window) in (t, turn_idx) order, bit for
+    bit, a feature outside the segmented fast path included, for
+    TIMESTAMP and TIMESTAMP_NTZ event times. A row with NULL ts lands in
+    no window."""
+    from pyspark.sql.types import DoubleType
+
     from cesium_spark.features.fastpath import FAST_FEATS
+    from cesium_spark.features.registry import compute_features
     from cesium_spark.jobs import run_rollup
+    from cesium_spark.kernel import SECONDS_PER_DAY
 
     feats = ["n_epochs", "mean", "median", "stetson_j", "anderson_darling"]
     assert "anderson_darling" not in FAST_FEATS
-    tiers = ("1m", "1h", "1d", "15 minutes")
-    df = generate_transcripts(spark, n_convs=8, seed=5, max_turns=400) \
-        .withColumn("ts", F.col("ts").cast(ts_type))
+    tiers = {"1m": "min", "1h": "h", "1d": "D", "15 minutes": "15min"}
+    df = generate_transcripts(spark, n_convs=8, seed=5, max_turns=400)
+    no_ts = df.limit(1).withColumn("ts", F.lit(None).cast("timestamp")) \
+        .withColumn("turn_idx", F.lit(10**6))
+    df = df.unionByName(no_ts).withColumn("ts", F.col("ts").cast(ts_type))
     inp, out = str(tmp_path / "in"), str(tmp_path / "out")
     df.write.parquet(inp)
-    units = run_rollup(spark, inp, out, tiers=tiers, features=feats,
+    units = run_rollup(spark, inp, out, tiers=tuple(tiers), features=feats,
                        bucket_days=3, verbose=False)
     assert len({u["unit"] for u in units}) == len(units) > len(tiers)
 
     src = spark.read.parquet(inp)
-    for tier in tiers:
+    local = src.toPandas()
+    assert local["ts"].isna().sum() == 1
+    local = local[local["ts"].notna()]
+
+    def reference(g):
+        g = g.sort_values(["ts", "turn_idx"], kind="stable")
+        us = (g["ts"] - pd.Timestamp(0)).to_numpy().astype("timedelta64[us]").astype(np.int64)
+        t = us.astype(np.float64) / (SECONDS_PER_DAY * 1e6)
+        m = g["text"].str.len().to_numpy(dtype=np.float64)
+        return compute_features(t, m, np.full(len(g), 1e-4), feats)
+
+    for tier, freq in tiers.items():
         got = spark.read.parquet(f"{out}/tier={tier}").drop("bucket")
-        want = rollup_kernel(src, feats, tier)
-        assert [(f.name, f.dataType) for f in got.schema] == \
-            [(f.name, f.dataType) for f in want.schema]
-        assert dict(got.dtypes)["window_start"] == ts_type
-        pd.testing.assert_frame_equal(_sorted_pdf(got), _sorted_pdf(want))
-        windows = sum(u["windows_out"] for u in units if u["unit"].startswith(f"tier-{tier}-"))
-        assert windows == got.count()
+        assert [(f.name, f.dataType) for f in got.schema] == [
+            ("conv_id", src.schema["conv_id"].dataType),
+            ("window_start", src.schema["ts"].dataType),
+            *[(f, DoubleType()) for f in feats],
+        ]
+        windows = local.assign(window_start=local["ts"].dt.floor(freq))
+        want = pd.DataFrame([
+            {"conv_id": c, "window_start": w, **reference(g)}
+            for (c, w), g in windows.groupby(["conv_id", "window_start"])
+        ])
+        pd.testing.assert_frame_equal(_sorted_pdf(got), want)
+        n_out = sum(u["windows_out"] for u in units if u["unit"].startswith(f"tier-{tier}-"))
+        assert n_out == got.count()
 
 
 def test_run_rollup_resume_recomputes_only_the_stale_tier(spark, transcripts, tmp_path):
@@ -721,7 +746,7 @@ def test_partition_invariance_of_new_operators(spark, transcripts):
             rollup_states(partial_states(transcripts, "1m"), "1h"),
             ["conv_id", "window_start"],
         ).toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
-        d = lttb_downsample(transcripts, n_out=40, num_partitions=None) \
+        d = lttb_downsample(transcripts, n_out=40) \
             .toPandas().sort_values(["conv_id", "kept_rank"]).reset_index(drop=True)
         return a, o, c, d
 

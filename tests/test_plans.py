@@ -7,8 +7,11 @@ from pyspark.sql import functions as F
 
 from cesium_spark.datagen import generate_transcripts
 from cesium_spark.kernel import featurize
+from cesium_spark.operators.compress import compress_blocks
+from cesium_spark.operators.downsample import lttb_downsample
+from cesium_spark.operators.funnel import funnel_conversion
 from cesium_spark.operators.locf import locf_grid
-from cesium_spark.operators.rollup import rollup_sql
+from cesium_spark.operators.rollup import rollup_kernel, rollup_sql
 
 
 @pytest.fixture(scope="module")
@@ -24,13 +27,25 @@ def _plan(df):
     return df._jdf.queryExecution().toString()
 
 
-def test_featurize_single_exchange(spark, tiny):
-    """The kernel path: exactly ONE hash-partitioning exchange (on the
-    group key), the secondary sort stays in-partition."""
-    out = featurize(tiny, ["n_epochs", "mean", "std"], window="1 hour")
-    plan = _plan(out)
+GROUPED_OPERATORS = {
+    "featurize": lambda df: featurize(df, ["n_epochs", "mean", "std"]),
+    "rollup_kernel_1h": lambda df: rollup_kernel(df, ["n_epochs", "median"], "1h"),
+    "lttb_downsample": lambda df: lttb_downsample(df, n_out=20),
+    "compress_blocks": lambda df: compress_blocks(df, "1h"),
+    "funnel_conversion": lambda df: funnel_conversion(
+        df, ["user", "assistant"], key_col="conv_id", type_col="role",
+        tiebreak_col="turn_idx"),
+}
+
+
+@pytest.mark.parametrize("op", list(GROUPED_OPERATORS))
+def test_featurize_single_exchange(spark, tiny, op):
+    """Every batched grouped operator (one `map_sorted_groups` pass):
+    exactly ONE hash-partitioning exchange (on the group key) and ONE
+    MapInPandas; the secondary sort stays in-partition."""
+    plan = GROUPED_OPERATORS[op](tiny)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Exchange hashpartitioning") == 1
-    assert "MapInPandas" in plan
+    assert plan.count("MapInPandas") == 1
 
 
 def test_bucket_rollup_one_exchange_one_python_pass(spark, tiny):
