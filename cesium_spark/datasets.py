@@ -127,7 +127,7 @@ def build_time_series_archive(archive_path, ts_paths) -> None:
 
 def write_header(header_path, filenames, classes, metadata=None) -> None:
     """Header CSV (filename, class[, meta...]) keyed by shortened
-    series names — the join key attach_meta_features uses."""
+    series names — the key a featureset joins its meta features on."""
     from .sources.transcripts import shorten_fname
 
     cols = {

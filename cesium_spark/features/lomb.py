@@ -44,34 +44,16 @@ def _rotate(s, c, s0, c0):
     c[:] = c0 * c - s0 * tmp
 
 
-def _do_lomb(cn, sinx, cosx, wth):
-    """Single sin+cos weighted LS power at the current rotation state.
-    wth: (detrend_order+1, n) orthonormal detrending basis rows."""
-    st0 = wth @ sinx
-    ct0 = wth @ cosx
-    st = float(st0 @ st0)
-    ct = float(ct0 @ ct0)
-    cst = float(st0 @ ct0)
-    cs = float(cosx @ sinx) - cst
-    c2raw = float(cosx @ cosx)
-    sh = float(sinx @ cn)
-    ch = float(cosx @ cn)
-    s2 = 1.0 - c2raw - st
-    c2 = c2raw - ct
-    detm = c2 * s2 - cs * cs
-    if detm > 0:
-        return (c2 * sh * sh - 2.0 * cs * ch * sh + s2 * ch * ch) / detm
-    return 0.0
-
-
 def _do_lomb_batch(cn, S, C, wth):
-    """`_do_lomb` over a whole chunk of frequencies at once: S/C are
-    (B, n) rows of the rotation recurrence; every reduction becomes one
-    BLAS/numpy call for the chunk instead of ~10 tiny calls per
+    """Weighted sin+cos LS power for a whole chunk of frequencies at
+    once: S/C are (B, n) rows of the rotation recurrence, and wth is the
+    (detrend_order+1, n) orthonormal detrending basis. Every reduction
+    is one BLAS/numpy call for the chunk instead of ~10 tiny calls per
     frequency. Accumulation order inside each reduction differs from the
-    scalar path only at the ~1e-15 pairwise-summation level (same class
-    of difference as the documented numpy-vs-C deltas, far inside the
-    golden 1e-6 tolerance); the branch structure (detm > 0) is identical."""
+    C reference's per-frequency loop only at the ~1e-15 pairwise-summation
+    level (same class of difference as the documented numpy-vs-C deltas,
+    far inside the golden 1e-6 tolerance); the branch structure
+    (detm > 0) is identical."""
     st0 = S @ wth.T  # (B, dord+1)
     ct0 = C @ wth.T
     st = np.einsum("ij,ij->i", st0, st0)

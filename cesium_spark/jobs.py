@@ -22,6 +22,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -108,11 +109,22 @@ def run_rollup(
     # rows with NULL ts fall in no window of any tier, so in no unit
     days = [r["d"] for r in per_day if r["d"] is not None]
     day_rows = {r["d"]: r["n"] for r in per_day}
-    buckets = [days[i: i + bucket_days] for i in range(0, len(days), bucket_days)]
+    # bucket k holds the days in the calendar range [anchor + k *
+    # bucket_days, anchor + (k + 1) * bucket_days), keyed by its first
+    # calendar day, so late rows on a day that had none join their own
+    # bucket instead of shifting every later one. The anchor is the
+    # earliest committed bucket, or the input's first day on a first run.
+    keys = [u.rpartition("-")[2] for u in log.units()
+            if re.fullmatch(r"tier-.+-days-\d{8}", u)]
+    anchor = dt.datetime.strptime(min(keys), "%Y%m%d") if keys else min(days, default=None)
+    buckets = {}  # in calendar order, as `days` is sorted
+    for d in days:
+        start = anchor + dt.timedelta(days=(d - anchor).days // bucket_days * bucket_days)
+        buckets.setdefault(start, []).append(d)
 
     results = {}
-    for bi, bucket in enumerate(buckets):
-        key = bucket[0].strftime("%Y%m%d")
+    for bi, (start, bucket) in enumerate(buckets.items()):
+        key = start.strftime("%Y%m%d")
         rows_in = sum(day_rows[d] for d in bucket)
         units = {tier: f"tier-{tier}-days-{key}" for tier in tiers}
         due = []

@@ -40,8 +40,7 @@ DEFAULT_ERROR_VALUE = 1e-4  # cesium's DEFAULT_ERROR_VALUE (time_series.py:10)
 SECONDS_PER_DAY = 86400.0
 
 __all__ = [
-    "featurize", "attach_meta_features",
-    "ts_micros", "DEFAULT_ERROR_VALUE", "SECONDS_PER_DAY",
+    "featurize", "ts_micros", "DEFAULT_ERROR_VALUE", "SECONDS_PER_DAY",
 ]
 
 
@@ -253,14 +252,3 @@ def kernel_columns(
         F.col(tiebreak_col).cast("long").alias("_ord"),
     ]
     return cols, const_e
-
-
-def attach_meta_features(
-    featureset: DataFrame,
-    meta: DataFrame,
-    key_col: str = "conv_id",
-) -> DataFrame:
-    """Join scalar per-series meta-features onto a featureset — cesium's
-    meta_features columns (featurize.py:136-141) as a broadcast hash join
-    on the series key."""
-    return featureset.join(F.broadcast(meta), key_col, "left")

@@ -4,9 +4,10 @@ Append-mostly ingestion with late/out-of-order data (SURVEY.md §2.9): new
 batches touch a small set of (series, window) pairs; only those windows
 are re-aggregated.
 
-Mergeable features: `merge_new_batch` — aggregate the new batch to partial
-states and merge with the existing state table (pure state algebra, never
-touches old raw data).
+Mergeable features need no operator here: the batch's partial states
+(aggstate.partial_states) union the existing state table and
+aggstate.merge_states folds them per (series, window) — pure state
+algebra, never touching old raw data.
 
 Non-mergeable features (median/MAD/percentiles/peaks): `affected_windows`
 identifies the dirty (series, window) keys; `recompute_windows` semi-joins
@@ -20,26 +21,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .aggstate import merge_states, partial_states
 from .rollup import TIERS, rollup_kernel
 
-__all__ = ["merge_new_batch", "affected_windows", "recompute_windows", "incremental_rollup"]
-
-
-def merge_new_batch(
-    existing_states: DataFrame,
-    new_batch: DataFrame,
-    tier: str,
-    key_col: str = "conv_id",
-    **kwargs,
-) -> DataFrame:
-    """State table after absorbing `new_batch`: union old states with the
-    batch's partial states and merge per (key, window). Works for any
-    arrival order / lateness — state merge is commutative+associative."""
-    batch_states = partial_states(new_batch, tier, key_col=key_col, **kwargs)
-    return merge_states(
-        existing_states.unionByName(batch_states), [key_col, "window_start"]
-    )
+__all__ = ["affected_windows", "recompute_windows", "incremental_rollup"]
 
 
 def affected_windows(new_batch: DataFrame, tier: str, key_col: str = "conv_id",

@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-__all__ = ["zorder_key", "zorder_cells", "compaction_plan", "rewrite_zordered"]
+__all__ = ["zorder_key", "zorder_cells", "rewrite_zordered"]
 
 
 def zorder_key(x: Column, y: Column, bits: int = 8) -> Column:
@@ -91,43 +91,6 @@ def zorder_cells(
         F.round(F.col("_span") + F.lit(1e-9), round_digits).alias("span_s"),
         F.round(F.col("n") / F.sum("n").over(wt) + F.lit(1e-9), round_digits)
         .alias("share"),
-    )
-
-
-def compaction_plan(
-    cells: DataFrame,
-    target_rows: int,
-    cell_col: str = "z_cell",
-    n_col: str = "n",
-) -> DataFrame:
-    """Greedy sequential bin-packing of layout cells into rewrite
-    groups of ~``target_rows`` rows: group = floor(cum_rows_before /
-    target). Deterministic in cell order, so the plan is replayable by
-    any engine — the file-compaction half of an Iceberg
-    `rewrite_data_files` maintenance pass (small neighboring z-cells
-    coalesce into one file; a huge cell keeps its own group(s)).
-
-    Returns (grp, n_cells, rows, z_min, z_max). Runs entirely on the
-    cell relation (bounded by the curve resolution, never by data):
-    one cumulative window + one groupBy."""
-    from pyspark.sql.window import Window
-
-    w = (
-        Window.orderBy(cell_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    assigned = cells.select(
-        F.col(cell_col),
-        F.col(n_col),
-        F.floor(
-            (F.sum(n_col).over(w) - F.col(n_col)) / F.lit(target_rows)
-        ).cast("long").alias("grp"),
-    )
-    return assigned.groupBy("grp").agg(
-        F.count("*").cast("long").alias("n_cells"),
-        F.sum(n_col).cast("long").alias("rows"),
-        F.min(cell_col).alias("z_min"),
-        F.max(cell_col).alias("z_max"),
     )
 
 

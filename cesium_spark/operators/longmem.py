@@ -50,6 +50,8 @@ def _r6(c: Column) -> Column:
 
 def _hourly_grid(df: DataFrame, key_cols, ts_col: str,
                  value_col: str) -> DataFrame:
+    """(key..., h, x): each key's mean value per hour, rounded at 6 —
+    the grid the trend, wavelet and long-memory readouts share."""
     return (
         df.groupBy(*key_cols, F.date_trunc("hour", F.col(ts_col)).alias("h"))
         .agg(_r6(F.avg(F.col(value_col).cast("double"))).alias("x"))

@@ -6,7 +6,7 @@ threshold; the session id is the running count of such openings. Both
 windows share one partitioning on the series key, so the whole operator
 is a single shuffle + two window passes, pure JVM. The streaming
 counterpart (state across micro-batches) is
-streaming.stream.streaming_sessionize.
+streaming.stream.streaming_session_window.
 """
 
 from __future__ import annotations

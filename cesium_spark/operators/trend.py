@@ -23,19 +23,16 @@ double Var(S) (integer-arithmetic numerator / 18.0) and rounded at 6.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .longmem import _hourly_grid, _r6
 
 __all__ = ["mann_kendall", "mann_kendall_from_grid", "rolling_slope",
            "rolling_slope_from_grid", "seasonal_mann_kendall",
            "poisson_trend", "prewhitened_mann_kendall"]
 
-_EPS = 1e-9
 _Z_CRIT = 1.96
-
-
-def _r6(c: Column) -> Column:
-    return F.round(c + F.lit(_EPS), 6)
 
 
 def mann_kendall(
@@ -52,11 +49,7 @@ def mann_kendall(
     (0.0 when var_s = 0, e.g. an all-tied or single-point series), and
     trend in {'increasing', 'decreasing', 'none'} at |z| > 1.96.
     """
-    gcols = list(key_cols)
-    grid = (
-        df.groupBy(*gcols, F.date_trunc("hour", F.col(ts_col)).alias("h"))
-        .agg(_r6(F.avg(F.col(value_col).cast("double"))).alias("x"))
-    )
+    grid = _hourly_grid(df, list(key_cols), ts_col, value_col)
     return mann_kendall_from_grid(grid, key_cols)
 
 
@@ -136,12 +129,8 @@ def seasonal_mann_kendall(
     Returns (key..., n, n_seasons, s_stat, var_s, z, trend).
     """
     gcols = list(key_cols)
-    grid = (
-        df.groupBy(*gcols,
-                   F.hour(F.col(ts_col)).alias("season"),
-                   F.date_trunc("hour", F.col(ts_col)).alias("h"))
-        .agg(_r6(F.avg(F.col(value_col).cast("double"))).alias("x"))
-    )
+    grid = _hourly_grid(df, gcols, ts_col, value_col) \
+        .withColumn("season", F.hour("h"))
     per_season = mann_kendall_from_grid(
         grid, key_cols=tuple(gcols) + ("season",))
     tot = per_season.groupBy(*gcols).agg(
@@ -192,10 +181,7 @@ def prewhitened_mann_kendall(
     from pyspark.sql import Window
 
     gcols = list(key_cols)
-    grid = (
-        df.groupBy(*gcols, F.date_trunc("hour", F.col(ts_col)).alias("h"))
-        .agg(_r6(F.avg(F.col(value_col).cast("double"))).alias("x"))
-    )
+    grid = _hourly_grid(df, gcols, ts_col, value_col)
     w = Window.partitionBy(*gcols).orderBy("h")
     lagged = grid.select(*gcols, "h", "x",
                          F.lag("x", 1).over(w).alias("_xp"))

@@ -27,16 +27,12 @@ same IEEE double in both engines.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .longmem import _hourly_grid, _r6
+
 __all__ = ["haar_energy", "haar_details", "haar_compress_profile"]
-
-_EPS = 1e-9
-
-
-def _r6(c: Column) -> Column:
-    return F.round(c + F.lit(_EPS), 6)
 
 
 def haar_details(
@@ -50,10 +46,7 @@ def haar_details(
     the shared substrate of haar_energy and haar_compress_profile.
     Bounded by levels x grid blocks."""
     gcols = list(key_cols)
-    grid = (
-        df.groupBy(*gcols, F.date_trunc("hour", F.col(ts_col)).alias("h"))
-        .agg(_r6(F.avg(F.col(value_col).cast("double"))).alias("x"))
-    )
+    grid = _hourly_grid(df, gcols, ts_col, value_col)
     w = Window.partitionBy(*gcols).orderBy("h")
     gi = grid.select(
         *gcols, "x", (F.row_number().over(w) - 1).cast("long").alias("idx")

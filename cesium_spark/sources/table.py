@@ -185,18 +185,6 @@ class SnapshotTable:
 
     # ------------------------------------------------------- maintenance
 
-    def rollback(self, snapshot_id: str) -> str:
-        """Roll the table back to an earlier snapshot — Iceberg's
-        `rollback_to_snapshot`: appends a NEW snapshot whose live
-        file-set is the old one's, so the rollback itself is in the
-        history (and can be rolled back)."""
-        log = self._load_log()
-        matches = [s for s in log if s["snapshot_id"] == snapshot_id]
-        if not matches:
-            raise KeyError(f"unknown snapshot {snapshot_id}")
-        return self._append_snapshot(
-            matches[0]["paths"], "rollback", log, matches[0].get("schema"))
-
     def delete_files(
         self,
         spark: SparkSession,

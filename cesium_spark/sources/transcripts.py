@@ -135,7 +135,7 @@ def read_headerfile(
     (name, label, <meta feature columns...>).
 
     - ``filename`` column values are shortened to extension-less basenames
-      and become ``name`` (the join key for attach_meta_features);
+      and become ``name`` (the key to join onto a featureset's series);
     - any of label/target/class/class_label normalizes to ``label``
       (NULL when the header has no label column);
     - every other column passes through as a meta feature;

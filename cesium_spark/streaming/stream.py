@@ -4,23 +4,21 @@ batch-incremental path (operators/incremental.py + lineage checkpoints)
 stays the primary ingestion mode; most heads here are the live twin of
 a batch operator and are tested against it. Three families:
 
-  - Windowed aggregates (`streaming_rollup`, `streaming_partial_states`,
-    `streaming_session_window`; `streaming_exact_dedup` is the same kind
-    of watermarked Spark operator): their state is Spark's own streaming
+  - Windowed aggregates (`streaming_partial_states`,
+    `streaming_session_window`): their state is Spark's own streaming
     state, evicted by the watermark. Only mergeable aggregates run here;
     non-mergeable features come from the batch kernel over closed
     windows downstream (the `complete/dirty` flag pattern from SURVEY.md
     §7 risk 4).
   - Keyed-state heads: one carried state tuple per key, folded over each
-    micro-batch by `applyInPandasWithState`. Eleven of them share the
-    frame `_keyed_state_head` and supply only a narrow projection, their
-    state and output fields, and a pure fold step. `streaming_sessionize`
-    (event-time timeout, several closed sessions per batch) is written
-    out by hand.
+    micro-batch by `applyInPandasWithState`. All eleven go through the
+    one frame `_keyed_state_head` and supply only a narrow projection,
+    their state and output fields, and a pure fold step.
   - foreachBatch store heads (`*_batch_fn`): each micro-batch is merged
     into a store on disk, a SnapshotTable for the index, verdict and HLL
     heads and one partial per batch directory for the sum-merged
-    sketches.
+    sketches. The caller owns the `readStream`/`foreachBatch` query;
+    `start_ivf_index_stream` is the one packaged file-source starter.
 """
 from __future__ import annotations
 
@@ -37,14 +35,10 @@ from pyspark.sql.types import (
 )
 
 from ..kernel import SECONDS_PER_DAY, ts_micros
-from .rollup_schema import STREAM_ROLLUP_COLUMNS
 
 __all__ = [
-    "streaming_rollup", "streaming_partial_states", "start_file_stream",
-    "streaming_sessionize", "start_session_stream",
-    "streaming_exact_dedup", "span_dedup_batch_fn",
-    "start_span_dedup_stream", "minhash_dedup_batch_fn",
-    "start_minhash_dedup_stream", "ivf_index_batch_fn",
+    "streaming_partial_states", "span_dedup_batch_fn",
+    "minhash_dedup_batch_fn", "ivf_index_batch_fn",
     "start_ivf_index_stream", "streaming_run_stats", "streaming_psi",
     "contamination_batch_fn",
     "streaming_anomaly_zscore", "streaming_session_window",
@@ -57,43 +51,6 @@ __all__ = [
     "m4_batch_fn", "m4_state",
     "grid_batch_fn", "grid_state",
 ]
-
-
-def streaming_rollup(
-    stream_df: DataFrame,
-    tier: str = "1 hour",
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    m=None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked tumbling-window mergeable aggregates over a streaming
-    DataFrame; schema matches rollup_sql's output plus window_end."""
-    m_col = F.col(m) if isinstance(m, str) else m
-    if m_col is None:
-        m_col = F.length(F.col("text")).cast("double")
-    t_days = ts_micros(F.col(ts_col)).cast("double") / F.lit(SECONDS_PER_DAY * 1e6)
-    w = F.window(F.col(ts_col), tier)
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .select(F.col(key_col), F.col(ts_col), m_col.alias("m"), t_days.alias("t"))
-        .groupBy(key_col, w.alias("w"))
-        .agg(
-            F.count("*").cast("double").alias("n_epochs"),
-            F.avg("m").alias("mean"),
-            F.min("m").alias("minimum"),
-            F.max("m").alias("maximum"),
-            ((F.max("m") - F.min("m")) / 2.0).alias("amplitude"),
-            F.stddev_pop("m").alias("std"),
-            (F.max("t") - F.min("t")).alias("total_time"),
-        )
-        .select(
-            key_col,
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            *STREAM_ROLLUP_COLUMNS,
-        )
-    )
 
 
 def streaming_partial_states(
@@ -172,231 +129,6 @@ def streaming_partial_states(
             ),
             *[F.col(c) for c in STATE_COLS],
         )
-    )
-
-
-def _start_available_now(spark, input_dir: str, schema, checkpoint_dir: str,
-                         sink, max_files_per_trigger: int | None = None):
-    """Stream the parquet files under `input_dir` through `sink` (a
-    function from the source DataFrame to its DataStreamWriter) with an
-    availableNow trigger: drains what exists, then stops — restartable
-    from `checkpoint_dir`. `max_files_per_trigger` caps the files per
-    micro-batch (Spark rejects a value below 1); None drains every
-    pending file in one batch. Returns the StreamingQuery."""
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return (
-        sink(reader.parquet(input_dir))
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def start_file_stream(
-    spark,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema,
-    tier: str = "1 hour",
-    watermark: str = "2 hours",
-    **kwargs,
-):
-    """File-source streaming job: new parquet files under `input_dir`
-    roll into append-mode parquet tier output. Returns the StreamingQuery
-    (caller awaits/stops)."""
-    return _start_available_now(
-        spark, input_dir, schema, checkpoint_dir,
-        lambda src: streaming_rollup(src, tier=tier, watermark=watermark, **kwargs)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", output_dir),
-    )
-
-
-def streaming_exact_dedup(
-    stream_df: DataFrame,
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """First-seen exact dedup over a document stream: each distinct text
-    digest is emitted once (its first arrival); re-arrivals within the
-    watermark horizon are dropped.
-
-    State discipline: the digest (32-byte md5, never the text) is the
-    dedup key, and `dropDuplicatesWithinWatermark` lets Spark evict a
-    digest's state once the watermark passes its event time — bounded
-    state at any stream length, the standard streaming-dedup contract
-    (a duplicate arriving LATER than the watermark horizon after its
-    first copy is treated as new; choose the horizon to cover the
-    expected duplication window)."""
-    return (
-        stream_df.withColumn("text_md5", F.md5(F.col(text_col)))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(["text_md5"])
-        .drop("text_md5")  # internal dedup key, not part of the contract
-    )
-
-
-def streaming_sessionize(
-    stream_df: DataFrame,
-    gap_minutes: int = 30,
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    watermark: str | None = None,
-):
-    """Custom stateful streaming operator via applyInPandasWithState:
-    gap-based sessionization whose open-session state survives micro-batch
-    boundaries (an event arriving in a later batch within the gap keeps
-    extending the same session).
-
-    Emits one row per CLOSED session (closed = a later event arrived more
-    than `gap_minutes` after it): (key, session_start, session_end,
-    n_events).
-
-    Trailing-session closure — two modes:
-      - watermark=None (default): the open trailing session stays in
-        state indefinitely and closes only when a sufficiently-late event
-        arrives; readers needing end-of-stream flushes send a per-key
-        sentinel event past the gap. Deterministic under availableNow
-        replays, which the engine's resume story needs.
-      - watermark="2 hours" (any interval string): event-time timeout —
-        when the stream's watermark passes (session_end + gap), the open
-        session closes and its state is freed, bounding state for
-        inactive keys. Closure timing then depends on watermark advance
-        (i.e. on batch boundaries), the standard streaming trade.
-
-    Input assumption: per-key events may arrive out of order WITHIN a
-    micro-batch (each batch is sorted here), but an event older than the
-    carried session's last timestamp in a LATER batch merges into the
-    open session (session_start stays pinned; it never reopens closed
-    sessions). Use the watermark mode to bound how late such events can
-    be, or keep per-key delivery ordered.
-
-    Per-group work is vectorized numpy (diff + flatnonzero over the
-    batch's sorted event times merged with the carried state) — the
-    Python boundary stays Arrow-batched, no per-row loop.
-    """
-    gap_us = int(gap_minutes) * 60 * 1_000_000
-    out_schema = StructType([
-        StructField(key_col, StringType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-    ])
-    # open-session state: (first event us, last event us, event count)
-    state_schema = StructType([
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-    ])
-
-    gap_ms = gap_us // 1000
-    use_timeout = watermark is not None
-
-    def fn(key, pdfs, state):
-        if use_timeout and state.hasTimedOut:
-            # watermark passed (last event + gap): the open session is
-            # definitively closed — no in-watermark event can extend it
-            start_us, last_us, n_carry = state.get
-            state.remove()
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]],
-                    "session_start": pd.to_datetime([start_us], unit="us"),
-                    "session_end": pd.to_datetime([last_us], unit="us"),
-                    "n_events": [n_carry],
-                }
-            )
-            return
-        ts_list = [pdf["ts_us"].to_numpy(dtype=np.int64) for pdf in pdfs]
-        ts = np.sort(np.concatenate(ts_list)) if ts_list else np.empty(0, np.int64)
-        if ts.size == 0:
-            return
-        if state.exists:
-            start_us, last_us, n_carry = state.get
-        else:
-            start_us, last_us, n_carry = int(ts[0]), None, 0
-
-        closed = []  # (start_us, end_us, n)
-        # session boundaries inside the batch, with the carried last event
-        # prepended so a cross-batch gap closes the carried session
-        seq = ts if last_us is None else np.concatenate(([last_us], ts))
-        breaks = np.flatnonzero(np.diff(seq) > gap_us)
-        seg_starts = np.concatenate(([0], breaks + 1))
-        seg_ends = np.concatenate((breaks, [len(seq) - 1]))
-        for i, (s, z) in enumerate(zip(seg_starts, seg_ends)):
-            n_seg = int(z - s + 1)
-            first = int(seq[s])
-            last = int(seq[z])
-            if i == 0 and last_us is not None:
-                # continuation of the carried session (seq[0] is the carry
-                # marker, not a new event)
-                n_seg = n_carry + n_seg - 1
-                first = start_us
-            if z == len(seq) - 1:
-                state.update((first, last, n_seg))  # trailing stays open
-                if use_timeout:
-                    # fire once the watermark passes last + gap (clamped
-                    # above the current watermark, which Spark requires)
-                    state.setTimeoutTimestamp(
-                        max(last // 1000 + gap_ms,
-                            state.getCurrentWatermarkMs() + 1)
-                    )
-            else:
-                closed.append((first, last, n_seg))
-        if closed:
-            yield pd.DataFrame(
-                {
-                    key_col: [key[0]] * len(closed),
-                    "session_start": pd.to_datetime(
-                        [c[0] for c in closed], unit="us"
-                    ),
-                    "session_end": pd.to_datetime(
-                        [c[1] for c in closed], unit="us"
-                    ),
-                    "n_events": [c[2] for c in closed],
-                }
-            )
-
-    if use_timeout:
-        # the watermarked event-time column must survive into the stateful
-        # operator (Spark rejects EventTimeTimeout otherwise) — carry it
-        # alongside the ts_us the kernel actually reads
-        narrow = stream_df.withWatermark(ts_col, watermark).select(
-            F.col(key_col), F.col(ts_col),
-            ts_micros(F.col(ts_col)).alias("ts_us"),
-        )
-        timeout_conf = "EventTimeTimeout"
-    else:
-        narrow = stream_df.select(
-            F.col(key_col), ts_micros(F.col(ts_col)).alias("ts_us")
-        )
-        timeout_conf = "NoTimeout"
-    return narrow.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout_conf
-    )
-
-
-def start_session_stream(
-    spark,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    schema,
-    gap_minutes: int = 30,
-    max_files_per_trigger: int | None = None,
-    **kwargs,
-):
-    """File-source stateful sessionization job (availableNow trigger)."""
-    return _start_available_now(
-        spark, input_dir, schema, checkpoint_dir,
-        lambda src: streaming_sessionize(src, gap_minutes=gap_minutes, **kwargs)
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", output_dir),
-        max_files_per_trigger,
     )
 
 
@@ -506,27 +238,6 @@ def span_dedup_batch_fn(
     return _apply
 
 
-def start_span_dedup_stream(
-    spark,
-    input_dir: str,
-    store_root: str,
-    checkpoint_dir: str,
-    schema,
-    **kwargs,
-):
-    """File-source streaming span dedup: new parquet document files under
-    `input_dir` update the span index and per-doc duplication verdicts
-    under `store_root` micro-batch by micro-batch (span_dedup_batch_fn).
-    availableNow trigger: drains what exists, then stops — restartable
-    from the checkpoint like every head in this module. Returns the
-    StreamingQuery."""
-    return _start_available_now(
-        spark, input_dir, schema, checkpoint_dir,
-        lambda src: src.writeStream.foreachBatch(
-            span_dedup_batch_fn(store_root, **kwargs)),
-    )
-
-
 def minhash_dedup_batch_fn(
     store_root: str,
     id_col: str = "doc_id",
@@ -604,25 +315,6 @@ def minhash_dedup_batch_fn(
             new_pairs_b.unpersist()
 
     return _apply
-
-
-def start_minhash_dedup_stream(
-    spark,
-    input_dir: str,
-    store_root: str,
-    checkpoint_dir: str,
-    schema,
-    **kwargs,
-):
-    """File-source streaming MinHash dedup: new parquet document files
-    under `input_dir` update the band index and the near-dup candidate
-    pair table under `store_root` micro-batch by micro-batch
-    (minhash_dedup_batch_fn). Returns the StreamingQuery."""
-    return _start_available_now(
-        spark, input_dir, schema, checkpoint_dir,
-        lambda src: src.writeStream.foreachBatch(
-            minhash_dedup_batch_fn(store_root, **kwargs)),
-    )
 
 
 def ivf_index_batch_fn(
@@ -704,16 +396,23 @@ def start_ivf_index_stream(
 ):
     """File-source streaming IVF index upkeep: new parquet embedding
     files under `input_dir` extend the persisted index micro-batch by
-    micro-batch (ivf_index_batch_fn). Returns the StreamingQuery.
-    `max_files_per_trigger=1` forces one micro-batch per staged file —
-    without it an availableNow start drains every pending file in ONE
-    batch (i.e. pre-staged multi-file tests would only exercise the
-    bootstrap path)."""
-    return _start_available_now(
-        spark, input_dir, schema, checkpoint_dir,
-        lambda src: src.writeStream.foreachBatch(
-            ivf_index_batch_fn(store_root, **kwargs)),
-        max_files_per_trigger,
+    micro-batch (ivf_index_batch_fn). The availableNow trigger drains
+    what exists, then stops; a restart resumes from `checkpoint_dir`.
+    Returns the StreamingQuery.
+
+    `max_files_per_trigger` caps the files per micro-batch (Spark
+    rejects a value below 1): 1 forces one micro-batch per staged file,
+    and None drains every pending file in ONE batch (pre-staged
+    multi-file tests would then only exercise the bootstrap path)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return (
+        reader.parquet(input_dir).writeStream
+        .foreachBatch(ivf_index_batch_fn(store_root, **kwargs))
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
 
 
@@ -1084,10 +783,9 @@ def streaming_session_window(
     delay: str = "1 second",
 ) -> DataFrame:
     """Gap-based sessionization on Spark's NATIVE session_window — the
-    idiomatic Structured Streaming counterpart to the custom
-    applyInPandasWithState `streaming_sessionize`. The built-in merges
-    an event into the open session when its timestamp is within `gap`
-    of the session's last event (boundary-inclusive: an event exactly
+    engine's streamed sessionization. The built-in merges an event into
+    the open session when its timestamp is within `gap` of the
+    session's last event (boundary-inclusive: an event exactly
     `gap` later still merges — verified against the batch gaps-and-
     islands construction, which opens on diff > gap), keeps per-session
     state in the engine's own state store (RocksDB-capable, no Python
@@ -1097,9 +795,8 @@ def streaming_session_window(
         emitted  <=>  last_event_ts + gap <= max_seen_ts - delay
 
     so the trailing open session per key is withheld until later data
-    (or a sentinel) closes it — the same contract as
-    `streaming_sessionize(watermark=...)`, but with merging, state
-    eviction, and late-data handling all inside the JVM. Note the
+    (or a sentinel) closes it, with merging, state eviction and
+    late-data handling all inside the JVM. Note the
     eviction corollary: an event arriving BELOW the watermark is late
     data and starts a fresh session rather than reopening an evicted
     one (tests pin this); with globally time-ordered ingest (the

@@ -41,9 +41,6 @@ def main(argv=None):
     p.add_argument("--keep-last", type=int, default=2)
     args = p.parse_args(argv)
 
-    # under spark-submit there is no session yet (we own it and stop it);
-    # under a test harness an active session must be left running
-    owned = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName("cesium-spark-maintenance").getOrCreate()
     table = SnapshotTable(args.table)
     n_before = table.read(spark).count()
@@ -66,9 +63,10 @@ def main(argv=None):
         "rewrite_sec": rewrite_s,
         "expired_snapshots": len(removed),
     }))
-    if owned:
-        spark.stop()
 
 
 if __name__ == "__main__":
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

@@ -48,9 +48,6 @@ def main(argv=None):
     p.add_argument("--dry-run", action="store_true")
     args = p.parse_args(argv)
 
-    # under spark-submit there is no session yet (we own it and stop it);
-    # under a test harness an active session must be left running
-    owned = SparkSession.getActiveSession() is None
     spark = SparkSession.builder.appName("cesium-spark-retention").getOrCreate()
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     table = SnapshotTable(args.table)
@@ -72,9 +69,10 @@ def main(argv=None):
         report = apply_retention(
             spark, table, log, tiers, horizon, args.ts_col)
     print(json.dumps(report))
-    if owned:
-        spark.stop()
 
 
 if __name__ == "__main__":
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

@@ -56,8 +56,10 @@ def main(argv=None):
         resume=args.resume,
         bucket_days=args.bucket_days,
     )
-    spark.stop()
 
 
 if __name__ == "__main__":
     main()
+    from pyspark.sql import SparkSession
+
+    SparkSession.getActiveSession().stop()

@@ -127,18 +127,6 @@ def test_batched_windows_equal_compute_features(spark, transcripts):
     pd.testing.assert_frame_equal(got, want[got.columns])
 
 
-def test_attach_meta_features(spark, transcripts):
-    from cesium_spark.kernel import attach_meta_features
-
-    fs = featurize(transcripts, ["n_epochs", "mean"])
-    meta = transcripts.groupBy("conv_id").agg(
-        F.first("role").alias("first_role"), F.count("*").alias("meta_n")
-    )
-    joined = attach_meta_features(fs, meta).toPandas()
-    assert {"first_role", "meta_n"} <= set(joined.columns)
-    assert (joined["meta_n"] == joined["n_epochs"]).all()
-
-
 def test_custom_functions_through_spark(spark, transcripts):
     """User-supplied feature callables (cesium custom_functions) evaluate
     per group through the Spark kernel (forces the per-group path)."""

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from cesium_spark.datagen import generate_transcripts
 from cesium_spark.operators.aggstate import finalize_states, merge_states, partial_states
-from cesium_spark.operators.incremental import incremental_rollup, merge_new_batch
+from cesium_spark.operators.incremental import incremental_rollup
 from cesium_spark.operators.locf import locf_grid
 from cesium_spark.operators.rollup import rollup_kernel
 from cesium_spark.operators.salt import skew_resistant_features
@@ -88,13 +88,12 @@ def test_incremental_mergeable_equals_full(spark, transcripts):
     """Late arrivals: state(base) ⊕ batch == state(base ∪ batch)."""
     base = transcripts.filter(F.col("turn_idx") % 7 != 0)
     late = transcripts.subtract(base)  # rows landing inside rolled windows
-    st0 = partial_states(base, "1h")
-    merged = finalize_states(
-        merge_new_batch(st0, late, "1h"), ["conv_id", "window_start"]
-    ).toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
-    full = finalize_states(
-        partial_states(transcripts, "1h"), ["conv_id", "window_start"]
-    ).toPandas().sort_values(["conv_id", "window_start"]).reset_index(drop=True)
+    keys = ["conv_id", "window_start"]
+    states = partial_states(base, "1h").unionByName(partial_states(late, "1h"))
+    merged = finalize_states(merge_states(states, keys), keys) \
+        .toPandas().sort_values(keys).reset_index(drop=True)
+    full = finalize_states(partial_states(transcripts, "1h"), keys) \
+        .toPandas().sort_values(keys).reset_index(drop=True)
     pd.testing.assert_frame_equal(merged, full, rtol=1e-9, atol=1e-12)
 
 
@@ -321,6 +320,50 @@ def test_run_rollup_rejects_window_crossing_midnight(spark, tmp_path):
         run_rollup(spark, inp, out, tiers=("1h", "7 minutes"),
                    features=["n_epochs"], verbose=False)
     assert not os.path.exists(out)
+
+
+def test_run_rollup_late_rows_on_an_empty_day_keep_calendar_buckets(spark, tmp_path):
+    """A bucket is a calendar range keyed by its first day: late rows on
+    a day that had none join that day's bucket, so resume rewrites that
+    one bucket and no later key shifts (a shifted key would leave its
+    old partition behind, holding duplicate windows)."""
+    from cesium_spark.jobs import run_rollup
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    spark.createDataFrame(_retention_fixture_rows(
+        [d for d in range(14) if d != 7], per_day=1)).write.parquet(inp)
+    kw = dict(tiers=("1d",), features=["n_epochs"], verbose=False)
+    first = run_rollup(spark, inp, out, **kw)
+    assert [u["unit"] for u in first] == ["tier-1d-days-20250201", "tier-1d-days-20250208"]
+
+    late = _retention_fixture_rows([7], per_day=1).assign(conv_id="late")
+    spark.createDataFrame(late).write.mode("append").parquet(inp)
+    resumed = run_rollup(spark, inp, out, resume=True, **kw)
+    assert [(u["unit"], u["skipped"]) for u in resumed] == [
+        ("tier-1d-days-20250201", True), ("tier-1d-days-20250208", False)]
+    got = spark.read.parquet(f"{out}/tier=1d").toPandas()
+    assert len(got) == 14
+    assert not got.duplicated(["conv_id", "window_start"]).any()
+    assert sorted(got["bucket"].astype(str).unique()) == ["20250201", "20250208"]
+
+
+def test_rollup_job_main_leaves_the_caller_session_running(spark, tmp_path):
+    """jobs/rollup_job.py end to end under a caller's session: main()
+    writes the tier output and leaves the session running (only the
+    script's __main__ block stops it)."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from jobs.rollup_job import main
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    spark.createDataFrame(_retention_fixture_rows([0, 1])).write.parquet(inp)
+    main(["--input", inp, "--output", out, "--tiers", "1h,1d",
+          "--features", "n_epochs,mean"])
+    got = spark.read.parquet(f"{out}/tier=1d").toPandas()
+    assert sorted(got["n_epochs"]) == [10.0, 10.0]
+    assert spark.read.parquet(f"{out}/tier=1h").count() == 2
 
 
 def test_retention_drops_only_committed_old_days(spark, tmp_path):
@@ -3354,22 +3397,6 @@ def test_inverted_index_bigram_units(spark):
     assert out.loc["b c"].df == 1
     # a doc shorter than the gram order contributes nothing (no NULLs)
     assert "one" not in out.index and len(out) == 3
-
-
-def test_compaction_plan_greedy_packing(spark):
-    from cesium_spark.operators.layout import compaction_plan
-
-    cells = spark.createDataFrame(
-        [(0, 40), (1, 40), (2, 40), (3, 500), (4, 10)],
-        "z_cell long, n long")
-    out = compaction_plan(cells, target_rows=100).toPandas() \
-        .sort_values("grp").reset_index(drop=True)
-    # cum-before: 0,40,80,120,620 -> grp 0,0,0,1,6
-    assert list(out.grp) == [0, 1, 6]
-    g0 = out[out.grp == 0].iloc[0]
-    assert g0.n_cells == 3 and g0.rows == 120 and g0.z_min == 0 and g0.z_max == 2
-    assert out[out.grp == 1].iloc[0].z_min == 3  # the huge cell stands alone
-    assert out.rows.sum() == 630  # every cell assigned exactly once
 
 
 def test_rewrite_zordered_preserves_data_disjoint_ranges(spark, tmp_path):

@@ -42,26 +42,17 @@ def test_snapshot_table_overwrite_partitions(spark, tmp_path):
     assert set(cur["part"]) == {"a", "b"}
 
 
-def test_snapshot_table_rollback_expire_and_merge(spark, tmp_path):
-    """The Iceberg maintenance surface: rollback appends a history-
-    preserving snapshot pointing at the old file-set; expire_snapshots
-    truncates the log and GCs only unreferenced files (manifest lands
-    first -> crash leaves orphans, never dangling refs); merge_rows is
-    a partition-scoped copy-on-write upsert that carries untouched
+def test_snapshot_table_expire_and_merge(spark, tmp_path):
+    """The Iceberg maintenance surface: expire_snapshots truncates the
+    log and GCs only unreferenced files (manifest lands first -> crash
+    leaves orphans, never dangling refs); merge_rows is a
+    partition-scoped copy-on-write upsert that carries untouched
     partitions' files into the new snapshot byte-identically."""
     import os
     t = SnapshotTable(str(tmp_path / "tbl"))
     s1 = t.append(_df(spark, [(1, "a", 1.0), (2, "b", 2.0)]),
                   partition_by=["part"])
-    s2 = t.overwrite_partitions(_df(spark, [(9, "b", 9.0)]),
-                                partition_by=["part"])
-
-    # rollback to s1: current read shows the old rows, history grows
-    s3 = t.rollback(s1)
-    cur = t.read(spark).toPandas()
-    assert sorted(cur["k"]) == [1, 2]
-    assert [s["operation"] for s in t.snapshots()][-1] == "rollback"
-    assert t.read(spark, as_of=s2).toPandas()["k"].tolist() != [1, 2]
+    t.overwrite_partitions(_df(spark, [(9, "b", 9.0)]), partition_by=["part"])
 
     # merge (upsert): update k=1's value, insert k=5 into partition b;
     # partition a is touched (k=1), but suppose only its keys change —
@@ -262,11 +253,10 @@ def test_read_headerfile_reference_parity(spark, tmp_path):
 
 
 def test_headerfile_meta_join_onto_featureset(spark, tmp_path):
-    """read_headerfile output feeds attach_meta_features: labels + meta
-    columns land on the featureset via a broadcast join on the series
-    name (the reference's meta_features path, featurize.py:136-141)."""
-    import os
-    from cesium_spark.kernel import attach_meta_features, featurize
+    """read_headerfile output joins onto a featureset: labels + meta
+    columns land on it via a broadcast join on the series name (the
+    reference's meta_features path, featurize.py:136-141)."""
+    from cesium_spark.kernel import featurize
     from cesium_spark.sources.transcripts import read_headerfile
     from cesium_spark.datagen import generate_transcripts
 
@@ -277,7 +267,7 @@ def test_headerfile_meta_join_onto_featureset(spark, tmp_path):
 
     df = generate_transcripts(spark, n_convs=2, seed=1)
     fs = featurize(df, ["n_epochs", "mean"])
-    joined = attach_meta_features(fs, hdr, key_col="conv_id").toPandas()
+    joined = fs.join(F.broadcast(hdr), "conv_id", "left").toPandas()
     joined = joined.set_index("conv_id")
     assert joined.loc["conv-0", "label"] == "A"
     assert joined.loc["conv-1", "meta1"] == 0.25

@@ -1,8 +1,8 @@
 """Structural guards on the streaming module, no Spark (AST walks in the
 style of tests/test_reach.py): `stream.py`'s `__all__` names every public
 top-level function, and `applyInPandasWithState` is called only by the
-keyed-state frame `_keyed_state_head` and the hand-written
-`streaming_sessionize`, so a new keyed head goes through the frame."""
+keyed-state frame `_keyed_state_head`, so a new keyed head goes through
+the frame."""
 
 import ast
 import glob
@@ -28,7 +28,7 @@ def test_stream_all_lists_every_public_def():
     assert set(exported) == public
 
 
-def test_apply_in_pandas_with_state_only_in_the_keyed_frame_and_sessionize():
+def test_apply_in_pandas_with_state_only_in_the_keyed_frame():
     callers = set()
     for path in glob.glob(os.path.join(ROOT, "cesium_spark", "**", "*.py"), recursive=True):
         rel = os.path.relpath(path, ROOT)
@@ -38,4 +38,4 @@ def test_apply_in_pandas_with_state_only_in_the_keyed_frame_and_sessionize():
                         and isinstance(node.func, ast.Attribute)
                         and node.func.attr == "applyInPandasWithState"):
                     callers.add((rel, getattr(top, "name", None)))
-    assert callers == {(STREAM, "_keyed_state_head"), (STREAM, "streaming_sessionize")}
+    assert callers == {(STREAM, "_keyed_state_head")}

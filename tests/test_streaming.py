@@ -1,125 +1,52 @@
-"""Structured Streaming rollup: file-source stream equals the batch SQL
-rollup on the same data (closed windows only), and late-data watermark
-semantics hold across incremental file arrivals."""
+"""Structured Streaming heads against their batch twins: each file-source
+stream, drained with availableNow (restarts included), equals the batch
+operator on the same data."""
 
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from cesium_spark.datagen import generate_transcripts
-from cesium_spark.operators.rollup import rollup_sql
 from cesium_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-from cesium_spark.streaming.stream import start_file_stream
 
 
-def test_streaming_rollup_matches_batch(spark, tmp_path):
-    df = generate_transcripts(spark, n_convs=10, seed=13, max_turns=2000).cache()
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    # stage the data as two "arriving" files
-    a = df.filter(F.col("turn_idx") % 2 == 0)
-    b = df.subtract(a)
-    a.write.mode("overwrite").parquet(in_dir)
-    b.write.mode("append").parquet(in_dir)
-
-    q = start_file_stream(
-        spark, in_dir, out_dir, ckpt, TRANSCRIPT_SCHEMA, tier="1 hour",
-        watermark="0 seconds",
-    )
+def _drain_foreach_batch(spark, in_dir, schema, ckpt, batch_fn):
+    """One availableNow run of `batch_fn` over the parquet files under
+    `in_dir`, restartable from `ckpt`."""
+    q = (spark.readStream.schema(schema).parquet(in_dir).writeStream
+         .foreachBatch(batch_fn).option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
     q.awaitTermination(120)
-
-    got = (
-        spark.read.parquet(out_dir)
-        .drop("window_end")
-        .toPandas()
-        .sort_values(["conv_id", "window_start"])
-        .reset_index(drop=True)
-    )
-    want = (
-        rollup_sql(df, "1h")
-        .toPandas()
-        .sort_values(["conv_id", "window_start"])
-        .reset_index(drop=True)
-    )
-    # append mode emits only windows closed by the watermark: with
-    # watermark 0s, every window before the max event time closes.
-    max_ts = df.agg(F.max("ts")).collect()[0][0]
-    want = want[want["window_start"] < pd.Timestamp(max_ts).floor("h")] \
-        .reset_index(drop=True)
-    got = got[got["window_start"] < pd.Timestamp(max_ts).floor("h")] \
-        .reset_index(drop=True)
-    want = want.drop(columns=["avgt"])
-    pd.testing.assert_frame_equal(
-        got[want.columns], want, check_dtype=False, rtol=1e-9
-    )
-
-
-def test_stateful_sessionize_state_survives_restart(spark, tmp_path):
-    """applyInPandasWithState sessionizer: the open-session state is
-    checkpointed — a session spanning two availableNow query runs (two
-    separate restarts over the same checkpoint) is emitted as ONE closed
-    session once a later event exceeds the gap."""
-    from cesium_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from cesium_spark.streaming.stream import start_session_stream
-
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    t0 = pd.Timestamp("2025-03-01 12:00:00")
-
-    def rows(*offsets_min):
-        return pd.DataFrame(
-            [("c", i, "user", "x", "", t0 + pd.Timedelta(minutes=o))
-             for i, o in enumerate(offsets_min)],
-            columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
-        )
-
-    # run 1: two events 10 minutes apart -> session stays OPEN in state
-    spark.createDataFrame(rows(0, 10)).write.mode("overwrite").parquet(in_dir)
-    q = start_session_stream(
-        spark, in_dir, out_dir, ckpt, TRANSCRIPT_SCHEMA, gap_minutes=30)
-    q.awaitTermination(120)
-    assert not list((tmp_path / "out").glob("part-*.parquet")) or \
-        spark.read.parquet(out_dir).count() == 0
-
-    # run 2 (restart over the same checkpoint): +20min continues the
-    # carried session; +180min exceeds the gap and closes it
-    spark.createDataFrame(rows(20, 180)).write.mode("append").parquet(in_dir)
-    q = start_session_stream(
-        spark, in_dir, out_dir, ckpt, TRANSCRIPT_SCHEMA, gap_minutes=30)
-    q.awaitTermination(120)
-
-    got = spark.read.parquet(out_dir).toPandas()
-    assert len(got) == 1
-    s = got.iloc[0]
-    assert s["conv_id"] == "c"
-    assert s["session_start"] == t0
-    assert s["session_end"] == t0 + pd.Timedelta(minutes=20)
-    assert s["n_events"] == 3  # 2 from run 1 + 1 from run 2, one session
 
 
 def test_streaming_sessions_match_batch(spark, tmp_path):
-    """Coherence: the stateful streaming sessionizer's closed sessions
-    equal the batch sessionize() result on the same data once a per-key
-    sentinel event (far past the gap) closes every real session."""
+    """Coherence: the native session-window head's closed sessions equal
+    the batch sessionize() result on the same data once sentinel events
+    (far past the gap) advance the watermark past every real session."""
     from cesium_spark.operators.sessionize import sessionize
-    from cesium_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from cesium_spark.streaming.stream import start_session_stream
+    from cesium_spark.streaming.stream import streaming_session_window
 
     df = generate_transcripts(spark, n_convs=6, seed=17, max_turns=800).cache()
+    global_max = df.agg(F.max("ts")).first()[0]
+    cutoff = global_max + pd.Timedelta(days=5)
     sentinels = (
-        df.groupBy("conv_id").agg(F.max("ts").alias("mx"))
-        .select(
-            "conv_id", F.lit(10**9).alias("turn_idx"), F.lit("user").alias("role"),
-            F.lit("sentinel").alias("text"), F.lit("").alias("tool"),
-            (F.col("mx") + F.expr("INTERVAL 10 DAYS")).alias("ts"),
-        )
+        df.select("conv_id").distinct()
+        .select("conv_id", F.lit(10**9).alias("turn_idx"), F.lit("user").alias("role"),
+                F.lit("sentinel").alias("text"), F.lit("").alias("tool"),
+                F.lit(global_max + pd.Timedelta(days=10)).alias("ts"))
     )
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
     df.unionByName(sentinels).write.mode("overwrite").parquet(in_dir)
 
-    q = start_session_stream(
-        spark, in_dir, out_dir, ckpt, TRANSCRIPT_SCHEMA, gap_minutes=30)
-    q.awaitTermination(120)
+    src = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(in_dir)
+    q = (streaming_session_window(src, gap="30 minutes", key_col="conv_id")
+         .writeStream.format("parquet").option("path", out_dir)
+         .option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(120)
     got = (
-        spark.read.parquet(out_dir).toPandas()
+        spark.read.parquet(out_dir).filter(F.col("session_start") < F.lit(cutoff))
+        .toPandas()
         .sort_values(["conv_id", "session_start"]).reset_index(drop=True)
     )
 
@@ -135,104 +62,18 @@ def test_streaming_sessions_match_batch(spark, tmp_path):
     pd.testing.assert_frame_equal(got[want.columns], want, check_dtype=False)
 
 
-def test_sessionize_event_time_timeout_closes_trailing_session(spark, tmp_path):
-    """VERDICT r2 item 10 / ADVICE r2: with a watermark, an open trailing
-    session closes via EventTimeTimeout once the watermark passes
-    (last event + gap) — no sentinel event needed, state is bounded."""
-    from cesium_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from cesium_spark.streaming.stream import start_session_stream
-
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    t0 = pd.Timestamp("2025-03-01 12:00:00")
-
-    def rows(items):
-        return pd.DataFrame(
-            [(k, i, "user", "x", "", t0 + pd.Timedelta(minutes=o))
-             for i, (k, o) in enumerate(items)],
-            columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"],
-        )
-
-    # file 1: key a's short session + key b far in the future (advances
-    # the watermark well past a.last + gap)
-    spark.createDataFrame(rows([("a", 0), ("a", 5), ("b", 300)])) \
-        .coalesce(1).write.mode("overwrite").parquet(in_dir)
-    import time
-    time.sleep(1.1)  # distinct mtimes -> deterministic file order
-    # file 2: unrelated key; processing it fires a's timeout (watermark
-    # from batch 1 = t0+300m - 10m >> a.last + 30m gap)
-    spark.createDataFrame(rows([("c", 290)])) \
-        .coalesce(1).write.mode("append").parquet(in_dir)
-
-    q = start_session_stream(
-        spark, in_dir, out_dir, ckpt, TRANSCRIPT_SCHEMA,
-        gap_minutes=30, max_files_per_trigger=1, watermark="10 minutes")
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out_dir).toPandas()
-    a_rows = got[got.conv_id == "a"]
-    assert len(a_rows) == 1
-    s = a_rows.iloc[0]
-    assert s["session_start"] == t0
-    assert s["session_end"] == t0 + pd.Timedelta(minutes=5)
-    assert s["n_events"] == 2
-    # b and c stay open (watermark never passed their last + gap)
-    assert set(got.conv_id) == {"a"}
-
-
-def test_session_stream_rejects_zero_max_files_per_trigger(spark, tmp_path):
+def test_ivf_stream_rejects_zero_max_files_per_trigger(spark, tmp_path):
     """max_files_per_trigger=0 reaches Spark, which fails the query,
     instead of silently draining every file in one batch."""
-    from cesium_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from cesium_spark.streaming.stream import start_session_stream
+    from cesium_spark.streaming.stream import start_ivf_index_stream
 
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    spark.createDataFrame(
-        [("c", 0, "user", "x", "", pd.Timestamp("2025-03-01").to_pydatetime())],
-        TRANSCRIPT_SCHEMA,
-    ).write.parquet(in_dir)
+    in_dir, store, ckpt = (str(tmp_path / d) for d in ("in", "store", "ckpt"))
+    schema = "vec_id long, embedding array<double>"
+    spark.createDataFrame([(0, [1.0, 0.0])], schema).write.parquet(in_dir)
     with pytest.raises(Exception, match="maxFilesPerTrigger"):
-        q = start_session_stream(spark, in_dir, out_dir, ckpt, TRANSCRIPT_SCHEMA,
-                                 max_files_per_trigger=0)
+        q = start_ivf_index_stream(spark, in_dir, store, ckpt, schema,
+                                   max_files_per_trigger=0)
         q.awaitTermination(120)
-
-
-def test_streaming_exact_dedup_first_seen(spark, tmp_path):
-    """Duplicates arriving in LATER micro-batches (within the watermark)
-    are dropped; distinct texts all survive exactly once."""
-    from cesium_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from cesium_spark.streaming.stream import streaming_exact_dedup
-
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
-    t0 = pd.Timestamp("2025-03-01 12:00:00")
-
-    def rows(items):
-        return pd.DataFrame(
-            [("c", i, "user", txt, "", t0 + pd.Timedelta(minutes=o))
-             for i, (txt, o) in enumerate(items)],
-            columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
-
-    import time
-    spark.createDataFrame(rows([("alpha", 0), ("beta", 1), ("alpha", 2)]),
-                          TRANSCRIPT_SCHEMA) \
-        .coalesce(1).write.mode("overwrite").parquet(in_dir)
-    time.sleep(1.1)
-    spark.createDataFrame(rows([("beta", 10), ("gamma", 11)]), TRANSCRIPT_SCHEMA) \
-        .coalesce(1).write.mode("append").parquet(in_dir)
-
-    src = spark.readStream.schema(TRANSCRIPT_SCHEMA) \
-        .option("maxFilesPerTrigger", 1).parquet(in_dir)
-    q = (
-        streaming_exact_dedup(src, watermark="2 hours")
-        .writeStream.outputMode("append").format("parquet")
-        .option("path", out_dir).option("checkpointLocation", ckpt)
-        .trigger(availableNow=True).start()
-    )
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out_dir).toPandas()
-    assert sorted(got.text) == ["alpha", "beta", "gamma"]
-    # the FIRST arrival is the survivor
-    assert got.set_index("text").loc["beta", "ts"] == t0 + pd.Timedelta(minutes=1)
 
 
 def test_streaming_states_feed_batch_cascade(spark, tmp_path):
@@ -294,7 +135,7 @@ def test_streaming_span_dedup_availablenow_restart(spark, tmp_path):
     from cesium_spark.operators.dedup import (
         duplicate_token_spans, span_index_rows)
     from cesium_spark.sources.table import SnapshotTable
-    from cesium_spark.streaming.stream import start_span_dedup_stream
+    from cesium_spark.streaming.stream import span_dedup_batch_fn
 
     in_dir, store, ckpt = (str(tmp_path / d) for d in ("in", "store", "ckpt"))
     SPAN = "alpha beta gamma delta epsilon zeta eta theta"
@@ -309,9 +150,8 @@ def test_streaming_span_dedup_availablenow_restart(spark, tmp_path):
     spark.createDataFrame(batch1, schema).coalesce(1) \
         .write.mode("overwrite").parquet(in_dir)
 
-    q = start_span_dedup_stream(spark, in_dir, store, ckpt, schema,
-                                k=8, n_buckets=8)
-    q.awaitTermination(120)
+    _drain_foreach_batch(spark, in_dir, schema, ckpt,
+                         span_dedup_batch_fn(store, k=8, n_buckets=8))
     idx_ids = SnapshotTable(f"{store}/span_index").read(spark) \
         .select("id").distinct().toPandas()["id"]
     assert 7 in set(idx_ids)
@@ -337,9 +177,8 @@ def test_streaming_span_dedup_availablenow_restart(spark, tmp_path):
     ]
     spark.createDataFrame(batch2, schema).coalesce(1) \
         .write.mode("append").parquet(in_dir)
-    q2 = start_span_dedup_stream(spark, in_dir, store, ckpt, schema,
-                                 k=8, n_buckets=8)
-    q2.awaitTermination(120)
+    _drain_foreach_batch(spark, in_dir, schema, ckpt,
+                         span_dedup_batch_fn(store, k=8, n_buckets=8))
 
     current = {d: t for d, t in batch1}
     current.update({d: t for d, t in batch2})
@@ -374,7 +213,7 @@ def test_streaming_minhash_dedup_availablenow_restart(spark, tmp_path):
     from cesium_spark.operators.dedup import (
         minhash_band_rows, minhash_lsh_pairs)
     from cesium_spark.sources.table import SnapshotTable
-    from cesium_spark.streaming.stream import start_minhash_dedup_stream
+    from cesium_spark.streaming.stream import minhash_dedup_batch_fn
 
     in_dir, store, ckpt = (str(tmp_path / d) for d in ("in", "store", "ckpt"))
     tpl = ("shared boilerplate body used across the duplicate class of "
@@ -387,9 +226,8 @@ def test_streaming_minhash_dedup_availablenow_restart(spark, tmp_path):
     schema = "doc_id long, text string"
     spark.createDataFrame(batch1, schema).coalesce(1) \
         .write.mode("overwrite").parquet(in_dir)
-    q = start_minhash_dedup_stream(spark, in_dir, store, ckpt, schema,
-                                   n_buckets=8)
-    q.awaitTermination(120)
+    _drain_foreach_batch(spark, in_dir, schema, ckpt,
+                         minhash_dedup_batch_fn(store, n_buckets=8))
 
     def current_tables():
         pairs = SnapshotTable(f"{store}/dup_pairs").read(spark) \
@@ -415,9 +253,8 @@ def test_streaming_minhash_dedup_availablenow_restart(spark, tmp_path):
     ]
     spark.createDataFrame(batch2, schema).coalesce(1) \
         .write.mode("append").parquet(in_dir)
-    q2 = start_minhash_dedup_stream(spark, in_dir, store, ckpt, schema,
-                                    n_buckets=8)
-    q2.awaitTermination(120)
+    _drain_foreach_batch(spark, in_dir, schema, ckpt,
+                         minhash_dedup_batch_fn(store, n_buckets=8))
 
     current = {d: t for d, t in batch1}
     current.update({d: t for d, t in batch2})
