@@ -63,7 +63,10 @@ def _seg_quantile(sorted_vals, lens, starts, q):
     # produce offsets one past the end
     top = len(sorted_vals) - 1
     lo = sorted_vals[np.minimum(ilo, top)]
-    return lo + g * (sorted_vals[np.minimum(ihi, top)] - lo)
+    hi = sorted_vals[np.minimum(ihi, top)]
+    # equal ends are the quantile itself, also when infinite (inf - inf
+    # would make the interpolation NaN where numpy returns inf)
+    return np.where(lo == hi, lo, lo + g * (hi - lo))
 
 
 def _seg_median(sorted_vals, lens, starts):
@@ -316,7 +319,12 @@ def segmented_features(t, m, e, starts, features):
                     if "med_double_to_single_step" in req:
                         rs = ratios[np.lexsort((ratios, rgid))]
                         rm = _seg_quantile(rs, np.where(r_empty, 1, r_lens), r_starts, 0.5)
-                        out["med_double_to_single_step"] = np.where(r_empty, np.nan, rm)
+                        # a tied time makes a 0/0 ratio: np.median of a
+                        # group holding a NaN is NaN, while the lexsort
+                        # puts NaNs last, past the middle
+                        has_nan = safe_r(np.add, np.isnan(ratios).astype(np.float64)) > 0
+                        out["med_double_to_single_step"] = np.where(
+                            r_empty | has_nan, np.nan, rm)
 
         if need("stetson_j", "stetson_k"):
             single = lens < 2

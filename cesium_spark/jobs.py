@@ -92,11 +92,22 @@ def run_rollup(
     one pass per bucket over its due tiers. Returns the list of unit
     metric dicts (committed + skipped), tier by tier.
 
-    Raises ValueError for a tier whose window does not divide 24 hours."""
+    Raises ValueError, before any Spark job, for a tier whose window does
+    not divide 24 hours, and for a `bucket_days` other than the one the
+    output's committed units were cut with: their bucket partitions would
+    stay beside the new ones, holding duplicate windows."""
     features = list(features or DEFAULT_FEATURES)
     for tier in tiers:
         tier_micros(tier)
     log = LineageLog(os.path.join(output_path, "_lineage"))
+    committed = [u for u in log.units() if re.fullmatch(r"tier-.+-days-\d{8}", u)]
+    for unit in committed:
+        recorded = ((log.read(unit) or {}).get("metrics") or {}).get("bucket_days")
+        if recorded is not None and recorded != bucket_days:
+            raise ValueError(
+                f"unit {unit} of {output_path} was cut with bucket_days="
+                f"{recorded}, not bucket_days={bucket_days}; roll up into a "
+                "new output or keep the recorded bucket_days")
     df = spark.read.parquet(input_path)
     day_col = F.date_trunc("day", F.col(ts_col))
 
@@ -114,8 +125,7 @@ def run_rollup(
     # calendar day, so late rows on a day that had none join their own
     # bucket instead of shifting every later one. The anchor is the
     # earliest committed bucket, or the input's first day on a first run.
-    keys = [u.rpartition("-")[2] for u in log.units()
-            if re.fullmatch(r"tier-.+-days-\d{8}", u)]
+    keys = [u.rpartition("-")[2] for u in committed]
     anchor = dt.datetime.strptime(min(keys), "%Y%m%d") if keys else min(days, default=None)
     buckets = {}  # in calendar order, as `days` is sorted
     for d in days:
@@ -158,6 +168,7 @@ def run_rollup(
                 "points_per_sec": round(rows_in / wall, 1) if wall > 0 else None,
                 "features": len(features),
                 "n_days": len(bucket),
+                "bucket_days": bucket_days,
                 # explicit per-day input fingerprint: retention re-validates
                 # each day's CURRENT row count against this before dropping
                 # it, so late rows appended after the commit block deletion

@@ -40,7 +40,8 @@ DEFAULT_ERROR_VALUE = 1e-4  # cesium's DEFAULT_ERROR_VALUE (time_series.py:10)
 SECONDS_PER_DAY = 86400.0
 
 __all__ = [
-    "featurize", "ts_micros", "DEFAULT_ERROR_VALUE", "SECONDS_PER_DAY",
+    "featurize", "measurement", "ts_micros", "DEFAULT_ERROR_VALUE",
+    "SECONDS_PER_DAY",
 ]
 
 
@@ -195,8 +196,8 @@ def featurize(
 
     Parameters
     ----------
-    m : measurement channel; default ``length(text)`` cast to double (the
-        transcript convention from BASELINE.json input_hint).
+    m : measurement channel; default ``length(text)`` cast to double (see
+        `measurement`).
     e : per-point error; default constant DEFAULT_ERROR_VALUE.
     t : time axis as float64; default ``unix_seconds(ts)/time_unit_seconds``
         (days, so cad_probs_<k> keep their "k minutes" meaning — the golden
@@ -219,6 +220,15 @@ def featurize(
     return map_sorted_groups(narrow, [key_col], ["t", "_ord"], per_frame, schema)
 
 
+def measurement(m: Column | str | None = None, text_col: str = "text") -> Column:
+    """The measurement channel as a Column: `m` itself, the column `m`
+    names, or by default ``length(text_col)`` cast to double (the
+    transcript convention from BASELINE.json input_hint)."""
+    if m is None:
+        return F.length(F.col(text_col)).cast("double")
+    return F.col(m) if isinstance(m, str) else m
+
+
 def kernel_columns(
     key_col: str,
     ts_col: str,
@@ -231,9 +241,6 @@ def kernel_columns(
     """The kernel's narrow input projection ``(key, t, m, [e], _ord)``
     (see `featurize` for the defaults), and the constant per-point error
     the kernel synthesizes when `e` is not given (else None)."""
-    m_col = F.col(m) if isinstance(m, str) else m
-    if m_col is None:
-        m_col = F.length(F.col("text")).cast("double")
     # default (constant) per-point error: synthesized inside the kernel
     # instead of shuffled as an 8-byte-per-row column — the value is
     # identical (np.full of the same double), only the exchange narrows
@@ -247,7 +254,7 @@ def kernel_columns(
     cols = [
         F.col(key_col),
         t_col.alias("t"),
-        m_col.alias("m"),
+        measurement(m).alias("m"),
         *([] if const_e is not None else [e_col.alias("e")]),
         F.col(tiebreak_col).cast("long").alias("_ord"),
     ]

@@ -10,6 +10,10 @@ peak features are non-mergeable and recompute per window from (bounded)
 windowed raw data via the kernel.
 
 Everything is built-in JVM aggregation — this path has no Python at all.
+Every aggregate is algebraic (sums / extrema / max_by), so the same
+`partial_states` runs on a watermarked stream in append mode too:
+``partial_states(stream.withWatermark(ts, delay), "1m")`` is the streaming
+head of the cascade, whose coarser tiers roll up batch-side.
 """
 
 from __future__ import annotations
@@ -17,15 +21,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel import DEFAULT_ERROR_VALUE, SECONDS_PER_DAY, ts_micros
-from .rollup import TIERS
+from ..kernel import DEFAULT_ERROR_VALUE, SECONDS_PER_DAY, measurement, ts_micros
+from .rollup import tier_micros, tier_window
 
 __all__ = [
     "partial_states", "merge_states", "finalize_states", "rollup_states",
     "STATE_COLS",
 ]
-
-_TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
 
 STATE_COLS = [
     "n", "s1", "s2", "s3", "s4", "vmin", "vmax",
@@ -43,10 +45,8 @@ def partial_states(
     m: Column | str | None = None,
     e: Column | str | None = None,
 ) -> DataFrame:
-    """Aggregate raw rows to one mergeable state row per (series[, window])."""
-    m_col = F.col(m) if isinstance(m, str) else m
-    if m_col is None:
-        m_col = F.length(F.col("text")).cast("double")
+    """Aggregate raw rows to one mergeable state row per (series[, tier
+    window]), the tier stamped on window_start as column metadata."""
     e_col = F.col(e) if isinstance(e, str) else e
     if e_col is None:
         e_col = F.lit(DEFAULT_ERROR_VALUE).cast("double")
@@ -54,7 +54,7 @@ def partial_states(
 
     sel = [
         F.col(key_col),
-        m_col.alias("m"),
+        measurement(m).alias("m"),
         e_col.alias("e"),
         t_days.alias("t"),
         ts_micros(F.col(ts_col)).alias("ts_us"),
@@ -62,19 +62,14 @@ def partial_states(
     ]
     keys = [key_col]
     if tier is not None:
-        # the tier rides along as column metadata so rollup_states can
-        # refuse a cascade to a non-coarser tier (mislabeled windows are
-        # silent data corruption otherwise)
-        sel.append(
-            F.window(F.col(ts_col), TIERS[tier]).start.alias(
-                "window_start", metadata={"tier": tier}
-            )
-        )
-        keys = [key_col, "window_start"]
+        # grouped by the window struct itself: on a watermarked stream it
+        # carries the event-time watermark, which append mode needs
+        sel.append(F.window(F.col(ts_col), tier_window(tier)).alias("_w"))
+        keys.append("_w")
 
     w = 1.0 / (F.col("e") * F.col("e"))
     rank = F.struct("ts_us", "idx")
-    return (
+    states = (
         df.select(*sel)
         .groupBy(*keys)
         .agg(
@@ -95,6 +90,16 @@ def partial_states(
             F.max_by("idx", rank).alias("last_rank_idx"),
             F.max_by("m", rank).alias("last_value"),
         )
+    )
+    if tier is None:
+        return states
+    # the tier rides along as column metadata so rollup_states can refuse
+    # a cascade to a non-coarser tier (mislabeled windows are silent data
+    # corruption otherwise)
+    return states.select(
+        key_col,
+        F.col("_w.start").alias("window_start", metadata={"tier": tier}),
+        *STATE_COLS,
     )
 
 
@@ -137,32 +142,30 @@ def rollup_states(
     and retention can drop raw data as soon as the FINEST tier commits.
 
     Valid because the UTC tier grid nests exactly (every 1m window lies in
-    one 1h window lies in one 1d window); enforced below for non-standard
-    tier strings. Merging is the associative state merge, so the cascade
-    is bit-identical to aggregating raw rows directly into the coarse
-    tier (tested), modulo nothing — sums are the same sums.
+    one 1h window lies in one 1d window); enforced below by the tier
+    widths, for any tier `tier_micros` accepts. Merging is the
+    associative state merge, so the cascade is bit-identical to
+    aggregating raw rows directly into the coarse tier (tested), modulo
+    nothing — sums are the same sums.
     """
     fine_ws = "window_start"
     if fine_ws not in states.columns:
         raise ValueError("states must carry window_start (tiered partials)")
-    if coarser_tier not in _TIER_SECONDS:
-        raise ValueError(f"unknown tier {coarser_tier!r}")
+    coarse_us = tier_micros(coarser_tier)
     # the input tier comes from window_start's column metadata (stamped by
     # partial_states / a prior rollup_states) or the explicit fine_tier
     # argument; rolling to a non-strictly-coarser tier would silently tag
     # whole-day sums as hourly windows, so it raises
     in_tier = fine_tier or states.schema[fine_ws].metadata.get("tier")
     if in_tier is not None:
-        if in_tier not in _TIER_SECONDS:
-            raise ValueError(f"unknown input tier {in_tier!r}")
-        fine_s, coarse_s = _TIER_SECONDS[in_tier], _TIER_SECONDS[coarser_tier]
-        if coarse_s <= fine_s or coarse_s % fine_s != 0:
+        fine_us = tier_micros(in_tier)
+        if coarse_us <= fine_us or coarse_us % fine_us != 0:
             raise ValueError(
                 f"cannot roll {in_tier!r} states up to {coarser_tier!r}: "
                 f"target must be a strictly coarser multiple of the input "
-                f"tier (got {fine_s}s -> {coarse_s}s)"
+                f"tier (got {fine_us // 10**6}s -> {coarse_us // 10**6}s)"
             )
-    coarse = F.window(F.col(fine_ws), TIERS[coarser_tier]).start
+    coarse = F.window(F.col(fine_ws), tier_window(coarser_tier)).start
     restated = states.withColumn("_cw", coarse).drop(fine_ws)
     merged = merge_states(
         restated.withColumnRenamed("_cw", "window_start"),

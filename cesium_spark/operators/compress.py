@@ -25,8 +25,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..codec.gorilla import decode_block, encode_block
-from ..kernel import map_sorted_groups, ts_micros
-from .rollup import TIERS
+from ..kernel import map_sorted_groups, measurement, ts_micros
+from .rollup import tier_window
 
 __all__ = [
     "compress_blocks", "decompress_blocks", "text_content_hash",
@@ -93,15 +93,12 @@ def compress_blocks(
     value: Column | str | None = None,
     text_col: str | None = "text",
 ) -> DataFrame:
-    v_col = F.col(value) if isinstance(value, str) else value
-    if v_col is None:
-        v_col = F.length(F.col(text_col or "text")).cast("double")
     cols = [
         F.col(key_col),
-        F.window(F.col(ts_col), TIERS.get(tier, tier)).start.alias("window_start"),
+        F.window(F.col(ts_col), tier_window(tier)).start.alias("window_start"),
         ts_micros(F.col(ts_col)).alias("ts_us"),
         F.col(tiebreak_col).cast("long").alias("_ord"),
-        v_col.alias("v"),
+        measurement(value, text_col or "text").alias("v"),
     ]
     if text_col is not None:
         # per-turn md5 computed JVM-side: the lineage hash needs only the

@@ -20,8 +20,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..kernel import map_sorted_groups, ts_micros
-from .rollup import TIERS
+from ..kernel import map_sorted_groups, measurement, ts_micros
+from .rollup import tier_window
 
 __all__ = ["ohlc_downsample", "lttb_downsample", "m4_downsample",
            "m4_partial", "m4_merge", "m4_finalize"]
@@ -35,15 +35,12 @@ def ohlc_downsample(
     tiebreak_col: str = "turn_idx",
     value: Column | str | None = None,
 ) -> DataFrame:
-    v_col = F.col(value) if isinstance(value, str) else value
-    if v_col is None:
-        v_col = F.length(F.col("text")).cast("double")
     rank = F.struct(F.col(ts_col), F.col(tiebreak_col).cast("long"))
-    bucket = F.window(F.col(ts_col), TIERS.get(tier, tier)).start
+    bucket = F.window(F.col(ts_col), tier_window(tier)).start
     return (
         df.select(
             F.col(key_col), bucket.alias("window_start"),
-            v_col.alias("v"), rank.alias("r"),
+            measurement(value).alias("v"), rank.alias("r"),
         )
         .groupBy(key_col, "window_start")
         .agg(
@@ -68,14 +65,11 @@ def lttb_downsample(
     always kept; each interior bucket keeps the point forming the
     largest triangle with the previous kept point and the next bucket's
     centroid. Output: (key, ts, value, kept_rank)."""
-    v_col = F.col(value) if isinstance(value, str) else value
-    if v_col is None:
-        v_col = F.length(F.col("text")).cast("double")
     narrow = df.select(
         F.col(key_col),
         ts_micros(F.col(ts_col)).alias("ts_us"),
         F.col(tiebreak_col).cast("long").alias("_ord"),
-        v_col.alias("v"),
+        measurement(value).alias("v"),
     )
     key_field = narrow.schema[key_col]
     out_schema = (

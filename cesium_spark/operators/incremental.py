@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .rollup import TIERS, rollup_kernel
+from .rollup import rollup_kernel, tier_window
 
 __all__ = ["affected_windows", "recompute_windows", "incremental_rollup"]
 
@@ -31,7 +31,7 @@ def affected_windows(new_batch: DataFrame, tier: str, key_col: str = "conv_id",
     """Distinct (key, window_start) pairs the batch touches."""
     return new_batch.select(
         F.col(key_col),
-        F.window(F.col(ts_col), TIERS.get(tier, tier)).start.alias("window_start"),
+        F.window(F.col(ts_col), tier_window(tier)).start.alias("window_start"),
     ).distinct()
 
 
@@ -49,7 +49,7 @@ def recompute_windows(
     shuffle, so cost scales with the dirty set, not the table."""
     keyed = raw.withColumn(
         "window_start",
-        F.window(F.col(ts_col), TIERS.get(tier, tier)).start,
+        F.window(F.col(ts_col), tier_window(tier)).start,
     )
     scoped = keyed.join(
         F.broadcast(dirty), [key_col, "window_start"], "left_semi"

@@ -22,10 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..kernel import ts_micros
-from .rollup import TIERS
-
-_TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
+from ..kernel import measurement, ts_micros
+from .rollup import tier_micros, tier_window
 
 __all__ = ["locf_grid", "interpolate_grid"]
 
@@ -35,22 +33,19 @@ def _per_window_grid(df, tier, key_col, ts_col, tiebreak_col, value, horizon):
     deterministic (ts, tiebreak) rank, plus the dense tier grid spanning
     each series' OBSERVED range (first to last observed window — the
     grid never extends past the data; gap-fill is not extrapolation)."""
-    step = _TIER_SECONDS[tier]
-    v_col = F.col(value) if isinstance(value, str) else value
-    if v_col is None:
-        v_col = F.length(F.col("text")).cast("double")
+    step = tier_micros(tier) // 10**6
     if horizon is not None:
         df = df.filter(F.col(ts_col).between(*horizon))
 
     # last observation per (series, window), ordered by (ts, tiebreak):
     # max_by over a deterministic composite rank — pure JVM aggregation.
     rank = F.struct(F.col(ts_col), F.col(tiebreak_col).cast("long"))
-    bucket = F.window(F.col(ts_col), TIERS[tier]).start
+    bucket = F.window(F.col(ts_col), tier_window(tier)).start
     per_window = (
         df.select(
             F.col(key_col),
             bucket.alias("grid_ts"),
-            v_col.alias("v"),
+            measurement(value).alias("v"),
             rank.alias("r"),
         )
         .groupBy(key_col, "grid_ts")

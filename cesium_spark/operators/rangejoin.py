@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_TIER_SECONDS = {"1m": 60, "1h": 3600, "1d": 86400}
+from ..kernel import ts_micros
+from .rollup import tier_micros
 
 __all__ = ["interval_join"]
 
@@ -36,30 +37,24 @@ def interval_join(
     columns except the key (half-open end, the tier-window convention).
     Degenerate intervals (end <= start) are empty under half-open
     semantics and match no points."""
-    step = _TIER_SECONDS[tier]
-    p_bucket = F.date_trunc(
-        {"1m": "minute", "1h": "hour", "1d": "day"}[tier], F.col(ts_col)
-    )
-    i_start = F.date_trunc(
-        {"1m": "minute", "1h": "hour", "1d": "day"}[tier], F.col(start_col)
-    )
+    width = F.lit(tier_micros(tier))
+
+    def bucket(us):
+        # floor(us / width) in integers: the index of the tier window
+        return ((us - F.pmod(us, width)) / width).cast("long")
+
+    p_bucket = bucket(ts_micros(F.col(ts_col)))
+    i_start = bucket(ts_micros(F.col(start_col)))
     # buckets the interval overlaps: sequence is inclusive, and end is
     # exclusive, so stop at the bucket containing (end - 1us)
-    i_stop = F.date_trunc(
-        {"1m": "minute", "1h": "hour", "1d": "day"}[tier],
-        F.col(end_col) - F.expr("INTERVAL 1 MICROSECOND"),
-    )
+    i_stop = bucket(ts_micros(F.col(end_col)) - 1)
     # degenerate intervals (end <= start) contain no point under the
-    # half-open semantics — drop them up front, both because that is the
-    # correct result and because F.sequence(start, stop, +step) raises at
-    # runtime when stop < start (one empty interval row would otherwise
-    # crash the whole job)
+    # half-open semantics — drop them up front, so that sequence() never
+    # counts down over buckets the interval does not overlap
     intervals = intervals.filter(F.col(end_col) > F.col(start_col))
     ivl = intervals.select(
         F.col(key_col).alias("_k"),
-        F.explode(
-            F.sequence(i_start, i_stop, F.expr(f"INTERVAL {step} SECONDS"))
-        ).alias("_bucket"),
+        F.explode(F.sequence(i_start, i_stop)).alias("_bucket"),
         *[F.col(c) for c in intervals.columns if c != key_col],
     )
     pts = points.select(

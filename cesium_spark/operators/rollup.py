@@ -17,7 +17,9 @@ mergeable feature subset.
 
 Tier semantics: window_start = floor(event-time) to the tier width,
 epoch-aligned as ``F.window``, so Iceberg/parquet partition pruning on ts
-still applies upstream.
+still applies upstream. A tier is a name in TIERS or a window string such
+as "15 minutes" whose width divides 24 hours; `tier_micros` is the one
+parser every tiered operator goes through.
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from ..kernel import (
     SECONDS_PER_DAY, kernel_columns, make_batch_kernel, map_sorted_groups,
-    ts_micros,
+    measurement, ts_micros,
 )
 
 TIERS = {"1m": "1 minute", "1h": "1 hour", "1d": "1 day"}
@@ -47,7 +49,8 @@ MERGEABLE_FEATS = {
 }
 
 __all__ = ["TIERS", "MERGEABLE_FEATS", "rollup_kernel", "rollup_sql",
-           "rollup_tiers", "tier_micros", "rollup_hop", "rollup_grouping_sets"]
+           "rollup_tiers", "tier_micros", "tier_window", "rollup_hop",
+           "rollup_grouping_sets"]
 
 
 def rollup_kernel(
@@ -81,10 +84,8 @@ def rollup_sql(
     Matches the kernel definitions: std is population (np.std ddof=0),
     total_time/avgt are in days of the bit-deterministic time axis.
     """
-    window = TIERS.get(tier, tier)
-    m_col = F.col(m) if isinstance(m, str) else m
-    if m_col is None:
-        m_col = F.length(F.col("text")).cast("double")
+    window = tier_window(tier)
+    m_col = measurement(m)
     t_days = ts_micros(F.col(ts_col)).cast("double") / F.lit(SECONDS_PER_DAY * 1e6)
     return (
         df.select(
@@ -113,19 +114,29 @@ def tier_micros(tier: str) -> int:
 
     Raises ValueError unless the width divides a day: only then does every
     window nest in one UTC day, which the day-bucket units of
-    ``jobs.run_rollup`` and the one-pass `rollup_tiers` both rely on.
+    ``jobs.run_rollup``, the one-pass `rollup_tiers` and the state cascade
+    of ``aggstate.rollup_states`` all rely on.
     """
     window = TIERS.get(tier, tier)
     try:
         n, unit = window.split()
         width = int(n) * _UNIT_MICROS[unit.lower().rstrip("s")]
     except (ValueError, KeyError):
-        raise ValueError(f"cannot parse tier window {window!r}") from None
+        raise ValueError(
+            f"unknown tier {tier!r}: expected one of {sorted(TIERS)} or a "
+            "window string such as '15 minutes'") from None
     if width <= 0 or DAY_MICROS % width:
         raise ValueError(
             f"tier window {window!r} does not divide 24 hours, so its windows "
             "would cross midnight")
     return width
+
+
+def tier_window(tier: str) -> str:
+    """The ``F.window`` duration string of a tier, validated by
+    `tier_micros`."""
+    tier_micros(tier)
+    return TIERS.get(tier, tier)
 
 
 def rollup_tiers(

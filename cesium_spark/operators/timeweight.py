@@ -23,8 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..kernel import ts_micros
-from .rollup import TIERS
+from ..kernel import measurement, ts_micros
+from .rollup import tier_window
 
 __all__ = ["time_weighted_avg"]
 
@@ -40,17 +40,13 @@ def time_weighted_avg(
     """(key, window_start, twa, n_points): LOCF-time-weighted mean of
     `value` per tier window (see module docstring for the exact
     semantics)."""
-    v_col = F.col(value) if isinstance(value, str) else value
-    if v_col is None:
-        v_col = F.length(F.col("text")).cast("double")
-
-    bucket = F.window(F.col(ts_col), TIERS[tier]).start
+    bucket = F.window(F.col(ts_col), tier_window(tier)).start
     rows = df.select(
         F.col(key_col),
         bucket.alias("window_start"),
         ts_micros(F.col(ts_col)).alias("t_us"),
         F.col(tiebreak_col).cast("long").alias("tb"),
-        v_col.alias("v"),
+        measurement(value).alias("v"),
     )
     w = Window.partitionBy(key_col, "window_start").orderBy("t_us", "tb")
     held = rows.select(

@@ -4,12 +4,13 @@ batch-incremental path (operators/incremental.py + lineage checkpoints)
 stays the primary ingestion mode; most heads here are the live twin of
 a batch operator and are tested against it. Three families:
 
-  - Windowed aggregates (`streaming_partial_states`,
-    `streaming_session_window`): their state is Spark's own streaming
-    state, evicted by the watermark. Only mergeable aggregates run here;
-    non-mergeable features come from the batch kernel over closed
-    windows downstream (the `complete/dirty` flag pattern from SURVEY.md
-    §7 risk 4).
+  - Windowed aggregates (`streaming_session_window`; the partial states
+    of the rollup cascade are ``aggstate.partial_states`` itself, run on
+    ``stream.withWatermark(ts, delay)``): their state is Spark's own
+    streaming state, evicted by the watermark. Only mergeable aggregates
+    run here; non-mergeable features come from the batch kernel over
+    closed windows downstream (the `complete/dirty` flag pattern from
+    SURVEY.md §7 risk 4).
   - Keyed-state heads: one carried state tuple per key, folded over each
     micro-batch by `applyInPandasWithState`. All eleven go through the
     one frame `_keyed_state_head` and supply only a narrow projection,
@@ -34,10 +35,10 @@ from pyspark.sql.types import (
     StructField, StructType, TimestampType,
 )
 
-from ..kernel import SECONDS_PER_DAY, ts_micros
+from ..kernel import ts_micros
 
 __all__ = [
-    "streaming_partial_states", "span_dedup_batch_fn",
+    "span_dedup_batch_fn",
     "minhash_dedup_batch_fn", "ivf_index_batch_fn",
     "start_ivf_index_stream", "streaming_run_stats", "streaming_psi",
     "contamination_batch_fn",
@@ -51,85 +52,6 @@ __all__ = [
     "m4_batch_fn", "m4_state",
     "grid_batch_fn", "grid_state",
 ]
-
-
-def streaming_partial_states(
-    stream_df: DataFrame,
-    tier: str = "1m",
-    key_col: str = "conv_id",
-    ts_col: str = "ts",
-    tiebreak_col: str = "turn_idx",
-    m=None,
-    e=None,
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Streaming MERGEABLE STATE rows (operators/aggstate.STATE_COLS
-    schema) per (series, tier window) — the streaming head of the
-    continuous-aggregate cascade: the finest tier materializes from the
-    stream, and the coarser tiers roll up from these states batch-side
-    (rollup_states) without ever touching raw rows again. Every
-    aggregate here is algebraic (sums / extrema / max_by), so Spark's
-    streaming state store IS the partial-state algebra."""
-    from ..kernel import DEFAULT_ERROR_VALUE
-    from ..operators.aggstate import STATE_COLS
-    from ..operators.rollup import TIERS
-
-    m_col = F.col(m) if isinstance(m, str) else m
-    if m_col is None:
-        m_col = F.length(F.col("text")).cast("double")
-    e_col = F.col(e) if isinstance(e, str) else e
-    if e_col is None:
-        e_col = F.lit(DEFAULT_ERROR_VALUE).cast("double")
-    t_days = ts_micros(F.col(ts_col)).cast("double") / F.lit(SECONDS_PER_DAY * 1e6)
-    window = TIERS.get(tier, tier)
-    # normalize to the TIERS key so the metadata stamp (and with it
-    # rollup_states' non-coarser-tier guard) applies whether the caller
-    # passed the key ("1m") or the window string ("1 minute")
-    tier_key = (
-        tier
-        if tier in TIERS
-        else next((k for k, v in TIERS.items() if v == tier), None)
-    )
-
-    w = 1.0 / (e_col * e_col)
-    rank = F.struct(
-        ts_micros(F.col(ts_col)).alias("us"),
-        F.col(tiebreak_col).cast("long").alias("idx"),
-    )
-    mv = m_col
-    return (
-        stream_df.withWatermark(ts_col, watermark)
-        .groupBy(F.col(key_col), F.window(F.col(ts_col), window).alias("w"))
-        .agg(
-            F.count("*").alias("n"),
-            F.sum(mv).alias("s1"),
-            F.sum(F.pow(mv, 2)).alias("s2"),
-            F.sum(F.pow(mv, 3)).alias("s3"),
-            F.sum(F.pow(mv, 4)).alias("s4"),
-            F.min(mv).alias("vmin"),
-            F.max(mv).alias("vmax"),
-            F.sum(w).alias("w_sum"),
-            F.sum(w * mv).alias("wx_sum"),
-            F.sum(w * mv * mv).alias("wx2_sum"),
-            F.min(t_days).alias("t_min"),
-            F.max(t_days).alias("t_max"),
-            F.sum(t_days).alias("t_sum"),
-            F.max(ts_micros(F.col(ts_col))).alias("last_rank_us"),
-            F.max_by(F.col(tiebreak_col).cast("long"), rank).alias("last_rank_idx"),
-            F.max_by(mv, rank).alias("last_value"),
-        )
-        .select(
-            F.col(key_col),
-            # tier metadata rides along exactly like batch partial_states
-            # stamps it, so rollup_states' coarser-tier validation guards
-            # the streaming cascade too (when tier is a known key)
-            F.col("w.start").alias(
-                "window_start",
-                metadata={"tier": tier_key} if tier_key is not None else {},
-            ),
-            *[F.col(c) for c in STATE_COLS],
-        )
-    )
 
 
 def _bucket(col, n_buckets: int):

@@ -347,6 +347,31 @@ def test_run_rollup_late_rows_on_an_empty_day_keep_calendar_buckets(spark, tmp_p
     assert sorted(got["bucket"].astype(str).unique()) == ["20250201", "20250208"]
 
 
+def test_run_rollup_refuses_resume_with_other_bucket_days(spark, tmp_path):
+    """Bucket keys depend on bucket_days, so a run with another value over
+    committed units would write new bucket partitions beside the old ones
+    (duplicate windows): it raises, naming both values, before writing."""
+    import os
+
+    from cesium_spark.jobs import run_rollup
+
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    spark.createDataFrame(_retention_fixture_rows(range(14), per_day=1)).write.parquet(inp)
+    kw = dict(tiers=("1d",), features=["n_epochs"], verbose=False)
+    run_rollup(spark, inp, out, bucket_days=7, **kw)
+
+    def tree():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), out), os.path.getsize(os.path.join(d, f)),
+             os.path.getmtime(os.path.join(d, f)))
+            for d, _, fs in os.walk(out) for f in fs)
+
+    before = tree()
+    with pytest.raises(ValueError, match=r"bucket_days=7.*bucket_days=3"):
+        run_rollup(spark, inp, out, resume=True, bucket_days=3, **kw)
+    assert tree() == before
+
+
 def test_rollup_job_main_leaves_the_caller_session_running(spark, tmp_path):
     """jobs/rollup_job.py end to end under a caller's session: main()
     writes the tier output and leaves the session running (only the
@@ -420,6 +445,62 @@ def _retention_fixture_rows(days, per_day=10, start="2025-02-01"):
                          pd.Timestamp(start) + pd.Timedelta(days=d, minutes=i)))
     return pd.DataFrame(
         rows, columns=["conv_id", "turn_idx", "role", "text", "tool", "ts"])
+
+
+def _tiered_ops():
+    """Every operator that takes a tier, as (name, call(df, tier))."""
+    import datetime as dt
+
+    from cesium_spark.jobs import bucket_rollup
+    from cesium_spark.operators.aggstate import rollup_states
+    from cesium_spark.operators.compress import compress_blocks
+    from cesium_spark.operators.downsample import ohlc_downsample
+    from cesium_spark.operators.incremental import affected_windows
+    from cesium_spark.operators.locf import interpolate_grid
+    from cesium_spark.operators.rangejoin import interval_join
+    from cesium_spark.operators.rollup import rollup_sql, rollup_tiers
+    from cesium_spark.operators.salt import skew_resistant_states
+    from cesium_spark.operators.timeweight import time_weighted_avg
+
+    feats = ["n_epochs"]
+
+    def intervals(df):
+        return df.select("conv_id", F.col("ts").alias("start"),
+                         (F.col("ts") + F.expr("INTERVAL 1 HOUR")).alias("end"))
+
+    return [
+        ("rollup_kernel", lambda df, t: rollup_kernel(df, feats, t)),
+        ("rollup_tiers", lambda df, t: rollup_tiers(df, feats, ["1h", t])),
+        ("bucket_rollup", lambda df, t: bucket_rollup(
+            df, [dt.datetime(2025, 2, 1)], 10, [t], feats)),
+        ("rollup_sql", lambda df, t: rollup_sql(df, t)),
+        ("partial_states", lambda df, t: partial_states(df, t)),
+        ("rollup_states", lambda df, t: rollup_states(partial_states(df, "1m"), t)),
+        ("skew_resistant_states", lambda df, t: skew_resistant_states(df, tier=t)),
+        ("locf_grid", lambda df, t: locf_grid(df, t)),
+        ("interpolate_grid", lambda df, t: interpolate_grid(df, t)),
+        ("time_weighted_avg", lambda df, t: time_weighted_avg(df, t)),
+        ("ohlc_downsample", lambda df, t: ohlc_downsample(df, t)),
+        ("compress_blocks", lambda df, t: compress_blocks(df, t)),
+        ("affected_windows", lambda df, t: affected_windows(df, t)),
+        ("incremental_rollup", lambda df, t: incremental_rollup(
+            rollup_kernel(df, feats, "1h"), df, df, feats, t)),
+        ("interval_join", lambda df, t: interval_join(df, intervals(df), tier=t)),
+    ]
+
+
+@pytest.mark.parametrize("name", [n for n, _ in _tiered_ops()])
+def test_every_tiered_operator_keeps_one_tier_contract(spark, name):
+    """One tier contract for every operator that takes a tier: a TIERS
+    name or a window string whose width divides 24 hours. Plans only —
+    "15 minutes" is accepted, while "7 minutes" (1440/7) and "7m" (no
+    such name) raise ValueError when the operator is called."""
+    call = dict(_tiered_ops())[name]
+    df = spark.createDataFrame(_retention_fixture_rows([0], per_day=3))
+    assert call(df, "15 minutes").columns
+    for bad in ("7 minutes", "7m"):
+        with pytest.raises(ValueError, match="divide 24 hours|unknown tier"):
+            call(df, bad)
 
 
 def test_retention_blocks_late_rows_in_committed_day(spark, tmp_path):

@@ -69,6 +69,44 @@ def test_fastpath_matches_pergroup_any_layout(sizes, seed):
             ), (gi, s, f, got, w, seed)
 
 
+@settings(max_examples=200, deadline=None)
+@given(
+    st.lists(
+        st.lists(st.tuples(st.integers(0, 6), st.integers(0, 4)),
+                 min_size=1, max_size=29),
+        min_size=1, max_size=6,
+    )
+)
+def test_fastpath_order_statistics_on_tied_times(groups):
+    """Times on a coarse grid (ties, so zero cadences and 0/0 step
+    ratios) and repeated values: every order-statistic feature of the
+    fast path has NaN exactly where `compute_features` has it, and is
+    equal elsewhere: infinities exactly, finite values to the tolerance
+    of `test_fastpath_matches_pergroup_any_layout` (the middle of two
+    step ratios near -1 and 1 cancels to a few ulps of 1)."""
+    feats = ["median", "median_absolute_deviation", "cads_med",
+             "med_double_to_single_step", "percent_amplitude"]
+    starts, off, ts, ms = [], 0, [], []
+    for g in groups:
+        pts = sorted(g)
+        starts.append(off)
+        ts.append(np.array([p[0] / 10 for p in pts]))
+        ms.append(np.array([float(p[1]) for p in pts]))
+        off += len(pts)
+    t, m = np.concatenate(ts), np.concatenate(ms)
+    e = np.full(len(t), 1e-4)
+    res = segmented_features(t, m, e, np.array(starts), feats)
+    for gi, s in enumerate(starts):
+        sl = slice(s, s + len(groups[gi]))
+        want = compute_features(t[sl], m[sl], e[sl], feats)
+        for f in feats:
+            got, w = res[f][gi], want[f]
+            assert math.isnan(got) == math.isnan(w), (gi, f, got, w, t[sl])
+            if not math.isnan(w):
+                assert got == w or np.isclose(got, w, rtol=1e-8, atol=1e-10), (
+                    gi, f, got, w, t[sl])
+
+
 @given(
     gaps=st.lists(st.integers(min_value=1, max_value=120), min_size=1, max_size=30),
 )

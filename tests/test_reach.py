@@ -70,9 +70,6 @@ def _unreached():
 
 # Reached only by tests, and kept on purpose.
 KEPT_FUNCTIONS = {
-    # the north star's streamed continuous aggregate: the streaming head
-    # of the partial-state cascade that rollup_states rolls up batch-side
-    "cesium_spark.streaming.stream.streaming_partial_states",
     # the full-corpus span index the streamed span head must equal
     "cesium_spark.operators.dedup.span_index_rows",
     # the text-input SimHash the JVM-tokenized path is checked against
@@ -166,3 +163,97 @@ def test_only_the_kept_modules_are_unreached():
 
 def test_only_the_kept_functions_are_unreached():
     assert _unreached_functions() == KEPT_FUNCTIONS
+
+
+# One owner per rollup decision: the tier grid (operators/rollup.py), the
+# default measurement channel (kernel.py) and the partial-state aggregate
+# (operators/aggstate.py).
+TIER_NAMES = {"1m", "1h", "1d", "1 minute", "1 hour", "1 day"}
+UNITS = {"second", "minute", "hour", "day"}
+
+
+def _parsed_modules():
+    for mod, path in sorted(_package_modules().items()):
+        with open(path) as f:
+            yield mod, ast.parse(f.read(), path)
+
+
+def _code_nodes(tree):
+    """Every node of `tree` but its docstrings and its parameter
+    defaults (a default tier chooses a tier, it does not define one)."""
+    skip = set()
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                             ast.AsyncFunctionDef)) and ast.get_docstring(node) is not None:
+            skip.add(id(node.body[0]))
+        if isinstance(node, ast.arguments):
+            skip.update(id(d) for d in (*node.defaults, *node.kw_defaults) if d is not None)
+    todo = [tree]
+    while todo:
+        node = todo.pop()
+        if id(node) in skip:
+            continue
+        yield node
+        todo.extend(ast.iter_child_nodes(node))
+
+
+def _const(node):
+    return node.value if isinstance(node, ast.Constant) else None
+
+
+def test_only_rollup_spells_the_tier_grid():
+    """No module but operators/rollup.py spells a tier name, keys a map by
+    tier or by time unit, or reads TIERS; nothing defines _TIER_SECONDS."""
+    found = []
+    for mod, tree in _parsed_modules():
+        for node in _code_nodes(tree):
+            name = node.id if isinstance(node, ast.Name) else (
+                node.attr if isinstance(node, ast.Attribute) else (
+                    node.name if isinstance(node, ast.alias) else None))
+            if name == "_TIER_SECONDS":
+                found.append((mod, name))
+            if mod == "cesium_spark.operators.rollup":
+                continue
+            if name == "TIERS" or _const(node) in TIER_NAMES:
+                found.append((mod, name or _const(node)))
+            if isinstance(node, ast.Dict) and any(
+                    _const(k) in TIER_NAMES | UNITS for k in node.keys if k is not None):
+                found.append((mod, "dict keyed by tier or unit"))
+    assert found == []
+
+
+def test_only_the_kernel_spells_the_default_measurement():
+    """``length(text)``, the default channel, is spelled in kernel.py only
+    (``kernel.measurement``)."""
+    found = []
+    for mod, tree in _parsed_modules():
+        if mod == "cesium_spark.kernel":
+            continue
+        for node in _code_nodes(tree):
+            if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "length":
+                arg = node.args[0] if node.args else None
+                if _const(arg) == "text" or (
+                        isinstance(arg, ast.Call) and arg.args and _const(arg.args[0]) == "text"):
+                    found.append((mod, node.lineno))
+    assert found == []
+
+
+def test_stream_builds_no_partial_state_aggregate():
+    """The streamed partial states are aggstate.partial_states on a
+    watermarked stream: stream.py aggregates no copy of STATE_COLS."""
+    with open(os.path.join(ROOT, "cesium_spark", "operators", "aggstate.py")) as f:
+        tree = ast.parse(f.read())
+    state_cols = next(
+        set(ast.literal_eval(n.value)) for n in tree.body
+        if isinstance(n, ast.Assign) and getattr(n.targets[0], "id", None) == "STATE_COLS")
+    with open(os.path.join(ROOT, "cesium_spark", "streaming", "stream.py")) as f:
+        tree = ast.parse(f.read())
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call) and getattr(node.func, "attr", None) == "agg":
+            aliases = {
+                _const(c.args[0]) for c in ast.walk(node)
+                if isinstance(c, ast.Call) and getattr(c.func, "attr", None) == "alias" and c.args}
+            if len(aliases & state_cols) > 2:
+                found.append(node.lineno)
+    assert found == []

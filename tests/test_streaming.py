@@ -86,7 +86,6 @@ def test_streaming_states_feed_batch_cascade(spark, tmp_path):
     from cesium_spark.operators.aggstate import (
         finalize_states, partial_states, rollup_states)
     from cesium_spark.sources.transcripts import TRANSCRIPT_SCHEMA
-    from cesium_spark.streaming.stream import streaming_partial_states
 
     df = generate_transcripts(spark, n_convs=4, seed=23).cache()
     in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
@@ -106,7 +105,7 @@ def test_streaming_states_feed_batch_cascade(spark, tmp_path):
 
     src = spark.readStream.schema(TRANSCRIPT_SCHEMA).parquet(in_dir)
     q = (
-        streaming_partial_states(src, tier="1m")
+        partial_states(src.withWatermark("ts", "2 hours"), "1m")
         .writeStream.outputMode("append").format("parquet")
         .option("path", out_dir).option("checkpointLocation", ckpt)
         .trigger(availableNow=True).start()
